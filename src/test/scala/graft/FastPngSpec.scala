@@ -73,4 +73,22 @@ class FastPngSpec extends AnyFunSuite {
     for (y <- 0 until h; x <- 0 until w)
       assert(a.getRaster.getSample(x, y, 0) == b.getRaster.getSample(x, y, 0))
   }
+
+  test("incompressible pixels take the grow path and still decode pixel-identical") {
+    // random samples: BEST_SPEED deflate falls back to stored blocks
+    // (5 header bytes per block), so the stream outgrows the first
+    // buffer's 64 spare bytes and the encoder re-deflates into a
+    // growable one
+    val (w, h) = (512, 512)
+    val px = new Array[Byte](w * h)
+    new scala.util.Random(7L).nextBytes(px)
+    val png = graft.functions.FastPng.encodeGray(w, h, px)
+    // signature + IHDR chunk + IDAT framing + IEND chunk = 57 bytes
+    val idat = png.length - 57
+    assert(idat > (w + 1) * h + 64, s"IDAT of $idat bytes fit the first buffer: grow path not taken")
+    val img = decode(png)
+    assert(img.getWidth == w && img.getHeight == h)
+    for (y <- 0 until h; x <- 0 until w)
+      assert(img.getRaster.getSample(x, y, 0) == (px(y * w + x) & 0xff), s"pixel ($x,$y)")
+  }
 }

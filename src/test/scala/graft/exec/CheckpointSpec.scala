@@ -124,6 +124,75 @@ class CheckpointSpec extends SparkSpec {
     assert(ckpt.isComplete(spark, "s", "snap-1"))
   }
 
+  test("KG stages commit flat, sorted, zstd tables that read back in sidecar order") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("graft-ckpt-layout").toString
+    val ckpt = Checkpoint(root, runId = "run-l")
+    val (t, e) = Pipeline.runCheckpointed(spark, FixtureCorpus.corpus(spark, 20, 4), ckpt,
+      Checkpoint.snapshotId("fixture", 20))
+    assert(t.count() > 0 && e.count() > 0)
+    // no partition column is appended last on read-back
+    assert(t.columns.toSeq == Seq("docId", "subj", "pred", "obj"))
+    assert(e.columns.toSeq == Seq("kind", "name", "entityId"))
+
+    def under(dir: String): Seq[java.nio.file.Path] = {
+      val s = Files.walk(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.toList finally s.close()
+    }
+    val dirs = under(root).filter(Files.isDirectory(_)).map(_.getFileName.toString)
+    assert(!dirs.exists(d => d.startsWith("pred=") || d.startsWith("kind=")), dirs)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    def dataFiles(stage: String) = under(s"$root/$stage/data")
+      .filter(p => p.getFileName.toString.startsWith("part-") && p.toString.endsWith(".parquet"))
+    Seq("ingest", "records", "triples", "entities").foreach { st =>
+      val fs = dataFiles(st)
+      assert(fs.nonEmpty, st)
+      fs.foreach { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+        val codecs = try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+          finally r.close()
+        assert(codecs.nonEmpty && codecs.forall(
+          _ == org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD), s"$f: $codecs")
+      }
+    }
+    // one file per write task: lineage has one row per task with rows
+    assert(dataFiles("triples").size <= ckpt.lineage(spark, "triples").count())
+
+    // rows sorted inside each file, in Spark's (unsigned UTF-8 byte) order
+    def sortedWithin(stage: String, cols: String*): Unit = dataFiles(stage).foreach { f =>
+      val keys = spark.read.parquet(f.toString).select(cols.head, cols.tail: _*).collect()
+        .map(r => cols.indices.map(i => Option(r.getString(i)).getOrElse("").getBytes("UTF-8")))
+      def le(a: Seq[Array[Byte]], b: Seq[Array[Byte]]): Boolean =
+        a.zip(b).map { case (x, y) => java.util.Arrays.compareUnsigned(x, y) }
+          .find(_ != 0).forall(_ < 0)
+      assert(keys.zip(keys.drop(1)).forall { case (a, b) => le(a, b) }, s"$f not sorted by $cols")
+    }
+    sortedWithin("triples", "pred", "subj", "obj", "docId")
+    sortedWithin("entities", "kind", "name")
+  }
+
+  test("a failing stage write leaves no cached entry behind") {
+    val root = Files.createTempDirectory("graft-ckpt-fail").toString
+    val ckpt = Checkpoint(root, runId = "run-f")
+    val before = org.apache.spark.sql.CacheProbe.entries(spark)
+    val boom = org.apache.spark.sql.functions.udf { (v: Long) =>
+      if (v == 5L) throw new IllegalStateException("boom in stage write")
+      v
+    }
+    val err = intercept[Exception] {
+      ckpt.stage(spark, "s", "snap-1") {
+        spark.range(0, 8, 1, 2).select(boom(org.apache.spark.sql.functions.col("id")).as("v"))
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom in stage write")), err)
+    assert(org.apache.spark.sql.CacheProbe.entries(spark) <= before, "failed stage output stayed cached")
+    assert(!ckpt.isComplete(spark, "s", "snap-1"))
+  }
+
   test("salted join rejects build-duplicating outer join types") {
     import spark.implicits._
     val big = Seq(("a", 1)).toDF("k", "v")
