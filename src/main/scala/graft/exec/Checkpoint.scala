@@ -13,12 +13,40 @@ import java.nio.charset.StandardCharsets
   * (aps_extractor.py:52-66): each stage writes
   *   <root>/<stage>/data      parquet, zstd, one file per write task
   *   <root>/<stage>/lineage   (runId, stage, snapshotId, partitionId,
-  *                             rowCount, wallMs) one row per partition
+  *                             rowCount, wallMs) one row per partition,
+  *                             one file once AQE coalesces the groupBy
   *   <root>/<stage>/_SCHEMA.json       the stage's schema (column order)
-  *   <root>/<stage>/_SUCCESS_SNAPSHOT  the snapshot id the data is for
-  * A stage recomputes only when its recorded snapshot id differs from the
-  * current input snapshot id; otherwise the data table is read back and
-  * the upstream plan is skipped entirely.
+  *   <root>/<stage>/_SUCCESS_SNAPSHOT  the commit marker:
+  *                                     `<snapshotId>@<version>` and
+  *                                     `rows=<N>` on two lines
+  * A stage recomputes only when its marker does not name the current
+  * input snapshot id; otherwise the data table is read back and the
+  * upstream plan is skipped entirely.
+  *
+  * Commit protocol ([[stage]]), in this order:
+  *   1. drop the marker — from here on the stage reads as not committed;
+  *   2. overwrite `data/`;
+  *   3. overwrite `lineage/`; its write tallies the row total;
+  *   4. write `_SCHEMA.json`;
+  *   5. write the marker with the row total.
+  * A write that fails, or a process killed at any step before 5, leaves
+  * no marker, and the next [[stage]] call recomputes. It never serves an
+  * old marker over a half-rewritten `data/`.
+  *
+  * What a reader may rely on: with one writer per root, a stage for
+  * which [[isComplete]] holds (equivalently, [[committedRowsFor]] is
+  * Some(N)) has its data, lineage and schema sidecar from ONE finished
+  * commit of that snapshot under this pipeline version, and `data/`
+  * holds exactly N rows. Torn markers and markers written before the
+  * rows line read as not committed and rebuild through the same path.
+  *
+  * Two writers on one root are NOT made safe: one writer can publish
+  * its marker while the other is rewriting `data/`. Versioned data
+  * directories would close that, but would move the fixed
+  * `<stage>/data` path that readers outside this class address. The
+  * guard there is the row check: a caller that knows a stage's size
+  * passes `expectedRows`, and a committed count that disagrees rebuilds
+  * once, then fails loudly.
   *
   * Layout: rows are written in the order `compute` leaves them, so a
   * caller that wants a column to prune by orders rows inside `compute`
@@ -66,51 +94,6 @@ final case class Checkpoint(root: String, runId: String,
     finally out.close()
   }
 
-  // First marker line only: rows=N (when present) trails on line 2.
-  // nextOption: a torn writeSmall can leave a 0-byte marker — that must
-  // read as "no completed snapshot" (stage rebuilds and rewrites the
-  // marker), not crash every later stage() call on this stage.
-  def completedSnapshot(spark: SparkSession, stage: String): Option[String] =
-    readSmall(spark, marker(stage)).flatMap(_.linesIterator.nextOption()).map(_.trim)
-
-  /** Row count recorded in the stage marker at commit time — lets a
-    * reader validate a shared-root stage table against its committed
-    * size WITHOUT scanning the data (the s04 read-back `count()` this
-    * replaces was an O(N) job taxing every probe query). None for
-    * markers written before the rows line existed AND for malformed /
-    * torn rows lines (both mean "unvalidatable" — the reader
-    * invalidates and rebuilds once, which rewrites a clean marker).
-    */
-  def committedRowCount(spark: SparkSession, stage: String): Option[Long] =
-    committedMarker(spark, stage).flatMap(_._2)
-
-  /** ONE atomic parse of the stage marker: (snapshot line, rows). The
-    * rows count is only meaningful paired with the snapshot it was
-    * committed under — on a shared unlocked root, reading them through
-    * two separate calls lets a concurrent writer swap the marker
-    * in between, so a rows check could pass against a DIFFERENT
-    * snapshot's data. Validating readers go through
-    * [[committedRowsFor]], which checks both from this single read.
-    */
-  def committedMarker(spark: SparkSession, stage: String): Option[(String, Option[Long])] =
-    readSmall(spark, marker(stage)).map { content =>
-      val lines = content.linesIterator.toSeq
-      (lines.headOption.map(_.trim).getOrElse(""),
-        lines.find(_.startsWith("rows="))
-          .flatMap(l => scala.util.Try(l.stripPrefix("rows=").trim.toLong).toOption))
-    }
-
-  /** Rows recorded for `stage` IFF the marker's snapshot line matches
-    * `snapshotId` under the current pipeline version — None when the
-    * marker is absent, torn, for another snapshot, or predates the
-    * rows line. Single marker read (see [[committedMarker]]).
-    */
-  def committedRowsFor(spark: SparkSession, stage: String, snapshotId: String): Option[Long] =
-    committedMarker(spark, stage) match {
-      case Some((snapLine, rows)) if snapLine == markerContent(snapshotId) => rows
-      case _ => None
-    }
-
   // The marker records snapshot AND pipeline version: a checkpoint root
   // written by an older code revision must NOT resume as complete (it
   // would silently serve a stale triple set + outdated _SCHEMA.json —
@@ -119,13 +102,30 @@ final case class Checkpoint(root: String, runId: String,
   // schema change.
   private def markerContent(snapshotId: String) = s"$snapshotId@$version"
 
+  /** Rows committed for `stage` under `snapshotId` and this pipeline
+    * version, from ONE read of the marker: Some(N) iff its first line is
+    * `snapshotId@version` and its second `rows=N`. None when the marker
+    * is absent, torn, for another snapshot or version, or predates the
+    * rows line. One read matters on a shared root: reading the snapshot
+    * and the rows through two calls lets a concurrent writer swap the
+    * marker in between, so a rows check could pass against a DIFFERENT
+    * snapshot's data.
+    */
+  def committedRowsFor(spark: SparkSession, stage: String, snapshotId: String): Option[Long] =
+    readSmall(spark, marker(stage)).flatMap { content =>
+      content.linesIterator.map(_.trim).toList match {
+        case snap :: rows :: _ if snap == markerContent(snapshotId) && rows.startsWith("rows=") =>
+          rows.stripPrefix("rows=").toLongOption
+        case _ => None
+      }
+    }
+
   def isComplete(spark: SparkSession, stage: String, snapshotId: String): Boolean =
-    completedSnapshot(spark, stage).contains(markerContent(snapshotId))
+    committedRowsFor(spark, stage, snapshotId).nonEmpty
 
   /** Drop a stage's completion marker so the next stage() call
     * recomputes — the escape hatch for a reader that detects a corrupt
-    * or short stage table (e.g. a concurrent-writer race on a shared
-    * root left a marker over partial data).
+    * or short stage table.
     */
   def invalidate(spark: SparkSession, stage: String): Unit = {
     val f = fs(spark)
@@ -136,52 +136,27 @@ final case class Checkpoint(root: String, runId: String,
   /** Run `compute` unless this (stage, snapshotId) already committed;
     * either way return the stage's data as a DataFrame read from the
     * checkpoint table (so downstream plans cut lineage here).
+    *
+    * `expectedRows`: the size the caller knows the stage must have. A
+    * committed count that differs (a torn overwrite or a second writer
+    * on a shared root) is rebuilt once; a rebuild that still differs
+    * fails with an IllegalArgumentException — something is actively
+    * corrupting the root, and serving a wrong table is worse.
     */
   def stage(spark: SparkSession, stageName: String, snapshotId: String,
-      partitionByCols: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
-    if (!isComplete(spark, stageName, snapshotId)) {
-      val t0 = System.nanoTime()
-      val df = compute
-      // Per-partition lineage rows collected on executors during the write
-      // pass (one extra column, dropped from the data table).
-      val withPart = df.withColumn("__pid", spark_partition_id())
-      withPart.persist()
-      // finally: a failing write must not leave the whole stage output
-      // registered in the session's CacheManager
-      val totalRows = try {
-        val writer = withPart.drop("__pid").write.mode("overwrite")
-          .option("compression", Checkpoint.Codec)
-        (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
-          .parquet(s"${stageDir(stageName)}/data")
-        val wallMs = (System.nanoTime() - t0) / 1000000
-        // North-rule lineage shape: when the stage data carries provenance
-        // columns, record the per-partition input files and content hashes
-        // alongside the row count.
-        val provenanceAggs =
-          (if (df.columns.contains("path"))
-            Seq(collect_list(col("path")).as("inputFiles")) else Nil) ++
-          (if (df.columns.contains("sha256"))
-            Seq(collect_list(col("sha256")).as("sha256s")) else Nil)
-        val lineage = withPart.groupBy(col("__pid").as("partitionId"))
-          .agg(count(lit(1)).as("rowCount"), provenanceAggs: _*)
-          .withColumn("runId", lit(runId))
-          .withColumn("stage", lit(stageName))
-          .withColumn("snapshotId", lit(snapshotId))
-          .withColumn("wallMs", lit(wallMs))
-        lineage.write.mode("overwrite").option("compression", Checkpoint.Codec)
-          .parquet(s"${stageDir(stageName)}/lineage")
-        // total rows from the cached frame (cheap — withPart is persisted);
-        // recorded on the marker's second line so index readers can
-        // validate a committed stage in O(1)
-        withPart.count()
-      } finally withPart.unpersist()
-      // schema sidecar BEFORE the marker: an empty partitioned stage
-      // writes no schema-bearing parquet file, so the read-back below
-      // (and in every resumed run) needs the recorded schema to avoid an
-      // inference failure
-      writeSmall(spark, schemaFile(stageName), df.schema.json)
-      writeSmall(spark, marker(stageName),
-        s"${markerContent(snapshotId)}\nrows=$totalRows")
+      partitionByCols: Seq[String] = Nil, expectedRows: Option[Long] = None)
+      (compute: => DataFrame): DataFrame = {
+    if (!isComplete(spark, stageName, snapshotId))
+      commit(spark, stageName, snapshotId, partitionByCols)(compute)
+    expectedRows.foreach { want =>
+      val got = committedRowsFor(spark, stageName, snapshotId)
+      if (!got.contains(want)) {
+        Checkpoint.log.warn(s"stage $stageName committed rows=$got, expected $want — rebuilding")
+        commit(spark, stageName, snapshotId, partitionByCols)(compute)
+        val after = committedRowsFor(spark, stageName, snapshotId)
+        require(after.contains(want),
+          s"stage $stageName still invalid after rebuild (committed=$after expected=$want)")
+      }
     }
     val reader = readSmall(spark, schemaFile(stageName))
       .map(j => spark.read.schema(DataType.fromJson(j).asInstanceOf[StructType]))
@@ -189,11 +164,66 @@ final case class Checkpoint(root: String, runId: String,
     reader.parquet(s"${stageDir(stageName)}/data")
   }
 
+  /** One commit (steps 1-5 of the class doc): three Spark jobs when
+    * `compute` has no shuffle of its own — the data write and the
+    * lineage groupBy's two.
+    */
+  private def commit(spark: SparkSession, stageName: String, snapshotId: String,
+      partitionByCols: Seq[String])(compute: => DataFrame): Unit = {
+    invalidate(spark, stageName)
+    val t0 = System.nanoTime()
+    val df = compute
+    // Per-partition lineage rows collected on executors during the write
+    // pass (one extra column, dropped from the data table).
+    val withPart = df.withColumn("__pid", spark_partition_id())
+    withPart.persist()
+    // The marker's row total is tallied from the lineage rows as they are
+    // written: the tally runs after the groupBy, in the lineage write's
+    // result stage, where Spark applies each successful task's update
+    // exactly once — no separate count job over the stage output.
+    val rows = spark.sparkContext.longAccumulator
+    val tally = udf { (n: Long) => rows.add(n); n }.asNondeterministic()
+    // finally: a failing write must not leave the whole stage output
+    // registered in the session's CacheManager
+    try {
+      val writer = withPart.drop("__pid").write.mode("overwrite")
+        .option("compression", Checkpoint.Codec)
+      (if (partitionByCols.nonEmpty) writer.partitionBy(partitionByCols: _*) else writer)
+        .parquet(s"${stageDir(stageName)}/data")
+      val wallMs = (System.nanoTime() - t0) / 1000000
+      // North-rule lineage shape: when the stage data carries provenance
+      // columns, record the per-partition input files and content hashes
+      // alongside the row count.
+      val provenanceAggs =
+        (if (df.columns.contains("path"))
+          Seq(collect_list(col("path")).as("inputFiles")) else Nil) ++
+        (if (df.columns.contains("sha256"))
+          Seq(collect_list(col("sha256")).as("sha256s")) else Nil)
+      val lineage = withPart.groupBy(col("__pid").as("partitionId"))
+        .agg(count(lit(1)).as("rowCount"), provenanceAggs: _*)
+        .withColumn("rowCount", tally(col("rowCount")))
+        .withColumn("runId", lit(runId))
+        .withColumn("stage", lit(stageName))
+        .withColumn("snapshotId", lit(snapshotId))
+        .withColumn("wallMs", lit(wallMs))
+      lineage.write.mode("overwrite").option("compression", Checkpoint.Codec)
+        .parquet(s"${stageDir(stageName)}/lineage")
+    } finally withPart.unpersist()
+    // schema sidecar BEFORE the marker: an empty partitioned stage
+    // writes no schema-bearing parquet file, so the read-back (here and
+    // in every resumed run) needs the recorded schema to avoid an
+    // inference failure
+    writeSmall(spark, schemaFile(stageName), df.schema.json)
+    writeSmall(spark, marker(stageName), s"${markerContent(snapshotId)}\nrows=${rows.sum}")
+  }
+
   def lineage(spark: SparkSession, stageName: String): DataFrame =
     spark.read.parquet(s"${stageDir(stageName)}/lineage")
 }
 
 object Checkpoint {
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[Checkpoint])
+
   /** Code/schema revision folded into every stage marker. Bump when any
     * stage's output semantics or schema change, so pre-upgrade
     * checkpoint roots recompute instead of resuming stale data.

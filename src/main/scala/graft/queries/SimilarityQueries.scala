@@ -306,16 +306,13 @@ object SimilarityQueries {
     * id-sum + sampled-content hash + recursive file-status listing), so
     * any rewrite of the documents table invalidates and rebuilds once.
     * The pair table is metadata-sized (near-dup pairs, not documents),
-    * so the steady-state read is trivially cheap; marker-gated via
-    * [[markedStage]] (expected rows are unknowable up front for a pair
-    * table, so the guard is "rows line present for THIS snapshot" —
-    * catching torn markers — rather than an exact-count compare).
+    * so the steady-state read is trivially cheap. No row check: expected
+    * rows are unknowable up front for a pair table.
     */
   private[graft] def verifiedNeardupPairs(s: SparkSession, dir: String): DataFrame = {
     implicit val sp = s
     val (_, snap) = docsSnapshot(dir)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd01_pairs_${dirTag(dir)}", snap) {
+    annIndex.stage(s, s"nd01_pairs_${dirTag(dir)}", snap) {
       computeNeardupPairs(s, dir)
     }
   }
@@ -414,8 +411,7 @@ object SimilarityQueries {
     */
   private[graft] def nd12IndexIsWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
     implicit val sp = s
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ck.committedRowsFor(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)).nonEmpty
+    annIndex.isComplete(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff))
   }
 
   /** The s12 incremental index: ONE persisted table of the OLD corpus's
@@ -439,8 +435,7 @@ object SimilarityQueries {
   private def nd12Bands(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)) {
+    annIndex.stage(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = bandedOf(old).withColumn("n_old",
@@ -587,8 +582,7 @@ object SimilarityQueries {
   private def nd13OldKeepers(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    markedStage(s, ck, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1") {
+    annIndex.stage(s, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1") {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = nd12Bands(s, dir, cutoff)
@@ -602,9 +596,7 @@ object SimilarityQueries {
     */
   private[graft] def nd13KeepersAreWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
     implicit val sp = s
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ck.committedRowsFor(s, s"nd13_keep_${dirTag(dir)}",
-      s"${nd12Snap(dir, cutoff)}-keepv1").nonEmpty
+    annIndex.isComplete(s, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1")
   }
 
   /** s13: INCREMENTAL dedup keeper — per-batch keeper assignments
@@ -856,14 +848,13 @@ object SimilarityQueries {
     val bits = lshBits(n)
     val planes = lshPlanes(7000, tables, bits, dim = 64)
     val snap = s"$snapBase-b$bits"
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
     // NOT spreadBuild (unlike s06's nd8): s04's probe side is 10 query
     // vectors — the warm-path work per index row is trivial, and a
     // multi-file layout measured ~2.5x WORSE (32 near-empty tasks of
     // pure scheduling overhead vs one cheap task). s06 keeps the spread
     // because its probe side is the whole corpus (~1M candidate pairs).
-    val idx = validatedStage(s, ck, s"lsh8_${dirTag(dir)}", snap,
-        expectedRows = n * tables) {
+    val idx = annIndex.stage(s, s"lsh8_${dirTag(dir)}", snap,
+        expectedRows = Some(n * tables)) {
       e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket")
@@ -916,79 +907,15 @@ object SimilarityQueries {
     if (df.rdd.getNumPartitions * 2 >= cores) df else df.repartition(cores)
   }
 
-  /** Root for persisted ANN index stages (overridable for tests). */
-  private def annIndexRoot: String =
+  /** The persisted ANN/dedup index stages, committed and row-checked by
+    * [[graft.exec.Checkpoint]] under one root (overridable for tests).
+    * The rows each index stage records on its marker are read in O(1),
+    * so a probe validates its index without the O(N) read-back
+    * `count()` the round-3 s04 paid on every query.
+    */
+  private lazy val annIndex = graft.exec.Checkpoint(
     sys.env.getOrElse("GRAFT_ANN_INDEX_ROOT",
-      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index")
-
-  /** Checkpoint.stage + commit validation for the shared unlocked ANN
-    * index root: the committed row count recorded on the stage MARKER
-    * (an O(1) read that already happens) is compared to the expected
-    * size — a torn overwrite or concurrent-writer race that committed a
-    * short/stale table invalidates and rebuilds ONCE, and the rebuild is
-    * re-validated (hard failure if still wrong: something is actively
-    * corrupting the root, and serving a silent wrong index is worse than
-    * dying). Replaces the round-3 s04-only read-back `idx.count()`,
-    * which re-scanned all N index rows on EVERY query — at 100x data
-    * that O(N) job taxes each probe with the very cost the persisted
-    * index amortizes away. Markers predating the rows line validate as
-    * None and rebuild once (self-healing the format upgrade).
-    *
-    * Scope (deliberate): this validates the COMMIT — marker and data
-    * written by the same completed stage() — not the data files'
-    * continued integrity. A writer that starts overwriting the data dir
-    * after commit and dies mid-write fails the reader LOUDLY (missing
-    * part files -> read error), not silently; catching it pre-read
-    * would require re-counting the table per query, the exact O(N) tax
-    * this design removes.
-    */
-  private def validatedStage(s: SparkSession, ck: graft.exec.Checkpoint,
-      stageName: String, snap: String, expectedRows: Long,
-      partitionByCols: Seq[String] = Nil)(compute: => DataFrame): DataFrame = {
-    // snapshot + rows come from ONE marker read (committedRowsFor): on
-    // the shared unlocked root a concurrent writer committing the same
-    // stage for a DIFFERENT snapshot between stage() and a bare rows
-    // read could otherwise pass the count check against the other
-    // writer's data (round-4 ADVICE #3)
-    var df = ck.stage(s, stageName, snap, partitionByCols)(compute)
-    val committed = ck.committedRowsFor(s, stageName, snap)
-    if (!committed.contains(expectedRows)) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"ANN index stage $stageName failed marker row-count validation " +
-          s"(committed=$committed expected=$expectedRows) — rebuilding")
-      ck.invalidate(s, stageName)
-      df = ck.stage(s, stageName, snap, partitionByCols)(compute)
-      val after = ck.committedRowsFor(s, stageName, snap)
-      require(after.contains(expectedRows),
-        s"ANN index stage $stageName still invalid after rebuild " +
-          s"(committed=$after expected=$expectedRows)")
-    }
-    df
-  }
-
-  /** Marker-gated stage for tables whose row count is NOT knowable up
-    * front (s01's verified pair table): requires the committed marker to
-    * carry a rows line for the CURRENT snapshot (one atomic read —
-    * committedRowsFor), rebuilding once when it doesn't. Guards torn /
-    * pre-rows-format markers on the shared unlocked root; the exact
-    * count compare of [[validatedStage]] needs an externally derivable
-    * expected size, which index tables have (n x tables) and pair
-    * tables don't.
-    */
-  private def markedStage(s: SparkSession, ck: graft.exec.Checkpoint,
-      stageName: String, snap: String)(compute: => DataFrame): DataFrame = {
-    var df = ck.stage(s, stageName, snap)(compute)
-    if (ck.committedRowsFor(s, stageName, snap).isEmpty) {
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"stage $stageName marker carries no rows line for the current snapshot — rebuilding")
-      ck.invalidate(s, stageName)
-      df = ck.stage(s, stageName, snap)(compute)
-      require(ck.committedRowsFor(s, stageName, snap).nonEmpty,
-        s"stage $stageName still unvalidatable after rebuild — " +
-          "something is actively corrupting the checkpoint root")
-    }
-    df
-  }
+      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index"), "ann-index")
 
   /** s07's quantizer seed count — #(vec_id < k), not min(n, k), because
     * nothing guarantees dense ids from 0 (a filtered/offset corpus would
@@ -1004,10 +931,10 @@ object SimilarityQueries {
     * Returns (seedN, fromMarker) so the spec can assert the warm path
     * launches no job.
     */
-  private[graft] def ivfSeedCount(s: SparkSession, ck: graft.exec.Checkpoint,
+  private[graft] def ivfSeedCount(s: SparkSession,
       centStage: String, snap: String, dir: String, k: Int): (Long, Boolean) = {
     implicit val sp = s
-    ck.committedRowsFor(s, centStage, snap) match {
+    annIndex.committedRowsFor(s, centStage, snap) match {
       case Some(rows) if rows > 0 => (rows, true)
       case _ =>
         (embs(dir).filter(col("vec_id") < k).select("vec_id").count(), false)
@@ -1022,8 +949,7 @@ object SimilarityQueries {
     implicit val sp = s
     val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
     val (centStage, snap) = ivfCentIdentity(dir, k)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    ivfSeedCount(s, ck, centStage, snap, dir, k)._2
+    ivfSeedCount(s, centStage, snap, dir, k)._2
   }
 
   /** The centroid stage's (stage name, snapshot id) — ONE construction
@@ -1320,9 +1246,8 @@ object SimilarityQueries {
     // 8-projection pass over every embedding per execution, twice (the
     // multiprobe side repeated it with flips). One committed table now
     // carries the exact buckets, marker-validated like the others...
-    val exact = validatedStage(s, ck = graft.exec.Checkpoint(annIndexRoot, "ann-index"),
-        stageName = s"nd8_${dirTag(dir)}", snap = s"$snapBase-nd-b$bits-p2",
-        expectedRows = n * tables) {
+    val exact = annIndex.stage(s, s"nd8_${dirTag(dir)}", s"$snapBase-nd-b$bits-p2",
+        expectedRows = Some(n * tables)) {
       spreadBuild(e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket"))
@@ -1440,9 +1365,8 @@ object SimilarityQueries {
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
     val (n, _) = embSnapshot(dir)
     val (centStage, snap) = ivfCentIdentity(dir, k)
-    val ck = graft.exec.Checkpoint(annIndexRoot, "ann-index")
-    val (seedN0, fromMarker) = ivfSeedCount(s, ck, centStage, snap, dir, k)
-    require(seedN0 > 0,
+    val (seedN, _) = ivfSeedCount(s, centStage, snap, dir, k)
+    require(seedN > 0,
       s"s07 IVF: no quantizer seed vectors (expected rows with vec_id < $k)")
     def buildCent(): DataFrame = {
       val seed: Array[Array[Double]] =
@@ -1452,35 +1376,19 @@ object SimilarityQueries {
     }
     // Centroid-stage validation (round-3 ADVICE: a torn overwrite on the
     // shared unlocked root once served a short centroid table with no
-    // detection). COLD path: the marker's rows compare against the
-    // independent pushed-count expectation (validatedStage). WARM path:
-    // seedN came FROM the marker, so a marker-rows compare would be
-    // circular (true by construction) — instead the marker validates
+    // detection). COLD path: the committed rows compare against the
+    // independent pushed count. WARM path: seedN came FROM the marker,
+    // so that compare is circular — the require below checks the marker
     // against the centroid rows the query collects anyway: a genuine
     // data-vs-marker check with zero extra jobs.
-    var centDf =
-      if (fromMarker) ck.stage(s, centStage, snap)(buildCent())
-      else validatedStage(s, ck, centStage, snap, expectedRows = seedN0)(buildCent())
-    var centroidRows = centDf.collect()
-    var seedN = seedN0
-    if (fromMarker && centroidRows.length != seedN0.toInt) {
-      // the marker's rows line disagrees with the data it gates (torn
-      // data overwrite, or a rows line corrupted into another parseable
-      // value) — rebuild against the independent pushed count
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"s07 centroid stage: marker rows=$seedN0 but table has " +
-          s"${centroidRows.length} rows — rebuilding")
-      ck.invalidate(s, centStage)
-      seedN = embs(dir).filter(col("vec_id") < k).select("vec_id").count()
-      centDf = validatedStage(s, ck, centStage, snap, expectedRows = seedN)(buildCent())
-      centroidRows = centDf.collect()
-    }
+    val centroidRows = annIndex.stage(s, centStage, snap, expectedRows = Some(seedN))(buildCent())
+      .collect()
     require(centroidRows.length == seedN.toInt,
       s"s07 centroid stage: ${centroidRows.length} rows vs expected $seedN")
     val centroids: Array[Array[Double]] = centroidRows
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
-    val assigned = validatedStage(s, ck, s"ivf${k}_assign_${dirTag(dir)}", snap,
-        expectedRows = n, partitionByCols = Seq("cid")) {
+    val assigned = annIndex.stage(s, s"ivf${k}_assign_${dirTag(dir)}", snap,
+        partitionByCols = Seq("cid"), expectedRows = Some(n)) {
       e.map { case (id, v) => (id, v, nearestCids(v, centroids, 1).head) }
         .toDF("vec_id", "embedding", "cid")
     }
@@ -1538,8 +1446,8 @@ object SimilarityQueries {
     // buckets and s07's inverted lists): quantization commits once per
     // embeddings snapshot; every query scans the 4x-smaller table
     val (n, snapBase) = embSnapshot(dir)
-    val quant = validatedStage(s, graft.exec.Checkpoint(annIndexRoot, "ann-index"),
-        s"sq8_${dirTag(dir)}", s"$snapBase-sq8-p2", expectedRows = n) {
+    val quant = annIndex.stage(s, s"sq8_${dirTag(dir)}", s"$snapBase-sq8-p2",
+        expectedRows = Some(n)) {
         spreadBuild(e.map { case (id, v) =>
           val maxAbs = math.max(v.iterator.map(x => math.abs(x.toDouble)).max, 1e-30)
           val scale = 127.0 / maxAbs

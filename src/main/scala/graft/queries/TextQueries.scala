@@ -697,7 +697,7 @@ object TextQueries {
     "t16_domain_mix" ->
       """WITH l AS (
         |  SELECT lang,
-        |    sum(len(regexp_split_to_array(trim(text), '\s+'))) AS lang_tokens
+        |    CAST(sum(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS lang_tokens
         |  FROM documents GROUP BY 1),
         |t AS (
         |  SELECT lang, lang_tokens,
@@ -764,7 +764,7 @@ object TextQueries {
         |c AS (SELECT span, count(*) AS n_occ FROM sp GROUP BY 1)
         |SELECT sp.doc_id,
         |  count(*) AS n_spans,
-        |  sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS n_dup_spans,
+        |  CAST(sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans,
         |  floor(CAST(sum(CASE WHEN c.n_occ >= 2 THEN 1 ELSE 0 END) AS DOUBLE)
         |    / count(*) * 10000 + 0.5) / 10000 AS dup_fraction
         |FROM sp JOIN c USING (span)

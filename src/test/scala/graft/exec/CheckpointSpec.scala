@@ -101,27 +101,126 @@ class CheckpointSpec extends SparkSpec {
     val ckpt = Checkpoint(root, runId = "run-r")
     ckpt.stage(spark, "s", "snap-1") { Seq(1, 2, 3).toDF("v") }
     // the rows line lets ANN index readers validate a shared-root stage
-    // without the O(N) data scan the round-3 s04 read-back paid per query
-    assert(ckpt.committedRowCount(spark, "s").contains(3L))
-    assert(ckpt.isComplete(spark, "s", "snap-1"))
-    // snapshot-checked variant: rows only surface when the marker's
-    // snapshot line matches the snapshot being validated — one atomic
-    // marker read, so a concurrent writer committing the same stage for
-    // a DIFFERENT snapshot can't make the rows check pass (round-4
-    // ADVICE #3)
+    // without the O(N) data scan the round-3 s04 read-back paid per query.
+    // Rows only surface when the marker's snapshot line matches the
+    // snapshot being validated — one atomic marker read, so a concurrent
+    // writer committing the same stage for a DIFFERENT snapshot can't
+    // make the rows check pass (round-4 ADVICE #3)
     assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(3L))
-    assert(ckpt.committedRowsFor(spark, "s", "snap-2").isEmpty)
-    // legacy marker (pre-rows format): still complete, but row count is
-    // None — validating readers treat that as unvalidatable and rebuild.
-    // (Rewritten via java.nio, so Hadoop's LocalFileSystem checksum
-    // sidecar goes stale — drop it or the re-read fails ChecksumException.)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/s/_SUCCESS_SNAPSHOT"),
-      s"snap-1@${Checkpoint.PipelineVersion}")
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$root/s/._SUCCESS_SNAPSHOT.crc"))
-    assert(ckpt.committedRowCount(spark, "s").isEmpty)
     assert(ckpt.isComplete(spark, "s", "snap-1"))
+    assert(ckpt.committedRowsFor(spark, "s", "snap-2").isEmpty)
+    // legacy marker (pre-rows format) and torn markers read as NOT
+    // committed: the stage rebuilds through the normal path and writes a
+    // clean marker. (Rewritten via java.nio, so Hadoop's LocalFileSystem
+    // checksum sidecar goes stale — drop it or the re-read fails
+    // ChecksumException.)
+    val markerPath = java.nio.file.Paths.get(s"$root/s/_SUCCESS_SNAPSHOT")
+    Seq(s"snap-1@${Checkpoint.PipelineVersion}", "", s"snap-1@${Checkpoint.PipelineVersion}\nrows=")
+      .foreach { content =>
+        java.nio.file.Files.writeString(markerPath, content)
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/s/._SUCCESS_SNAPSHOT.crc"))
+        assert(!ckpt.isComplete(spark, "s", "snap-1"), content)
+        var recomputed = false
+        val out = ckpt.stage(spark, "s", "snap-1") { recomputed = true; Seq(1, 2, 3).toDF("v") }
+        assert(recomputed, content)
+        assert(out.count() == 3)
+        assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(3L))
+      }
+  }
+
+  test("expectedRows: a committed count that disagrees rebuilds once, then fails loudly") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-ckpt-expect").toString
+    val ckpt = Checkpoint(root, runId = "run-x")
+    ckpt.stage(spark, "s", "snap-1") { Seq(1, 2).toDF("v") }
+    // a short table under the current snapshot's marker (e.g. left by a
+    // second writer on a shared root) rebuilds once to the expected size
+    var builds = 0
+    val out = ckpt.stage(spark, "s", "snap-1", expectedRows = Some(3L)) {
+      builds += 1
+      Seq(1, 2, 3).toDF("v")
+    }
+    assert(builds == 1 && out.count() == 3)
+    // a matching count is served without a rebuild
+    ckpt.stage(spark, "s", "snap-1", expectedRows = Some(3L)) { fail("rebuilt a valid stage"); ??? }
+    // a compute that keeps producing the wrong size fails after one rebuild
+    intercept[IllegalArgumentException] {
+      ckpt.stage(spark, "s", "snap-1", expectedRows = Some(4L)) { Seq(1, 2, 3).toDF("v") }
+    }
+  }
+
+  test("a rewrite that fails in a task leaves the old snapshot uncommitted, not served empty") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-ckpt-rewrite").toString
+    val ckpt = Checkpoint(root, runId = "run-w")
+    ckpt.stage(spark, "s", "snap-A") { Seq(1L, 2L, 3L).toDF("v") }
+    assert(ckpt.isComplete(spark, "s", "snap-A"))
+    val boom = org.apache.spark.sql.functions.udf { (v: Long) =>
+      if (v == 5L) throw new IllegalStateException("boom in rewrite")
+      v
+    }
+    intercept[Exception] {
+      ckpt.stage(spark, "s", "snap-B") {
+        spark.range(0, 8, 1, 2).select(boom(org.apache.spark.sql.functions.col("id")).as("v"))
+      }
+    }
+    // the failed overwrite may already have emptied data/: snap-A's
+    // marker must be gone with it, so snap-A recomputes
+    assert(!ckpt.isComplete(spark, "s", "snap-A"))
+    assert(!ckpt.isComplete(spark, "s", "snap-B"))
+    var recomputed = false
+    val out = ckpt.stage(spark, "s", "snap-A") { recomputed = true; Seq(1L, 2L, 3L).toDF("v") }
+    assert(recomputed)
+    assert(out.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("a JVM killed during a rewrite leaves neither snapshot committed; the next run resumes") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-ckpt-kill").toString
+    val log = new java.io.File(root, "child.log")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    // the child needs the same module opens Spark needs here, not this
+    // JVM's heap settings
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(javaBin, "-Xmx512m") ++ opens ++ Seq("-cp", System.getProperty("java.class.path"),
+      CheckpointKillChild.getClass.getName.stripSuffix("$"), root)
+    val child = new ProcessBuilder(cmd: _*).directory(new java.io.File(root))
+      .redirectErrorStream(true).redirectOutput(log).start()
+    def logTail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(30).mkString("\n")
+    if (!child.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)) {
+      child.destroyForcibly()
+      fail(s"child JVM did not finish:\n$logTail")
+    }
+    assert(child.exitValue == CheckpointKillChild.HaltCode, s"child did not halt mid-write:\n$logTail")
+
+    val ckpt = Checkpoint(root, runId = "run-resume")
+    assert(!ckpt.isComplete(spark, "s", CheckpointKillChild.SnapA))
+    assert(!ckpt.isComplete(spark, "s", CheckpointKillChild.SnapB))
+    val out = ckpt.stage(spark, "s", CheckpointKillChild.SnapB) { spark.range(0, 8, 1, 2).toDF("v") }
+    assert(out.as[Long].collect().sorted.toSeq == (0L until 8L))
+    assert(ckpt.committedRowsFor(spark, "s", CheckpointKillChild.SnapB).contains(8L))
+  }
+
+  test("one stage commit launches at most three Spark jobs") {
+    val root = Files.createTempDirectory("graft-ckpt-jobs").toString
+    val ckpt = Checkpoint(root, runId = "run-j")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ckpt.stage(spark, "s", "snap-1") { spark.range(0, 1000, 1, 4).toDF("v") }
+      org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the data write, then the lineage groupBy's two jobs under AQE; the
+    // marker's row total needs none of its own
+    assert(jobs.get() <= 3, s"${jobs.get()} jobs for one commit")
+    assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(1000L))
   }
 
   test("KG stages commit flat, sorted, zstd tables that read back in sidecar order") {
