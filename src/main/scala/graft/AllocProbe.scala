@@ -20,58 +20,6 @@ import graft.stages.MentionDetect
   */
 object AllocProbe {
 
-  /** MEASUREMENT-ONLY baseline: the pre-round-5 slicer implementation
-    * (split("\n", -1) + per-predicate strip()), kept verbatim here so
-    * the allocation A/B runs legacy and current in the SAME JVM and
-    * window — not against a number recorded in a different host state.
-    * Never called by production code; the byte-golden specs pin the
-    * production slicer to the same semantics this copy had.
-    */
-  private object LegacySlicer {
-    private val navKeywords = Seq(
-      "Skip to Main Content", "Physical Review", "All Journals",
-      "Highlights", "Recent", "Collections")
-    private val shareButtons =
-      Set("X", "Facebook", "Mendeley", "LinkedIn", "Reddit", "Sina Weibo")
-
-    private def isNavigation(line: String, kws: Seq[String]): Boolean =
-      kws.exists(line.contains)
-
-    private def shouldSkip(line: String): Boolean = {
-      val s = line.strip()
-      if (s == "open icon close icon" || s == "Shareopen icon close icon") true
-      else if (shareButtons.contains(s)) true
-      else if (s.startsWith("  *") && shareButtons.contains(s.drop(4).strip())) true
-      else if (line.contains("[PDF]") &&
-        (line.contains("Share") || shareButtons.exists(line.contains))) true
-      else if (line.contains("altmetric.com") || s == "[ ]") true
-      else if (s == "Export Citation" || s == "Show metricsopen icon close icon") true
-      else false
-    }
-
-    private def findTitle(lines: Array[String], kws: Seq[String]): Option[Int] =
-      lines.indices.find { i =>
-        lines(i).strip().startsWith("# ") && !isNavigation(lines(i), kws)
-      }
-
-    def slice(markdown: String): Option[String] = {
-      val lines = markdown.split("\n", -1)
-      for {
-        titleStart <- findTitle(lines, navKeywords)
-        abstractLine <- (titleStart until lines.length)
-          .find(i => lines(i).strip() == "## Abstract")
-        abstractContent <- (abstractLine + 1 until lines.length)
-          .find { i => val s = lines(i).strip(); s.nonEmpty && s.length > 100 }
-      } yield {
-        (titleStart to abstractContent).iterator
-          .map(lines(_))
-          .filterNot(shouldSkip)
-          .mkString("\n")
-          .strip()
-      }
-    }
-  }
-
   private val tmx = java.lang.management.ManagementFactory.getThreadMXBean
     .asInstanceOf[com.sun.management.ThreadMXBean]
 
@@ -100,14 +48,10 @@ object AllocProbe {
       println(f"${b.lang + ":" + b.path.take(20)}%-28s $n%12d $per%12d  ${per.toDouble / n}%5.1fx")
     }
     // the slicer stage alone on the two raw-crawl pages (the corpus
-    // byte-dominant shape: ~86% of fixture-corpus bytes are aps-md raw),
-    // current vs the in-JVM legacy copy — same window, same JIT state
+    // byte-dominant shape: ~86% of fixture-corpus bytes are aps-md raw)
     for (b <- base.filter(f => f.lang == "aps-md" && f.content.length > 10000)) {
-      require(LegacySlicer.slice(b.content) == graft.rules.MarkdownSlicer.slice(b.content),
-        s"legacy/current slicer output diverged on ${b.path}")
       val per = bytesPer(200, 1000)(graft.rules.MarkdownSlicer.slice(b.content))
-      val leg = bytesPer(200, 1000)(LegacySlicer.slice(b.content))
-      println(f"${"slice-only:" + b.path.take(17)}%-28s ${b.content.length}%12d $per%12d  ${per.toDouble / b.content.length}%5.1fx  (legacy $leg%d, ${leg.toDouble / per}%.1fx more)")
+      println(f"${"slice-only:" + b.path.take(17)}%-28s ${b.content.length}%12d $per%12d  ${per.toDouble / b.content.length}%5.1fx")
     }
     // giant-row variant (every 1000th corpus row): base raw page + 50
     // appended copies — the slicer's early window should keep this from
@@ -115,7 +59,6 @@ object AllocProbe {
     val g = base.head
     val giant = g.copy(content = g.content + ("\n" + g.content) * FixtureCorpus.GiantFactor)
     val perG = bytesPer(20, 50)(MentionDetect.parseOne(giant))
-    val legG = bytesPer(20, 50)(LegacySlicer.slice(giant.content))
-    println(f"${"giant:" + g.path.take(22)}%-28s ${giant.content.length}%12d $perG%12d  ${perG.toDouble / giant.content.length}%5.1fx  (legacy slice-only $legG%d, ${legG.toDouble / perG}%.1fx more)")
+    println(f"${"giant:" + g.path.take(22)}%-28s ${giant.content.length}%12d $perG%12d  ${perG.toDouble / giant.content.length}%5.1fx")
   }
 }

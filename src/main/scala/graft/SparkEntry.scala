@@ -33,6 +33,12 @@ object SparkEntry {
     * `n_dropped_pages` (replicas the keeper displaces). Applying the
     * keeper IS the dedup: a production run would extract only keeper
     * pages. Driver smoke-checks rows > 0.
+    *
+    * Each page is parsed once: [[Pipeline.run]] materializes one
+    * extraction pass, and the triples, the entity table and the
+    * page -> paper bridge that joins dedup verdicts to papers are all
+    * read from it. A page whose parse quarantines has no bridge row, so
+    * it counts toward no paper's `n_pages`.
     */
   def entry(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -46,22 +52,16 @@ object SparkEntry {
     val pairs = SimilarityQueries.neardupPairsOf(pages)
     val keep = SimilarityQueries.keeperAssignments(pairs, pages.select("doc_id"))
 
-    // bridge page ids -> paper docIds via the LIGHT per-shape identity
-    // rule (MentionDetect.docIdOf) — the full parseOne here tripled the
-    // corpus parse count just to recover one field (pages quarantined on
-    // identity grounds contribute no row; docIdOf parity with parseOne
-    // is spec-gated over this corpus)
-    val bridge = files.mapPartitions(_.flatMap { f =>
-      graft.stages.MentionDetect.docIdOf(f)
-        .map(d => (entryPageId(f.repo, f.path), d))
-    }).toDF("doc_id", "docId")
+    val (triples, ents, parsedPages) = Pipeline.run(spark, files)
+    val bridge = parsedPages.as[(String, String, String)]
+      .map { case (repo, path, docId) => (entryPageId(repo, path), docId) }
+      .toDF("doc_id", "docId")
     val dedup = bridge.join(keep, Seq("doc_id"))
       .groupBy(col("docId"))
       .agg(min(when(!col("is_dropped"), col("doc_id"))).as("keeper_doc_id"),
         count(lit(1)).as("n_pages"),
         sum(when(col("is_dropped"), 1L).otherwise(0L)).as("n_dropped_pages"))
 
-    val (triples, ents) = Pipeline.run(spark, files)
     val authorCanon = ents.filter(col("kind") === "author")
       .select(concat(lit("author:"), col("name")).as("obj"),
         col("entityId").as("canonical_author"))

@@ -84,6 +84,24 @@ final case class Triple(docId: String, subj: String, pred: String, obj: String)
 /** A detected entity mention, pre-linking. */
 final case class Mention(docId: String, kind: String, surface: String)
 
+/** One flat row of the single extraction pass
+  * ([[graft.stages.MentionDetect.extract]]), tagged by what it carries:
+  *   - "page": the page's `docId`, keyed by (`repo`, `path`);
+  *   - "triple": one emitted triple (`subj`, `pred`, `obj`);
+  *   - "mention": one entity mention (`kind`, `surface`).
+  * Columns the tag does not use are None.
+  */
+final case class ExtractedRow(
+    tag: String,
+    docId: String,
+    repo: Option[String] = None,
+    path: Option[String] = None,
+    subj: Option[String] = None,
+    pred: Option[String] = None,
+    obj: Option[String] = None,
+    kind: Option[String] = None,
+    surface: Option[String] = None)
+
 /** Canonical entity row of the materialized entity table. */
 final case class Entity(entityId: String, kind: String, canonicalName: String)
 

@@ -165,13 +165,6 @@ object ApsHtmlRules {
     else names.map(n => (n, Seq.empty[String], Seq.empty[String]))
   }
 
-  /** docId WITHOUT the full parse: citation_doi meta (P15) else the
-    * source path — must mirror parse's `docId = doi.getOrElse(sourcePath)`
-    * (parity is spec-gated over the fixture corpus).
-    */
-  def docIdOf(html: String, sourcePath: String): String =
-    firstGroup(metaDoiPat, html).map(_.trim).filter(_.nonEmpty).getOrElse(sourcePath)
-
   private def parseFallbackLinks(html: String): Seq[(String, Seq[String], Seq[String])] =
     allGroups(genericAuthorLink, html).take(10).map(tagStrip)
       .filter(n => n.nonEmpty && Text.splitWs(n).length >= 2) // F5

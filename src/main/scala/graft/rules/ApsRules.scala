@@ -147,31 +147,6 @@ object ApsRules {
   def parseRaw(markdown: String, sourcePath: String): Option[PaperRecord] =
     MarkdownSlicer.slice(markdown).map(parseSliced(_, sourcePath))
 
-  /** docId of an already-sliced page WITHOUT the full parse: first DOI
-    * line (P15) else the source path — must mirror parseSliced's
-    * `docId = doi.getOrElse(sourcePath)` (parity is spec-gated over the
-    * fixture corpus in GoldenTripleSpec). Round 6 (ADVICE): the mirror
-    * now also SKIPS contact-matching lines before testing doiPat,
-    * exactly as parseSliced's else-branch does — previously a contact
-    * line whose email token embedded 'DOI:https://doi.org/...' would
-    * yield a docId here that the full parse never produces, silently
-    * misrouting the flagship page->paper dedup bridge on such pages.
-    */
-  def docIdOfSliced(sliced: String, sourcePath: String): String = {
-    val cm = contactPat.matcher("")
-    val dm = doiPat.matcher("")
-    val it = sliced.split("\n", -1).iterator
-    while (it.hasNext) {
-      val line = it.next()
-      cm.reset(line.strip())
-      if (!cm.matches()) {
-        dm.reset(line)
-        if (dm.find()) return dm.group(1).strip()
-      }
-    }
-    sourcePath
-  }
-
   private def parseAuthors(
       line: String,
       affilByNum: Map[String, String],

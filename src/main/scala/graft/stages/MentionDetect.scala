@@ -5,16 +5,22 @@ import graft.rules._
 import org.apache.spark.sql.Dataset
 import scala.util.{Failure, Success, Try}
 
-/** Mention detection: Dataset[SourceFile] -> Dataset[PaperRecord] ->
-  * Dataset[Triple].
+/** Mention detection: Dataset[SourceFile] -> parsed pages -> triples,
+  * mentions and each page's docId.
   *
-  * One mapPartitions pass; rule maps (compiled regexes) live in JVM-wide
-  * objects, so pattern-compilation cost is paid once per executor — the
-  * Spark analog of the reference's browser-singleton reuse
-  * (aps_extractor.py:14-50). Dispatch on the `lang` shape tag mirrors the
-  * URL-substring dispatch of main.py:167-179; unknown shapes and parse
-  * failures land in the quarantine side-output (E2 semantics:
-  * aps_extractor.py:401-418) instead of failing the job.
+  * Every path parses a page with [[parseOne]] inside a mapPartitions
+  * pass; rule maps (compiled regexes) live in JVM-wide objects, so
+  * pattern-compilation cost is paid once per executor — the Spark analog
+  * of the reference's browser-singleton reuse (aps_extractor.py:14-50).
+  * Dispatch on the `lang` shape tag mirrors the URL-substring dispatch of
+  * main.py:167-179; unknown shapes and parse failures land in the
+  * quarantine side-output (E2 semantics: aps_extractor.py:401-418)
+  * instead of failing the job.
+  *
+  * [[extract]] is the one pass the flagship reads: one parse per page,
+  * with triples, mentions and the page -> docId bridge as projections of
+  * its rows. [[records]], [[triplesDirect]] and [[mentionsDirect]] each
+  * parse on their own and serve callers that need only one of them.
   */
 object MentionDetect {
 
@@ -36,31 +42,6 @@ object MentionDetect {
       case Failure(e) => Left(QuarantineRow(f.repo, f.path, f.lang, String.valueOf(e)))
     }
   }
-
-  /** Page docId WITHOUT the full parse — only the per-shape identity
-    * rule (canonical URL / DOI / path fallback). The flagship entry's
-    * dedup bridge needs just (pageId -> docId); routing it through
-    * [[parseOne]] re-ran the whole author/affiliation extraction per
-    * page, adding a third full corpus parse on top of the two
-    * Pipeline.run performs by design. None where parseOne quarantines
-    * on identity grounds (unknown shape tag, no aps-md body, identity
-    * rule throws); a page whose identity extracts but whose FULL parse
-    * would fail mid-extraction still yields its docId here — acceptable
-    * for the bridge (its triples never materialize, so the id only
-    * feeds page counting), parity otherwise spec-gated over the fixture
-    * corpus in GoldenTripleSpec.
-    */
-  def docIdOf(f: SourceFile): Option[String] =
-    Try {
-      f.lang match {
-        case "aps-md" =>
-          MarkdownSlicer.slice(f.content).map(ApsRules.docIdOfSliced(_, f.path))
-        case "aps-html" => Some(ApsHtmlRules.docIdOf(f.content, f.path))
-        case "nature-html" => Some(NatureRules.canonicalUrl(f.content).getOrElse(f.path))
-        case "science-html" => Some(ScienceRules.canonicalUrl(f.content).getOrElse(f.path))
-        case _ => None
-      }
-    }.toOption.flatten
 
   def records(files: Dataset[SourceFile]): Dataset[PaperRecord] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[PaperRecord]
@@ -101,6 +82,27 @@ object MentionDetect {
     files.mapPartitions(_.flatMap(f => parseOne(f) match {
       case Right(r) => Pipeline.mentionsOfRecord(r)
       case Left(_) => Nil
+    }))
+  }
+
+  /** The single extraction pass: [[parseOne]] once per page, flattened
+    * into [[ExtractedRow]]s — one "page" row (the page's docId keyed by
+    * repo/path), then the record's triples ([[TripleEmit.emit]]) and
+    * mentions ([[Pipeline.mentionsOfRecord]]). A page whose parse
+    * quarantines emits no row at all, so it has no docId either. As in
+    * [[triplesDirect]], the PaperRecord stays a plain JVM object inside
+    * the partition; only the flat rows are encoded.
+    */
+  def extract(files: Dataset[SourceFile]): Dataset[ExtractedRow] = {
+    implicit val enc = org.apache.spark.sql.Encoders.product[ExtractedRow]
+    files.mapPartitions(_.flatMap(f => parseOne(f) match {
+      case Right(r) =>
+        Iterator.single(ExtractedRow("page", r.docId, repo = Some(f.repo), path = Some(f.path))) ++
+          TripleEmit.emit(r).iterator.map(t =>
+            ExtractedRow("triple", t.docId, subj = Some(t.subj), pred = Some(t.pred), obj = Some(t.obj))) ++
+          Pipeline.mentionsOfRecord(r).iterator.map(m =>
+            ExtractedRow("mention", m.docId, kind = Some(m.kind), surface = Some(m.surface)))
+      case Left(_) => Iterator.empty
     }))
   }
 }

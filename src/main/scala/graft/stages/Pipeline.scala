@@ -93,17 +93,23 @@ object Pipeline {
         coalesce(col("canonicalName"), col("name")).as("entityId"))
   }
 
-  /** End-to-end: files -> canonicalized triples (+ entity table).
-    * Records are persisted: both the triple emission and the mention
-    * stream consume them, and re-parsing page bodies is the expensive
-    * part of the whole pipeline.
+  /** End-to-end: files -> (triples, entity table, page bridge), from ONE
+    * parse per page.
+    *
+    * [[MentionDetect.extract]] parses every page once and is materialized
+    * once with an eager localCheckpoint (as [[entities]] does for names),
+    * so triples, mentions and the bridge are projections of those rows
+    * and no consumer re-parses a page body. The bridge has one
+    * (repo, path, docId) row per page whose full parse succeeded; a
+    * quarantined page has no bridge row, no triples and no mentions.
     */
-  def run(spark: SparkSession, files: Dataset[SourceFile]): (Dataset[Triple], DataFrame) = {
-    // fused passes: parsing twice is ~20x cheaper than round-tripping the
-    // nested PaperRecord through its encoder (see MentionDetect.triplesDirect)
-    val triples = MentionDetect.triplesDirect(files)
-    val ents = entities(spark, MentionDetect.mentionsDirect(files))
-    (triples, ents)
+  def run(spark: SparkSession, files: Dataset[SourceFile]): (Dataset[Triple], DataFrame, DataFrame) = {
+    import spark.implicits._
+    val parsed = MentionDetect.extract(files).localCheckpoint(true)
+    def tagged(tag: String) = parsed.filter(col("tag") === tag)
+    val triples = tagged("triple").select("docId", "subj", "pred", "obj").as[Triple]
+    val mentions = tagged("mention").select("docId", "kind", "surface").as[Mention]
+    (triples, entities(spark, mentions), tagged("page").select("repo", "path", "docId"))
   }
 
   /** Checkpointed variant: each stage commits to <root>/<stage>/data with

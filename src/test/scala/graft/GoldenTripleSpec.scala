@@ -85,21 +85,6 @@ class GoldenTripleSpec extends SparkSpec {
     assert(graft.stages.Ingest.manifestViolations(files, corrupt) > 0)
   }
 
-  test("light docIdOf agrees with the full parse across the fixture corpus") {
-    // the flagship entry's dedup bridge uses the LIGHT identity rule
-    // (MentionDetect.docIdOf) instead of a third full corpus parse —
-    // this parity gate is what makes that substitution safe (drift in
-    // any shape's DOI/canonical-URL rule vs its full parse fails here)
-    val bad = Seq(
-      graft.model.SourceFile("repo-x", "mystery.bin", "c0ffee", "pdf-scan", "binaryish"),
-      graft.model.SourceFile("repo-x", "empty.md", "c0ffee", "aps-md", ""))
-    val pages = FixtureCorpus.corpusRows(200).toSeq ++ bad
-    pages.foreach { f =>
-      assert(MentionDetect.docIdOf(f) == MentionDetect.parseOne(f).toOption.map(_.docId),
-        s"docIdOf drift on ${f.path} (${f.lang})")
-    }
-  }
-
   test("giant skewed page emits exactly the base page's triples") {
     import spark.implicits._
     // row 2000 is a giant (50x-appended) copy of the raw pyzr-jmvw page
