@@ -105,16 +105,6 @@ final case class ExtractedRow(
 /** Canonical entity row of the materialized entity table. */
 final case class Entity(entityId: String, kind: String, canonicalName: String)
 
-/** Per-partition lineage row (north-rule resumability requirement). */
-final case class LineageRow(
-    runId: String,
-    stage: String,
-    snapshotId: String,
-    partitionId: Int,
-    rowCount: Long,
-    sha256s: Seq[String],
-    wallMs: Long)
-
 /** A row of the failure/quarantine side-output (E2 semantics:
   * aps_extractor.py:401-418 returns an error record instead of raising).
   */

@@ -10,7 +10,8 @@ import scala.collection.mutable
   * no RDD/GraphX.
   *
   * Two physical paths behind one semantics:
-  *  - small graphs (edge count <= smallCutoff): union-find on the driver.
+  *  - small graphs (edge count <= smallCutoff): union-find on the driver,
+  *    over the edges of the one bounded collect that picks the path.
   *    The edge set of an entity-resolution graph is the *distinct
   *    name-variant pair* space — metadata-sized even for huge corpora —
   *    so this is the common case, and it avoids paying one shuffle +
@@ -19,7 +20,7 @@ import scala.collection.mutable
   *  - large graphs: iterative DataFrame label propagation, one shuffle
   *    per iteration, lineage truncated with localCheckpoint, fixpoint
   *    detected by a change count. This is the 100 TB path; both paths
-  *    are asserted equal in CanonicalizeSpec.
+  *    are asserted equal in LinkingSpec, at the crossover too.
   */
 object Canonicalize {
 
@@ -59,26 +60,42 @@ object Canonicalize {
 
   /** @param edges (src, dst) undirected string edges
     * @return (id, canonicalId) for every vertex appearing in edges
+    *
+    * The path is picked by ONE bounded collect of at most
+    * `smallCutoff + 1` edges: when it returns at most `smallCutoff`, those
+    * are all the edges and the union-find runs on them; otherwise the
+    * graph is large and label propagation reads the edges afresh. No
+    * persist or count pass runs first. `smallCutoff` at or above
+    * Int.MaxValue (a `limit` bound is an Int) collects every edge, and a
+    * negative one always takes label propagation.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 20,
       smallCutoff: Long = DefaultSmallCutoff): DataFrame = {
     val spark = edges.sparkSession
+    import spark.implicits._
     val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = e.count()
-    val result =
-      if (nEdges <= smallCutoff) driverUnionFind(spark, e)
-      else distributedLabelProp(e, maxIter)
-    e.unpersist()
-    result
+    val small =
+      if (smallCutoff < 0) None
+      else {
+        // coalesce(1): the limit's take then reads the edge partitions in
+        // ONE task, in order, and stops at the bound — a plain limit
+        // scans one partition first and starts a second job when that
+        // partition holds fewer rows than the bound
+        val probe =
+          if (smallCutoff < Int.MaxValue) e.coalesce(1).limit(smallCutoff.toInt + 1) else e
+        Some(probe.as[(String, String)].collect()).filter(_.length <= smallCutoff)
+      }
+    small match {
+      case Some(pairs) => driverUnionFind(spark, pairs)
+      case None => distributedLabelProp(e, maxIter)
+    }
   }
 
   /** Driver-side union-find with path compression; deterministic
     * min-string canonical ids. Bounded by smallCutoff edges.
     */
-  private def driverUnionFind(spark: SparkSession, edges: DataFrame): DataFrame = {
+  private def driverUnionFind(spark: SparkSession, pairs: Array[(String, String)]): DataFrame = {
     import spark.implicits._
-    val pairs = edges.as[(String, String)].collect()
     val parent = mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x

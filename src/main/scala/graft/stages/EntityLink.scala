@@ -89,8 +89,14 @@ object EntityLink {
     *  - **block purging**: an LSH bucket larger than `maxBucket` is
     *    non-discriminative boilerplate (shared-prefix corpora collapse
     *    whole corpora into one bucket) and is dropped — true near-dups
-    *    also collide in rarer buckets of the other bands. Purged-bucket
-    *    counts are logged, never silent.
+    *    also collide in rarer buckets of the other bands. Purged buckets
+    *    are logged with their count, never silent; the count is tallied
+    *    by the job that materializes the pruned band table, not by a job
+    *    of its own.
+    *
+    * Jobs: the pruned band table is one eager localCheckpoint (its
+    * shuffle stages for the keyed dedup + min-window and the bucket
+    * window, then its result stage); the returned frame is lazy.
     */
   def fuzzyEdges(names: DataFrame, tau: Double, maxBucket: Int = 1000): DataFrame = {
     val spark = names.sparkSession
@@ -98,21 +104,23 @@ object EntityLink {
 
     // self-sufficient contract: dedup the input here — a non-distinct
     // (kind, name) frame must not emit duplicate star/jaccard edges.
-    // Cheap relative to the window + LSH that follow (Catalyst collapses
-    // it into the same shuffle when the caller already deduped); eager
-    // localCheckpoints (not persist) below so the blocks are
-    // context-cleaned once unreachable
+    // ONE exchange serves both the dedup and the min-window: the shingle
+    // key is a function of the name, so hash-partitioning by (kind, skey)
+    // co-locates every copy of a (kind, name) row, and the distinct on
+    // (kind, name, skey) and the window over (kind, skey) both run inside
+    // that partitioning.
     // NOT localCheckpointed (round 6): keyed's two consumers are the
-    // star-edge projection (in the final plan) and the banded build
-    // (materialized below) — recomputing the cheap distinct + shingle
-    // key + min-window from the caller's checkpointed name set costs
-    // one small exchange, where the eager checkpoint cost a full
-    // job-barrier on every call. The EXPENSIVE per-name work (the
-    // 64-hash minhash signature in bandKeys) stays computed exactly
-    // once, inside banded's checkpoint.
-    val keyed = names.select("kind", "name").distinct().as[(String, String)]
+    // star-edge projection (in the final plan) and the band build
+    // (materialized below) — recomputing the cheap shingle key +
+    // min-window from the caller's checkpointed name set costs one small
+    // exchange, where an eager checkpoint costs a job barrier on every
+    // call. The EXPENSIVE per-name work (the 64-hash minhash signature in
+    // bandKeys) stays computed exactly once, inside pruned's checkpoint.
+    val keyed = names.select("kind", "name").as[(String, String)]
       .map { case (k, n) => (k, n, shingleKey(n)) }
       .toDF("kind", "name", "skey")
+      .repartition(col("kind"), col("skey"))
+      .distinct()
       .withColumn("rep", min(col("name")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("kind"), col("skey"))))
 
@@ -125,32 +133,40 @@ object EntityLink {
       .flatMap { case (kind, name) =>
         bandKeys(name).map { case (b, k) => (kind, name, b, k) }
       }.toDF("kind", "name", "band", "bkey")
-      .localCheckpoint(true)
 
-    // round 6: bucket sizes as a count-over-window on the SAME keys the
-    // self-join below partitions by — the groupBy + join-back
-    // formulation paid an aggregation exchange plus a join exchange in
-    // the candidate path for the same pruning; the window's single
-    // (kind, band, bkey) shuffle now also satisfies the join's
-    // distribution, so the join adds no exchange at all. The purge
-    // count stays an eager, logged-never-silent job (round-5 policy),
-    // reading the checkpointed banded frame.
-    val sized = banded.withColumn("__bsz", count(lit(1)).over(
-      org.apache.spark.sql.expressions.Window
-        .partitionBy(col("kind"), col("band"), col("bkey"))))
-    val nPurged = sized.filter(col("__bsz") > maxBucket)
-      .select("kind", "band", "bkey").distinct().count()
-    if (nPurged > 0) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"fuzzyEdges: purged $nPurged LSH buckets larger than $maxBucket names")
-    val pruned = sized.filter(col("__bsz") <= maxBucket).drop("__bsz")
+    // Bucket sizes as a count-over-window on the SAME keys the self-join
+    // below partitions by (round 6: the groupBy + join-back formulation
+    // paid an aggregation exchange plus a join exchange for the same
+    // pruning). The purge runs inside the eager localCheckpoint that
+    // materializes the pruned band table, so the expensive per-name work
+    // (the 64-hash minhash signature in bandKeys) runs exactly once, and
+    // the purge is tallied by the job that runs anyway: that job's
+    // result stage applies each task's accumulator update exactly once,
+    // and every band row passes the filter. A purged bucket is counted
+    // at its minimum name (names are distinct inside a bucket), so the
+    // tally is a bucket count; it is logged, never silent.
+    val bucket = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("kind"), col("band"), col("bkey"))
+    val purged = spark.sparkContext.longAccumulator
+    val keep = udf { (size: Long, bucketMin: Boolean) =>
+      if (size > maxBucket && bucketMin) purged.add(1)
+      size <= maxBucket
+    }.asNondeterministic()
+    val pruned = banded
+      .withColumn("__bsz", count(lit(1)).over(bucket))
+      .withColumn("__bmin", min(col("name")).over(bucket))
+      .filter(keep(col("__bsz"), col("name") === col("__bmin")))
+      .drop("__bsz", "__bmin")
+      .localCheckpoint(true)
+    if (purged.value > 0) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"fuzzyEdges: purged ${purged.value} LSH buckets larger than $maxBucket names")
 
     val l = pruned.as("l")
     // hint("merge") (round 6, the s02 lesson): without it the planner
-    // broadcasts one side at small name counts and the broadcast build
-    // replays the pruned lineage instead of reusing the size window's
-    // exchange; the window already partitions and sorts both sides by
-    // the join keys, so SMJ costs nothing extra and matches the only
-    // plan possible at production name counts.
+    // broadcasts one side at small name counts, and the broadcast build
+    // is a job of its own that collects the band table on the driver.
+    // The sort-merge join hash-partitions the checkpointed table once by
+    // the join keys and reuses that exchange for the other side.
     val r = pruned.as("r").hint("merge")
     val candidates = l.join(r,
         $"l.kind" === $"r.kind" && $"l.band" === $"r.band" &&

@@ -11,6 +11,28 @@ import java.nio.file.Files
   */
 class CheckpointSpec extends SparkSpec {
 
+  /** Runs `main`'s object in a child JVM on `root`; (exit code, log
+    * lines). The child gets the module opens Spark needs here, not this
+    * JVM's heap settings.
+    */
+  private def runChild(main: AnyRef, root: String): (Int, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val log = new java.io.File(root, "child.log")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(javaBin, "-Xmx512m") ++ opens ++ Seq("-cp", System.getProperty("java.class.path"),
+      main.getClass.getName.stripSuffix("$"), root)
+    val child = new ProcessBuilder(cmd: _*).directory(new java.io.File(root))
+      .redirectErrorStream(true).redirectOutput(log).start()
+    def lines = scala.io.Source.fromFile(log).getLines().toSeq
+    if (!child.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)) {
+      child.destroyForcibly()
+      fail(s"child JVM did not finish:\n${lines.takeRight(30).mkString("\n")}")
+    }
+    (child.exitValue, lines)
+  }
+
   test("checkpointed pipeline resumes: stage skipped on re-run, outputs identical") {
     val root = Files.createTempDirectory("graft-ckpt").toString
     val ckpt = Checkpoint(root, runId = "run-1")
@@ -175,25 +197,10 @@ class CheckpointSpec extends SparkSpec {
   }
 
   test("a JVM killed during a rewrite leaves neither snapshot committed; the next run resumes") {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
     val root = Files.createTempDirectory("graft-ckpt-kill").toString
-    val log = new java.io.File(root, "child.log")
-    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    // the child needs the same module opens Spark needs here, not this
-    // JVM's heap settings
-    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
-      .asScala.filter(_.startsWith("--add-opens="))
-    val cmd = Seq(javaBin, "-Xmx512m") ++ opens ++ Seq("-cp", System.getProperty("java.class.path"),
-      CheckpointKillChild.getClass.getName.stripSuffix("$"), root)
-    val child = new ProcessBuilder(cmd: _*).directory(new java.io.File(root))
-      .redirectErrorStream(true).redirectOutput(log).start()
-    def logTail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(30).mkString("\n")
-    if (!child.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)) {
-      child.destroyForcibly()
-      fail(s"child JVM did not finish:\n$logTail")
-    }
-    assert(child.exitValue == CheckpointKillChild.HaltCode, s"child did not halt mid-write:\n$logTail")
+    val (exit, log) = runChild(CheckpointKillChild, root)
+    assert(exit == CheckpointKillChild.HaltCode, s"child did not halt mid-write:\n${log.takeRight(30).mkString("\n")}")
 
     val ckpt = Checkpoint(root, runId = "run-resume")
     assert(!ckpt.isComplete(spark, "s", CheckpointKillChild.SnapA))
@@ -203,24 +210,60 @@ class CheckpointSpec extends SparkSpec {
     assert(ckpt.committedRowsFor(spark, "s", CheckpointKillChild.SnapB).contains(8L))
   }
 
-  test("one stage commit launches at most three Spark jobs") {
+  test("one stage commit launches at most two Spark jobs") {
     val root = Files.createTempDirectory("graft-ckpt-jobs").toString
     val ckpt = Checkpoint(root, runId = "run-j")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = countJobs {
       ckpt.stage(spark, "s", "snap-1") { spark.range(0, 1000, 1, 4).toDF("v") }
-      org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // the data write, then the lineage groupBy's two jobs under AQE; the
-    // marker's row total needs none of its own
-    assert(jobs.get() <= 3, s"${jobs.get()} jobs for one commit")
+    }
+    // the data write, which tallies its own rows, then the one-file
+    // lineage write; no pass over the stage output for either
+    assert(jobs <= 2, s"$jobs jobs for one commit")
     assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(1000L))
+    val lineage = ckpt.lineage(spark, "s").select("partitionId", "rowCount")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sorted.toSeq
+    assert(lineage == (0 until 4).map(_ -> 250L))
+  }
+
+  test("one checkpointed KG build launches at most 22 Spark jobs") {
+    val root = Files.createTempDirectory("graft-ckpt-build-jobs").toString
+    val files = FixtureCorpus.corpus(spark, 20, 4)
+    val (_, jobs) = countJobs {
+      Pipeline.runCheckpointed(spark, files, Checkpoint(root, runId = "run-b"),
+        Checkpoint.snapshotId("fixture", 20))
+    }
+    // four commits (ingest's provenance groupBy adds two jobs), the name
+    // set, the pruned LSH band table, the edge probe and their shuffle
+    // stages; a lineage groupBy per commit, an eager purge count and a
+    // persist + count before the edge collect made it 32
+    assert(jobs <= 22, s"$jobs jobs for one checkpointed build")
+  }
+
+  test("lineage is exactly once when a write task is retried") {
+    import org.apache.spark.sql.functions.{col, explode}
+    val root = Files.createTempDirectory("graft-ckpt-retry").toString
+    val (exit, log) = runChild(CheckpointRetryChild, root)
+    def logTail = log.takeRight(30).mkString("\n")
+    assert(exit == 0, s"child failed:\n$logTail")
+    assert(log.exists(_.contains("first attempt of partition 1 fails")), s"no task attempt failed:\n$logTail")
+
+    val ckpt = Checkpoint(root, runId = "reader")
+    val snap = CheckpointRetryChild.Snap
+    val s = ckpt.lineage(spark, "s").select("partitionId", "rowCount")
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).sorted.toSeq
+    // one row per non-empty partition; the failed attempt's rows are not
+    // counted a second time
+    assert(s == Seq(0 -> 250L, 1 -> 250L, 2 -> 250L), s)
+    assert(ckpt.committedRowsFor(spark, "s", snap).contains(750L))
+    assert(ckpt.stage(spark, "s", snap) { fail("recomputed a committed stage"); ??? }.count() == 750L)
+
+    val files = ckpt.lineage(spark, "files")
+    assert(files.select("partitionId").distinct().count() == 4)
+    assert(files.agg(org.apache.spark.sql.functions.sum("rowCount")).head.getLong(0) == 40L)
+    assert(ckpt.committedRowsFor(spark, "files", snap).contains(40L))
+    val paths = files.select(explode(col("inputFiles"))).collect().map(_.getString(0)).sorted.toSeq
+    assert(paths == (0 until 40).map(i => f"p$i%03d"), paths)
+    assert(files.select(explode(col("sha256s"))).distinct().count() == 40)
   }
 
   test("KG stages commit flat, sorted, zstd tables that read back in sidecar order") {

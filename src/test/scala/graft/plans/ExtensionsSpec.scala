@@ -90,4 +90,24 @@ class ExtensionsSpec extends SparkSpec with PropChecks {
       assert(df.head.getInt(1) > 0)
     } finally spark.experimental.extraOptimizations = before
   }
+
+  test("only the single-partition window warning is filtered, and only on WindowExec") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.LoggerContext
+    SinglePartitionWindowNote.install()
+    SinglePartitionWindowNote.install() // a second session start adds nothing
+    val config = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration
+    val lc = config.getLoggerConfig(SinglePartitionWindowNote.Logger)
+    assert(lc.getName == SinglePartitionWindowNote.Logger)
+    // the logger keeps the level it inherits: its other warnings still log
+    assert(lc.getLevel == config.getRootLogger.getLevel, lc.getLevel)
+    assert(Option(lc.getFilter).map(_.getClass.getSimpleName).contains("Deny"), lc.getFilter)
+    val (_, seen) = graft.LogCapture(SinglePartitionWindowNote.Logger) {
+      // an unpartitioned window: WindowExec logs the single-partition warning
+      spark.range(5).withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy("id"))).collect()
+      LogManager.getLogger(SinglePartitionWindowNote.Logger).warn("another WindowExec warning")
+    }
+    assert(seen == Seq("another WindowExec warning"), seen)
+  }
 }

@@ -65,8 +65,15 @@ class LinkingSpec extends SparkSpec {
     // dominant minhash slots -> one mega bucket, purged by maxBucket
     val boiler = (0 until 1200).map(i => ("author", s"the common prefix entry $i"))
     val names = (variants ++ boiler).toDF("kind", "name")
-    val edges = EntityLink.fuzzyEdges(names, tau = 0.55, maxBucket = 500)
-      .collect()
+    // the purge is logged with its bucket count, tallied by the jobs that
+    // build the edges: no job of its own (an eager purge-count job made
+    // building and collecting these edges 11 jobs)
+    val ((edges, jobs), logged) = graft.LogCapture("graft.stages") {
+      countJobs(EntityLink.fuzzyEdges(names, tau = 0.55, maxBucket = 500).collect())
+    }
+    val purges = logged.filter(_.startsWith("fuzzyEdges: purged"))
+    assert(purges == Seq("fuzzyEdges: purged 12 LSH buckets larger than 500 names"), logged)
+    assert(jobs <= 7, s"$jobs jobs to build and collect the fuzzy edges")
     // every variant links to the group minimum ("John Smith." — shortest
     // sorts first), so CC resolves the whole group through 1499 edges
     val star = edges.filter(r =>
@@ -74,8 +81,8 @@ class LinkingSpec extends SparkSpec {
     assert(star.length == 1499, s"star edges: ${star.length}")
     // the boilerplate names are genuinely mutually similar (long shared
     // prefix), so above-tau pairs among them are CORRECT output — the
-    // guards bound candidate generation (purge warning observed in the
-    // log), not the verified-edge count; fewer than all-pairs shows the
+    // guards bound candidate generation (the purge warning above), not
+    // the verified-edge count; fewer than all-pairs shows the
     // purge cut candidates while the star fold covered its group exactly
     val allPairsBound = 1499 + 1200 * 1199 / 2
     assert(edges.length < allPairsBound, s"edges: ${edges.length}")
@@ -92,6 +99,29 @@ class LinkingSpec extends SparkSpec {
       .as[(String, String)].collect().toMap
     assert(cc.size == 201)
     assert(cc.values.toSet == Set("v0000"), s"labels: ${cc.values.toSet}")
+  }
+
+  test("CC crossover: cutoff edges take the union-find, cutoff + 1 label propagation, same labels") {
+    import spark.implicits._
+    // three chains: 7 edges over 3 components, materialized in 3
+    // partitions so the probe below reads them without a shuffle
+    val edges = Seq(("b", "a"), ("c", "b"), ("d", "c"), ("y", "x"), ("z", "y"),
+      ("p", "q"), ("q", "r")).toDF("src", "dst").repartition(3).localCheckpoint(true)
+    val n = edges.count()
+    def run(cutoff: Long) = countJobs(Canonicalize.connectedComponents(edges, smallCutoff = cutoff)
+      .as[(String, String)].collect().toMap)
+    val (atCutoff, ufJobs) = run(n)          // n edges <= cutoff: union-find
+    val (overCutoff, lpJobs) = run(n - 1)    // n = cutoff + 1 edges: label propagation
+    val (unbounded, _) = run(Long.MaxValue)  // limit bound must not overflow
+    val (pinned, pinnedJobs) = run(0)        // the kg15 pin: always distributed
+    val expected = Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "a",
+      "x" -> "x", "y" -> "x", "z" -> "x", "p" -> "p", "q" -> "p", "r" -> "p")
+    assert(atCutoff == expected && overCutoff == expected && unbounded == expected &&
+      pinned == expected)
+    // the union-find path is ONE bounded collect job over 3 partitions;
+    // label propagation runs its shuffle rounds after that probe
+    assert(ufJobs == 1, s"union-find path ran $ufJobs jobs")
+    assert(lpJobs > 1 && pinnedJobs > 1, s"label propagation ran $lpJobs / $pinnedJobs jobs")
   }
 
   test("dictionary linking folds Westlake variants via canonical alias") {
