@@ -2,7 +2,6 @@ package graft
 
 import graft.fixtures.FixtureCorpus
 import graft.stages.{MentionDetect, Pipeline}
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line on stdout.
   *
@@ -37,25 +36,8 @@ object Bench {
     // default sized so the extract stage dominates fixed overheads
     // (6k pages under-reported steady-state throughput ~2x in round 1)
     val kgN = sys.env.getOrElse("SPARK_GRAFT_KG_N", "60000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // heap comes from build.sbt's forked -Xmx (SPARK_DRIVER_MEM env);
-      // setting spark.driver.memory after JVM start would be a no-op
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftUdfs.register(spark)
-
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = MainUtil.session(cpus)
+    import MainUtil.timed
 
     // Warm up the session (scheduler, codegen, parquet footer reads) and
     // the extraction rule maps (C2-compiling the regex paths is a
@@ -101,7 +83,7 @@ object Bench {
     val rawSamples: Seq[(String, Seq[Double])] = benched.map { name =>
       if (!qmap.contains(name)) name -> Seq.empty
       else name -> (1 to 3).map { _ =>
-        try time(materialize(qmap(name)(spark, sfDir)))._2
+        try timed(materialize(qmap(name)(spark, sfDir)))._2
         catch {
           case e: Throwable =>
             // transient failures don't discard the clean samples, but
@@ -122,7 +104,7 @@ object Bench {
     // the host shows bursty multi-second stalls (documented in
     // BASELINE.md), so a single sample under-reports capability.
     val files = FixtureCorpus.corpus(spark, kgN, cpus.toInt * 4)
-    val samples = (1 to 3).map(_ => time(MentionDetect.triplesDirect(files).count()))
+    val samples = (1 to 3).map(_ => timed(MentionDetect.triplesDirect(files).count()))
     val nTriples = samples.head._1
     val kgSec = samples.map(_._2).min
     val tps = nTriples / kgSec
@@ -130,7 +112,7 @@ object Bench {
     // Linking + canonicalization over the distinct-name space (best of 2:
     // the first run pays the plan's one-time codegen like everything else).
     val linkSamples = (1 to 2).map { _ =>
-      time {
+      timed {
         val ment = MentionDetect.mentionsDirect(
           FixtureCorpus.corpus(spark, math.min(kgN, 2000), cpus.toInt * 2))
         Pipeline.entities(spark, ment).count()

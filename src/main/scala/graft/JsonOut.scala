@@ -32,6 +32,30 @@ object JsonOut {
   */
 object MainUtil {
 
+  /** The one session every main runs on (Bench, Verify and each Spark
+    * tool of [[Probe]]): `local[cpus]` with as many shuffle partitions,
+    * AQE with skew-join splitting, UTC, no UI, the [[graft.plans.GraftExtensions]]
+    * rules and the [[graft.functions.GraftUdfs]] functions, logging at
+    * WARN. Evidence a probe gathers is therefore gathered on the session
+    * the driver-contract mains use.
+    */
+  def session(cpus: String): org.apache.spark.sql.SparkSession = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // heap comes from build.sbt's forked -Xmx (SPARK_DRIVER_MEM env);
+      // setting spark.driver.memory after JVM start would be a no-op
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftUdfs.register(spark)
+    spark
+  }
+
   def timed[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f

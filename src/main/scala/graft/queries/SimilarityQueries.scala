@@ -5,7 +5,6 @@ import graft.stages.EntityLink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.util.hashing.MurmurHash3
 
 /** Near-duplicate detection and similarity search over `documents` /
   * `embeddings` — the scale-path operators of a training-data pipeline.
@@ -181,10 +180,7 @@ object SimilarityQueries {
     import sp.implicits._
     d.flatMap { case (id, text) =>
       val sig = EntityLink.signature(wordShingles(text))
-      (0 until EntityLink.Bands).map { b =>
-        val slice = sig.slice(b * EntityLink.RowsPerBand, (b + 1) * EntityLink.RowsPerBand)
-        (id, b, MurmurHash3.arrayHash(slice, 0x85ebca6b).toLong)
-      }
+      (0 until EntityLink.Bands).map(b => (id, b, EntityLink.bandKey(sig, b)))
     }.toDF("doc_id", "band", "bkey")
   }
 
@@ -493,24 +489,14 @@ object SimilarityQueries {
     */
   private val Nd12BroadcastMaxDelta = 5000000L
 
-  /** Batch boundary shared by the incremental ops (s12 pairs, s13
-    * keepers — the composition runs at ONE cutoff): caller-supplied (a
-    * production ingest pins its own cutoff so tail appends keep the
-    * old-side indexes warm), defaulting to the deterministic id-tail
-    * convention the oracle pins; validated eagerly so a stale/typo'd
-    * shell export fails with the knob's name instead of a bare parse
-    * error (or a silently empty old slice) from deep inside the query.
+  /** The registered s12 and s13 run at the deterministic id-tail
+    * cutoff the oracle pins; a production ingest pins its own batch
+    * boundary (so tail appends keep the old-side indexes warm) by
+    * calling [[incrementalNeardupAt]] / [[incrementalKeeperAt]] with it,
+    * one cutoff for both ops.
     */
-  private def batchCutoff(s: SparkSession, dir: String): Long =
-    sys.env.get("SPARK_GRAFT_S12_CUTOFF").map { v =>
-      val c = v.toLongOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_S12_CUTOFF must be a non-negative long, got '$v'"))
-      require(c >= 0, s"SPARK_GRAFT_S12_CUTOFF must be >= 0, got $c")
-      c
-    }.getOrElse(incrementalCutoff(s, dir))
-
   private val incrementalNeardup: Q = (s, dir) =>
-    incrementalNeardupAt(s, dir, batchCutoff(s, dir))
+    incrementalNeardupAt(s, dir, incrementalCutoff(s, dir))
 
   private[graft] def incrementalNeardupAt(s: SparkSession, dir: String,
       cutoff: Long): DataFrame =
@@ -655,7 +641,7 @@ object SimilarityQueries {
   }
 
   private val incrementalKeeper: Q = (s, dir) =>
-    incrementalKeeperAt(s, dir, batchCutoff(s, dir))
+    incrementalKeeperAt(s, dir, incrementalCutoff(s, dir))
 
   /** 64-bit SimHash of whitespace words — delegates to the single
     * implementation in [[graft.functions.SimHash64.hash]] so the typed
@@ -947,9 +933,8 @@ object SimilarityQueries {
     */
   private[graft] def ivfSeedCountFromMarker(s: SparkSession, dir: String): Boolean = {
     implicit val sp = s
-    val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
-    val (centStage, snap) = ivfCentIdentity(dir, k)
-    ivfSeedCount(s, centStage, snap, dir, k)._2
+    val (centStage, snap) = ivfCentIdentity(dir, IvfK)
+    ivfSeedCount(s, centStage, snap, dir, IvfK)._2
   }
 
   /** The centroid stage's (stage name, snapshot id) — ONE construction
@@ -1336,9 +1321,9 @@ object SimilarityQueries {
     * k-means coarse quantizer (default 16 centroids, seeded from the
     * first 16 vectors, refined by 2 fixed-point Lloyd iterations)
     * partitions the corpus into inverted lists; probes scan only their
-    * nprobe=2 nearest lists. k/nprobe scale via SPARK_GRAFT_IVF_K /
-    * SPARK_GRAFT_IVF_NPROBE for the 10 M AnnScaleProbe run (k should
-    * track ~sqrt N); defaults are the pinned configuration.
+    * nprobe=2 nearest lists ([[IvfK]], [[IvfNProbe]]: the pinned
+    * configuration). At scale k should track ~sqrt N: the 10 M run of
+    * `graft.Probe ann` passes its own k and nprobe through [[annIvfAt]].
     *
     * Like s04, the index is PERSISTED once per embeddings snapshot via
     * Checkpoint: a 16-row centroid table plus the corpus
@@ -1355,13 +1340,14 @@ object SimilarityQueries {
     * (vec_id, embedding, cid) assignment table (cid-partitioned) and the
     * collected centroids — shared by [[annIvf]] (probe path) and
     * [[clusterStats]] (s11: the quantizer read as an analytics table).
-    * k is env-tunable for the scale probe only; stage names + snapshots
-    * carry k so probe runs never collide with the pinned-index stages.
+    * Only `graft.Probe ann` passes a k other than [[IvfK]]; stage names +
+    * snapshots carry k so probe runs never collide with the pinned-index
+    * stages.
     */
-  private[graft] def ivfIndex(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) = {
+  private[graft] def ivfIndex(s: SparkSession, dir: String,
+      k: Int = IvfK): (DataFrame, Array[Array[Double]]) = {
     implicit val sp = s
     import sp.implicits._
-    val k = sys.env.getOrElse("SPARK_GRAFT_IVF_K", "16").toInt
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
     val (n, _) = embSnapshot(dir)
     val (centStage, snap) = ivfCentIdentity(dir, k)
@@ -1395,11 +1381,20 @@ object SimilarityQueries {
     (assigned, centroids)
   }
 
-  private val annIvf: Q = (s, dir) => {
+  /** s07's quantizer size and probed-list count. */
+  private[graft] val IvfK = 16
+  private[graft] val IvfNProbe = 2
+
+  private val annIvf: Q = (s, dir) => annIvfAt(s, dir, IvfK, IvfNProbe)
+
+  /** s07 at a caller-chosen quantizer size `k` and `nProbe` probed
+    * lists; the registered query runs the pinned [[IvfK]] / [[IvfNProbe]].
+    */
+  private[graft] def annIvfAt(s: SparkSession, dir: String, k: Int,
+      nProbe: Int): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val nProbe = sys.env.getOrElse("SPARK_GRAFT_IVF_NPROBE", "2").toInt
-    val (assigned, centroids) = ivfIndex(s, dir)
+    val (assigned, centroids) = ivfIndex(s, dir, k)
     val probeRows = embsBelow(dir, 10).collect()
       .flatMap { case (id, v) => nearestCids(v, centroids, nProbe).map(c => (id, v, c)) }
     val probes = probeRows.toSeq.toDF("probe_id", "probe", "cid")
@@ -1433,7 +1428,7 @@ object SimilarityQueries {
     * 0.66 ADC/window-50, ~1.0 ADC/window-100. A float rerank (exact
     * cosine, shared math with s03) picks the final top-5. Deterministic;
     * recall + exact-cosine equality vs s03 asserted in QueriesSpec and
-    * at scale in AnnScaleProbe. The int8 table itself persists via
+    * at scale by `graft.Probe ann`. The int8 table itself persists via
     * Checkpoint (like s04's buckets and s07's lists), so query time
     * skips the quantization pass and scans the 4x-smaller table only.
     */

@@ -81,7 +81,7 @@ object ApsRules {
     // ONE matcher per pattern per call, reset(line) per line — the
     // previous per-line matcher allocation (4 Matchers x ~30 lines) was
     // the largest term left in the extraction allocation profile after
-    // the slicer rewrite (AllocProbe); stripped is likewise computed
+    // the slicer rewrite (`graft.Probe alloc`); stripped is likewise computed
     // once per line instead of three times
     val cm = contactPat.matcher("")
     val am = affilPat.matcher("")

@@ -42,7 +42,7 @@ object Text {
     * each previously went through `String.replaceAll`, which compiles a
     * fresh Pattern on EVERY call (~20 calls/page in the extraction hot
     * path; the largest per-page allocation term in the HTML shapes'
-    * AllocProbe profile).
+    * `graft.Probe alloc` profile).
     */
   private val tag = Pattern.compile("<[^>]+>")
   def tagStrip(html: String): String =

@@ -26,7 +26,7 @@ object Canonicalize {
 
   /** Crossover between the driver union-find and distributed label
     * propagation, in edges — MEASURED, not estimated, by
-    * [[graft.CcCrossoverProbe]] on the worst-case shape for both sides
+    * `graft.Probe cc` on the worst-case shape for both sides
     * (all-distinct string vertices in 1,000 long chains; local[32]):
     *
     *   edges   union-find wall / driver-heap peak   label-prop wall

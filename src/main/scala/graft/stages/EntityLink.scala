@@ -66,15 +66,18 @@ object EntityLink {
     sig
   }
 
-  /** Band keys of a name: Bands entries hashing RowsPerBand signature
-    * slots each. Same band key in the same band => LSH candidate pair.
+  /** Key of band `b` of a MinHash signature: the hash of its
+    * RowsPerBand slots. Same band key in the same band => LSH candidate
+    * pair. The one band-key recipe, shared by name linking and document
+    * near-dup blocking (`SimilarityQueries.bandedOf`).
     */
+  def bandKey(sig: Array[Long], b: Int): Long =
+    MurmurHash3.arrayHash(sig.slice(b * RowsPerBand, (b + 1) * RowsPerBand), 0x85ebca6b).toLong
+
+  /** Band keys of a name: (band, [[bandKey]]) for each of the Bands. */
   def bandKeys(name: String): Seq[(Int, Long)] = {
     val sig = signature(shingles(name))
-    (0 until Bands).map { b =>
-      val slice = sig.slice(b * RowsPerBand, (b + 1) * RowsPerBand)
-      (b, MurmurHash3.arrayHash(slice, 0x85ebca6b).toLong)
-    }
+    (0 until Bands).map(b => (b, bandKey(sig, b)))
   }
 
   /** Distinct (kind, name) -> verified same-entity edges
@@ -183,14 +186,20 @@ object EntityLink {
   }
 
   /** Exact-alias edges from a canonical dictionary (kind, alias,
-    * canonical): broadcast hash join, no shuffle of the mention side.
+    * canonical): broadcast hash join, no shuffle or aggregate of the
+    * mention side.
+    *
+    * Precondition: `names` is already distinct on (kind, name), as
+    * every caller's is ([[namesOf]], the name set `Pipeline.entities`
+    * checkpoints). A duplicate name only repeats its edges, which
+    * `Canonicalize.connectedComponents` ignores; deduplicating here
+    * would cost an aggregate and a shuffle in every entities build.
     */
   def dictEdges(names: DataFrame, dict: DataFrame): DataFrame = {
     // (kind, alias) is the hash-join key — joining on kind alone and
     // filtering afterwards would probe every dictionary entry of that
-    // kind per mention (quadratic once the dictionary grows). Dedup here
-    // keeps the edge set duplicate-free for any caller.
-    names.select("kind", "name").distinct().as("n")
+    // kind per mention (quadratic once the dictionary grows).
+    names.select("kind", "name").as("n")
       .join(broadcast(dict.as("d")),
         col("n.kind") === col("d.kind") && col("n.name") === col("d.alias"))
       .filter(col("n.name") =!= col("d.canonical"))

@@ -137,6 +137,54 @@ class LinkingSpec extends SparkSpec {
       ents("Phys. Rev. Research") == "Physical Review Research")
   }
 
+  test("dictEdges plans no shuffle or aggregate over a distinct name set; entities rows hold") {
+    import spark.implicits._
+    val dict = Pipeline.canonicalDict(spark)
+    val names = Seq(("inst", "Westlake University"),
+      ("inst", "Westlake Institute for Advanced Study"), ("venue", "Phys. Rev. Research"),
+      ("venue", "PRX Quantum")).toDF("kind", "name").localCheckpoint(true)
+    // AQE wraps the tree in AdaptiveSparkPlanExec (opaque to collect),
+    // so build this one plan with AQE off to walk the physical tree
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = EntityLink.dictEdges(names, dict).queryExecution.executedPlan
+      val extra = plan.collect {
+        case p if p.nodeName.contains("Aggregate") ||
+          p.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec] => p.nodeName
+      }
+      assert(extra.isEmpty, s"names side shuffled or aggregated:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+
+    // a repeated name only repeats its edges, and CC ignores repeats
+    val dup = names.union(names)
+    def edges(n: org.apache.spark.sql.DataFrame) =
+      EntityLink.dictEdges(n, dict).as[(String, String, String)].collect().sorted.toSeq
+    val once = edges(names)
+    assert(once.length == 2 && edges(dup) == once.flatMap(e => Seq(e, e)), once)
+    def cc(n: org.apache.spark.sql.DataFrame) =
+      Canonicalize.connectedComponents(EntityLink.dictEdges(n, dict).select("src", "dst"))
+        .as[(String, String)].collect().toMap
+    assert(cc(dup) == cc(names))
+
+    // entities over mentions that repeat names: one row per distinct
+    // (kind, name), each mapped to its component minimum
+    val mentions = Seq(
+      Mention("d1", "inst", "Westlake University"),
+      Mention("d2", "inst", "Westlake Institute for Advanced Study"),
+      Mention("d3", "inst", "Westlake University"),
+      Mention("d1", "author", "Nicholas O'Dea"), Mention("d2", "author", "Nicholas ODea"),
+      Mention("d3", "venue", "Phys. Rev. Research"), Mention("d4", "venue", "Phys. Rev. Research"),
+      Mention("d4", "venue", "PRX Quantum")).toDS()
+    val rows = Pipeline.entities(spark, mentions).as[(String, String, String)].collect().sorted.toSeq
+    assert(rows == Seq(
+      ("author", "Nicholas O'Dea", "Nicholas O'Dea"),
+      ("author", "Nicholas ODea", "Nicholas O'Dea"),
+      ("inst", "Westlake Institute for Advanced Study", "Westlake Institute for Advanced Study"),
+      ("inst", "Westlake University", "Westlake Institute for Advanced Study"),
+      ("venue", "PRX Quantum", "PRX Quantum"),
+      ("venue", "Phys. Rev. Research", "Phys. Rev. Research")), rows)
+  }
+
   test("pipeline canonical map links the full fixture corpus deterministically") {
     import spark.implicits._
     val files = spark.createDataset(graft.fixtures.FixtureCorpus.baseRows)(
