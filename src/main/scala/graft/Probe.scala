@@ -1,5 +1,6 @@
 package graft
 
+import graft.exec.IndexStore
 import graft.fixtures.FixtureCorpus
 import graft.queries.SimilarityQueries
 import graft.stages.{Canonicalize, EntityLink, MentionDetect}
@@ -312,6 +313,15 @@ object Probe {
 
   // ---- dedup ----------------------------------------------------------
 
+  /** Does s01's edge count over `members` identical pages match the
+    * bucket cap? At or below [[IndexStore.GiantBucketCap]] their bucket is
+    * enumerated in full, C(members, 2) pairs; above it the spanning double
+    * chain emits fewer than 3 edges per member.
+    */
+  private[graft] def giantClusterEdgesOk(members: Long, edges: Long): Boolean =
+    if (members <= IndexStore.GiantBucketCap) edges == members * (members - 1) / 2
+    else edges < 3 * members
+
   /** Member j of a cluster replaces j base words at deterministic
     * scattered positions with member-unique tokens.
     */
@@ -410,7 +420,8 @@ object Probe {
     val navN = navEnd - clusterEnd
     println(s"PROBE giant cluster: $navChain chain edges for $navN identical pages " +
       s"(all-pairs would be ${navN * (navN - 1) / 2})")
-    require(navChain < 3 * navN, "spanning-chain guard failed: giant bucket exploded")
+    require(giantClusterEdgesOk(navN, navChain),
+      s"s01 emitted $navChain edges for $navN identical pages (bucket cap ${IndexStore.GiantBucketCap})")
 
     // s10 over the warm pair table: CC + keeper attach across all N docs
     val (s10df, wS10) = timed {
@@ -612,7 +623,7 @@ object Probe {
       SimilarityQueries.incrementalNeardupAt(spark, dir, cutoff)
         .select("a", "b").collect())
     require(pairsCold.isEmpty, "pre-append run emitted pairs with an empty delta")
-    require(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    require(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)),
       "old-bands index not committed after the cold build")
     println(f"PROBE s12 cpus=$cpus index build (old=$cutoff docs) wall=$wCold%.2f")
 
@@ -625,11 +636,11 @@ object Probe {
     val deltaN = n - cutoff
     println(s"PROBE delta batch appended: $deltaN docs " +
       s"(5000 cross, 2000 newnew, 3000 boilerplate)")
-    require(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    require(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)),
       "tail append invalidated the old-bands index — warm path unreachable")
     // post-append, the default id-tail cutoff rule resolves to the same
     // pinned boundary, so the registered production query is usable as-is
-    val gotCutoff = SimilarityQueries.incrementalCutoff(spark, dir)
+    val gotCutoff = IndexStore.incrementalCutoff(spark, dir)
     require(gotCutoff == cutoff, s"production cutoff $gotCutoff != layout cutoff $cutoff")
 
     // planted truth (exact Jaccard, same generator, NO LSH): cross pairs
@@ -706,7 +717,7 @@ object Probe {
       SimilarityQueries.incrementalKeeperAt(spark, dir, cutoff)
         .filter(col("is_dropped")).count())
     val (_, wK13Build) = s13()
-    require(SimilarityQueries.nd13KeepersAreWarm(spark, dir, cutoff),
+    require(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldKeepers(spark, dir, cutoff)),
       "old-keeper table not committed after the build run")
     val (nDropped, wK13) = s13()
     println(f"PROBE s13 cpus=$cpus keeper_build_run=$wK13Build%.2f warm=$wK13%.2f " +
@@ -761,8 +772,13 @@ object Probe {
 
   /** Plan dump: `.explain("formatted")` for every declared query over
     * `sfDir` to `plans/r06/<name>_<tag>.txt`, restricted to `only` when
-    * given. Pure planning — no jobs execute — so it is safe to run
-    * alongside measurement work.
+    * given. The queries' results are not computed, but Spark jobs do
+    * run while each DataFrame is constructed: an index-backed query
+    * (s01, s04, s06, s07, s09-s13) fingerprints its input and builds and
+    * commits any index that is not warm, and eager steps (s07's
+    * centroid collect, s12's `localCheckpoint`, the CC path probe) run
+    * too. Plans of two builds compare after `#<exprId>` suffixes and
+    * file paths are normalized.
     */
   def plans(spark: SparkSession, sfDir: String, tag: String,
       only: Option[Set[String]]): Unit = {

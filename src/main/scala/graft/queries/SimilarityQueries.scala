@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.exec.IndexStore
+import graft.exec.IndexStore.{GiantBucketCap, GiantBucketReps}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.stages.EntityLink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -110,7 +112,7 @@ object SimilarityQueries {
     * pathological minority), so the normal path's shuffle width is
     * unchanged.
     */
-  def neardupPairsOf(docsDf: DataFrame, maxFullBucket: Int = 256): DataFrame = {
+  def neardupPairsOf(docsDf: DataFrame, maxFullBucket: Int = GiantBucketCap): DataFrame = {
     val sp = docsDf.sparkSession
     import sp.implicits._
     val d = docsDf.select("doc_id", "text").as[(Long, String)]
@@ -298,126 +300,29 @@ object SimilarityQueries {
     * are a pure function of the documents table, but every execution
     * (and s10, which runs s01 inside its keeper composition) was
     * re-shingling and re-joining the whole corpus. Same pattern as
-    * s06's persisted blocking table, keyed on [[docsSnapshot]] (count +
-    * id-sum + sampled-content hash + recursive file-status listing), so
-    * any rewrite of the documents table invalidates and rebuilds once.
+    * s06's persisted blocking table, keyed on the documents snapshot
+    * ([[IndexStore.neardupPairs]]), so any rewrite of the documents
+    * table invalidates and rebuilds once.
     * The pair table is metadata-sized (near-dup pairs, not documents),
     * so the steady-state read is trivially cheap. No row check: expected
     * rows are unknowable up front for a pair table.
     */
-  private[graft] def verifiedNeardupPairs(s: SparkSession, dir: String): DataFrame = {
-    implicit val sp = s
-    val (_, snap) = docsSnapshot(dir)
-    annIndex.stage(s, s"nd01_pairs_${dirTag(dir)}", snap) {
-      computeNeardupPairs(s, dir)
-    }
-  }
+  private[graft] def verifiedNeardupPairs(s: SparkSession, dir: String): DataFrame =
+    indexes.stage(s, IndexStore.neardupPairs(s, dir))(computeNeardupPairs(s, dir))
 
   private val minhashDedup: Q = (s, dir) =>
     verifiedNeardupPairs(s, dir).orderBy("a", "b")
 
   // ---- s12: incremental near-dup dedup (delta batch vs indexed corpus) ----
 
-  /** Bucket-size cap (same constant as [[neardupPairsOf]]'s default) and
-    * the number of giant-bucket representatives kept per (band, bkey).
-    */
-  private val Nd12Cap = 256
-  private val Nd12Reps = 8
-
-  /** The incremental convention for "the new batch": documents are
-    * append-only with monotonically increasing ids, so the delta is the
-    * id TAIL — cutoff = floor(max_id / 10) * 9, i.e. roughly the last
-    * 10% of the id range. Deterministic given the table (the stand-in
-    * for a real ingest's batch boundary, like t15's %7 eval convention;
-    * a production caller passes its own cutoff). The max() is a
-    * column-pruned scan of doc_id only.
-    */
-  private[graft] def incrementalCutoff(s: SparkSession, dir: String): Long = {
-    implicit val sp = s
-    // memoized on (dir, file-status fingerprint) exactly like
-    // snapshotCache (round 6): the cutoff is a pure function of the
-    // documents table, and the metadata-only listing ALWAYS re-runs and
-    // gates reuse — any rewrite/append changes the fingerprint and
-    // forces a fresh max() scan, so no result survives a data change
-    cutoffCache.getOrElseUpdate((dir, fileStatusFp(dir, "documents.parquet")),
-      docs(dir).agg(coalesce(max("doc_id"), lit(0L))).head().getLong(0) / 10 * 9)
-  }
-
-  private val cutoffCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
-
-  /** Fingerprint of the documents SLICE doc_id < cutoff — the identity
-    * the s12 old-bands index is keyed on. Keying on the whole-table
-    * [[docsSnapshot]] would make ANY append invalidate the index, so
-    * the warm O(delta) path would exist only for a byte-identical
-    * table — while the production sequence s12 exists for (append a
-    * batch, dedup it against the indexed old corpus) paid a full O(N)
-    * re-shingle every batch.
-    *
-    * Terms: the slice's logical identity (count + id-set hash) PLUS a
-    * file-status fold over exactly the parquet files that CARRY a
-    * sub-cutoff row (per-file min doc_id from the same single id-column
-    * scan). Any change to old content — wherever it lives, however
-    * performed — must rewrite one of those files (new length/mtime/
-    * name), so the snapshot moves; appended delta-only files never
-    * enter the fold, so a tail append leaves the committed marker
-    * valid. This is strictly stronger than a sampled content hash (an
-    * in-place rewrite of ANY old doc invalidates, not just one inside
-    * the sample window) and cheaper: one doc_id-only scan, no text
-    * read. Conservative edge: rewriting a MIXED file (old + delta rows
-    * written together) for a delta-side reason rebuilds unnecessarily —
-    * correctness-safe. The whole-table file listing is the MEMO key
-    * only: any file change re-runs the cheap fingerprint job; only a
-    * change to old-bearing files changes the snapshot string.
-    */
-  private def docsSliceSnapshot(dir: String, cutoff: Long)(implicit s: SparkSession): String = {
-    val fileFp = fileStatusFp(dir, "documents.parquet")
-    snapshotCache.getOrElseUpdate((s"$dir#documents<$cutoff", fileFp), {
-      val perFile = docs(dir)
-        .select(input_file_name().as("f"), col("doc_id"))
-        .groupBy("f").agg(
-          min(col("doc_id")).as("minId"),
-          count(when(col("doc_id") < cutoff, 1)).as("n"),
-          coalesce(sum(when(col("doc_id") < cutoff, hash(col("doc_id")))), lit(0L))
-            .as("idsum"))
-        .collect()
-      def norm(p: String): String =
-        new org.apache.hadoop.fs.Path(p).toUri.getPath
-      val n = perFile.map(_.getLong(2)).sum
-      val idsum = perFile.map(_.getLong(3)).sum
-      val oldFiles = perFile.filter(_.getLong(1) < cutoff).map(r => norm(r.getString(0))).toSet
-      val oldFp = foldStatuses(fileStatusList(dir, "documents.parquet")
-        .filter { case (p, _, _) => oldFiles(norm(p)) })
-      (n, s"$n-$idsum-of$oldFp")
-    })._2
-  }
-
-  /** The old-bands stage's snapshot id — ONE construction shared by
-    * [[nd12Bands]] and the [[nd12IndexIsWarm]] spec hook (the
-    * [[ivfCentIdentity]] rationale: a format edit reaching only one
-    * site would make the warm-path spec probe a nonexistent marker).
-    */
-  private def nd12Snap(dir: String, cutoff: Long)(implicit s: SparkSession): String =
-    s"${docsSliceSnapshot(dir, cutoff)}-cut$cutoff-cap${Nd12Cap}r${Nd12Reps}v1"
-
-  /** Spec hook: is the s12 old-bands index currently committed and
-    * valid for (dir, cutoff) WITHOUT building it? True means the next
-    * incremental run takes the warm O(delta) path — the property the
-    * append-survival spec asserts across an ingest batch.
-    */
-  private[graft] def nd12IndexIsWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
-    implicit val sp = s
-    annIndex.isComplete(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff))
-  }
-
   /** The s12 incremental index: ONE persisted table of the OLD corpus's
     * band rows — (doc_id, band, bkey, n_old, is_rep) — keyed on the
-    * sub-cutoff SLICE snapshot ([[nd12Snap]]: a tail append leaves the
-    * index valid; only a change to the old corpus itself, or a cutoff
-    * move, rebuilds). `n_old` is the bucket's old-side
+    * sub-cutoff SLICE snapshot ([[IndexStore.oldBands]]: a tail append
+    * leaves the index valid; only a change to the old corpus itself, or
+    * a cutoff move, rebuilds). `n_old` is the bucket's old-side
     * population (precomputed at build so a delta run never windows over
-    * the full corpus); buckets over [[Nd12Cap]] additionally mark
-    * [[Nd12Reps]] REPRESENTATIVES evenly spaced in [[sigOrderKey]]
+    * the full corpus); buckets over [[GiantBucketCap]] additionally mark
+    * [[GiantBucketReps]] REPRESENTATIVES evenly spaced in [[sigOrderKey]]
     * order (small-bucket rows are all is_rep). A giant bucket is a
     * genuine dup cluster (or a band-level false-positive mix of a few) —
     * a delta member only needs SOME verified edge into it for the s10
@@ -431,21 +336,21 @@ object SimilarityQueries {
   private def nd12Bands(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    annIndex.stage(s, s"nd12_bands_${dirTag(dir)}", nd12Snap(dir, cutoff)) {
+    indexes.stage(s, IndexStore.oldBands(s, dir, cutoff)) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = bandedOf(old).withColumn("n_old",
         count(lit(1)).over(Window.partitionBy("band", "bkey")))
-      val small = sized.filter(col("n_old") <= Nd12Cap)
+      val small = sized.filter(col("n_old") <= GiantBucketCap)
         .withColumn("is_rep", lit(true))
         .select("doc_id", "band", "bkey", "n_old", "is_rep")
-      val giant = sized.filter(col("n_old") > Nd12Cap)
+      val giant = sized.filter(col("n_old") > GiantBucketCap)
       val giantKeyed = giant
         .join(sigKeysOf(old, giant.select("doc_id")), "doc_id")
         .withColumn("__rk", row_number().over(
           Window.partitionBy("band", "bkey").orderBy(col("__sig"), col("doc_id"))))
         .withColumn("is_rep", pmod(col("__rk") - 1,
-          greatest(ceil(col("n_old") / lit(Nd12Reps.toDouble)), lit(1L))) === 0)
+          greatest(ceil(col("n_old") / lit(GiantBucketReps.toDouble)), lit(1L))) === 0)
         .select("doc_id", "band", "bkey", "n_old", "is_rep")
       small.unionByName(giantKeyed)
     }
@@ -454,7 +359,7 @@ object SimilarityQueries {
   /** s12: INCREMENTAL near-dup dedup — the production shape of a
     * continuously-ingesting training pipeline, where re-running the full
     * s01 build over old + new is O(corpus) per batch. The delta (ids >=
-    * [[incrementalCutoff]]) is shingled/banded FRESH — O(delta) — and
+    * the cutoff) is shingled/banded FRESH — O(delta) — and
     * its band rows BROADCAST-join the persisted old-bands index, so the
     * old corpus is neither re-shingled nor re-shuffled (an un-hinted
     * join would plan SMJ and shuffle all O(N) old band rows every
@@ -462,8 +367,8 @@ object SimilarityQueries {
     * O(delta) banding lineage per broadcast build). Guards are
     * symmetric: old giant buckets expose sig-spaced representatives
     * (index build, above); delta buckets over the cap probe with
-    * [[Nd12Reps]] id-spaced members of their own, the rest of the delta
-    * cluster connecting through the delta self-run's chain edges.
+    * [[GiantBucketReps]] id-spaced members of their own, the rest of the
+    * delta cluster connecting through the delta self-run's chain edges.
     * Candidates verify with the shared exact-Jaccard [[verifyPairs]];
     * new-new pairs come from the UNCHANGED full engine run on the delta
     * alone. Output = s01's schema (a, b, jaccard) restricted to pairs
@@ -490,13 +395,13 @@ object SimilarityQueries {
   private val Nd12BroadcastMaxDelta = 5000000L
 
   /** The registered s12 and s13 run at the deterministic id-tail
-    * cutoff the oracle pins; a production ingest pins its own batch
-    * boundary (so tail appends keep the old-side indexes warm) by
-    * calling [[incrementalNeardupAt]] / [[incrementalKeeperAt]] with it,
-    * one cutoff for both ops.
+    * cutoff the oracle pins ([[IndexStore.incrementalCutoff]]); a
+    * production ingest pins its own batch boundary (so tail appends keep
+    * the old-side indexes warm) by calling [[incrementalNeardupAt]] /
+    * [[incrementalKeeperAt]] with it, one cutoff for both ops.
     */
   private val incrementalNeardup: Q = (s, dir) =>
-    incrementalNeardupAt(s, dir, incrementalCutoff(s, dir))
+    incrementalNeardupAt(s, dir, IndexStore.incrementalCutoff(s, dir))
 
   private[graft] def incrementalNeardupAt(s: SparkSession, dir: String,
       cutoff: Long): DataFrame =
@@ -529,16 +434,16 @@ object SimilarityQueries {
     // table would add a full doc_id scan to the warm path whose point
     // is minimizing O(N) residuals
     val deltaN = dSized.count() / EntityLink.Bands
-    val probe = dSized.filter(col("__bsz") <= Nd12Cap)
-      .unionByName(dSized.filter(col("__bsz") > Nd12Cap)
+    val probe = dSized.filter(col("__bsz") <= GiantBucketCap)
+      .unionByName(dSized.filter(col("__bsz") > GiantBucketCap)
         .withColumn("__rk", row_number().over(
           Window.partitionBy("band", "bkey").orderBy("doc_id")))
         .filter(pmod(col("__rk") - 1,
-          greatest(ceil(col("__bsz") / lit(Nd12Reps.toDouble)), lit(1L))) === 0)
+          greatest(ceil(col("__bsz") / lit(GiantBucketReps.toDouble)), lit(1L))) === 0)
         .drop("__rk"))
       .select(col("doc_id").as("b"), col("band"), col("bkey"))
     val probeSide = if (deltaN <= Nd12BroadcastMaxDelta) broadcast(probe) else probe
-    val cand = bands.filter(col("n_old") <= Nd12Cap || col("is_rep"))
+    val cand = bands.filter(col("n_old") <= GiantBucketCap || col("is_rep"))
       .join(probeSide, Seq("band", "bkey"))
       .select(col("doc_id").as("a"), col("b"))
       .distinct()
@@ -549,7 +454,7 @@ object SimilarityQueries {
         .select("doc_id", "text").as[(Long, String)],
       delta)
     // delta self-run consumes the SAME materialized banded frame
-    val newnew = pairsFromSized(dSized, delta, Nd12Cap)
+    val newnew = pairsFromSized(dSized, delta, GiantBucketCap)
     cross.unionByName(newnew)
   }
 
@@ -568,21 +473,13 @@ object SimilarityQueries {
   private def nd13OldKeepers(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    annIndex.stage(s, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1") {
+    indexes.stage(s, IndexStore.oldKeepers(s, dir, cutoff)) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
       val sized = nd12Bands(s, dir, cutoff)
         .select(col("doc_id"), col("band"), col("bkey"), col("n_old").as("__bsz"))
-      pairedKeepers(pairsFromSized(sized, old, Nd12Cap))
+      pairedKeepers(pairsFromSized(sized, old, GiantBucketCap))
     }
-  }
-
-  /** Spec hook, twin of [[nd12IndexIsWarm]]: is the s13 old-keeper
-    * table committed and valid for (dir, cutoff) without building it?
-    */
-  private[graft] def nd13KeepersAreWarm(s: SparkSession, dir: String, cutoff: Long): Boolean = {
-    implicit val sp = s
-    annIndex.isComplete(s, s"nd13_keep_${dirTag(dir)}", s"${nd12Snap(dir, cutoff)}-keepv1")
   }
 
   /** s13: INCREMENTAL dedup keeper — per-batch keeper assignments
@@ -641,7 +538,7 @@ object SimilarityQueries {
   }
 
   private val incrementalKeeper: Q = (s, dir) =>
-    incrementalKeeperAt(s, dir, incrementalCutoff(s, dir))
+    incrementalKeeperAt(s, dir, IndexStore.incrementalCutoff(s, dir))
 
   /** 64-bit SimHash of whitespace words — delegates to the single
     * implementation in [[graft.functions.SimHash64.hash]] so the typed
@@ -761,10 +658,18 @@ object SimilarityQueries {
     val e = embs(dir).withColumn("emb", col("embedding").cast("array<double>"))
     val probes = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("emb").as("probe"))
+    cosineTop5(e.crossJoin(broadcast(probes)).filter(col("vec_id") =!= col("probe_id")),
+      col("probe"), col("emb"))
+  }
+
+  /** The exact-cosine top 5 per probe shared by s03, s04, s07 and s09:
+    * `pairs` holds (probe_id, vec_id) candidates with their two vectors
+    * as double arrays in `probe` and `emb`. Ties rank by vec_id; the
+    * cosine is rounded to 6 places, as the s03 oracle does.
+    */
+  private def cosineTop5(pairs: DataFrame, probe: Column, emb: Column): DataFrame = {
     val w = Window.partitionBy(col("probe_id")).orderBy(col("cos_raw").desc, col("vec_id"))
-    e.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos_raw", cosineSim(col("probe"), col("emb")))
+    pairs.withColumn("cos_raw", cosineSim(probe, emb))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("probe_id"), col("vec_id"), round(col("cos_raw"), 6).as("cosine"), col("rank"))
@@ -830,17 +735,16 @@ object SimilarityQueries {
     import sp.implicits._
     val tables = 8
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
-    val (n, snapBase) = embSnapshot(dir)
-    val bits = lshBits(n)
+    val emb = IndexStore.embeddings(s, dir)
+    val bits = lshBits(emb.rows)
     val planes = lshPlanes(7000, tables, bits, dim = 64)
-    val snap = s"$snapBase-b$bits"
-    // NOT spreadBuild (unlike s06's nd8): s04's probe side is 10 query
-    // vectors — the warm-path work per index row is trivial, and a
+    // NOT IndexStore.spread (unlike s06's nd8): s04's probe side is 10
+    // query vectors — the warm-path work per index row is trivial, and a
     // multi-file layout measured ~2.5x WORSE (32 near-empty tasks of
     // pure scheduling overhead vs one cheap task). s06 keeps the spread
     // because its probe side is the whole corpus (~1M candidate pairs).
-    val idx = annIndex.stage(s, s"lsh8_${dirTag(dir)}", snap,
-        expectedRows = Some(n * tables)) {
+    val idx = indexes.stage(s, IndexStore.lshBuckets(dir, emb, bits),
+        expectedRows = Some(emb.rows * tables)) {
       e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket")
@@ -863,216 +767,18 @@ object SimilarityQueries {
     val ef = embs(dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val pf = ef.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("emb").as("probe"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cos_raw").desc, col("vec_id"))
     // candidate set is small (O(log N) per probe) -> broadcast it; the
     // embeddings scan streams through the join exactly once
-    ef.join(broadcast(cands), Seq("vec_id"))
-      .join(broadcast(pf), Seq("probe_id"))
-      .withColumn("cos_raw", cosineSim(col("probe"), col("emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("probe_id"), col("vec_id"), round(col("cos_raw"), 6).as("cosine"), col("rank"))
-      .orderBy("probe_id", "rank")
+    cosineTop5(ef.join(broadcast(cands), Seq("vec_id")).join(broadcast(pf), Seq("probe_id")),
+      col("probe"), col("emb"))
   }
 
-  /** Build-side parallelism restore for the persisted index stages
-    * (round-6, guide §2.5/§6): the build lineages start at the driver's
-    * single-split embeddings scan, so the flatMap/map projection AND the
-    * committed parquet layout came out single-partition — and every warm
-    * probe-path scan of that one-file index then ran its join/dedup work
-    * in ONE task (measured: the s06 candidate join + dedup was a 4-5 s
-    * single-slot job). A conditional round-robin repartition in the
-    * build (no-op when the source already yields >= half-parallelism
-    * splits, i.e. any production layout) parallelizes the build AND
-    * leaves a multi-file index whose warm reads split naturally — no
-    * query-time exchange added. Stage snapshots carry a -p2 suffix so
-    * committed one-file indexes rebuild once into the new layout.
+  /** The persisted ANN/dedup indexes, under `GRAFT_ANN_INDEX_ROOT`
+    * (default `<java.io.tmpdir>/graft_ann_index`).
     */
-  private def spreadBuild(df: DataFrame): DataFrame = {
-    val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 >= cores) df else df.repartition(cores)
-  }
-
-  /** The persisted ANN/dedup index stages, committed and row-checked by
-    * [[graft.exec.Checkpoint]] under one root (overridable for tests).
-    * The rows each index stage records on its marker are read in O(1),
-    * so a probe validates its index without the O(N) read-back
-    * `count()` the round-3 s04 paid on every query.
-    */
-  private lazy val annIndex = graft.exec.Checkpoint(
+  private[graft] lazy val indexes = new IndexStore(
     sys.env.getOrElse("GRAFT_ANN_INDEX_ROOT",
-      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index"), "ann-index")
-
-  /** s07's quantizer seed count — #(vec_id < k), not min(n, k), because
-    * nothing guarantees dense ids from 0 (a filtered/offset corpus would
-    * otherwise fail validation forever after a futile rebuild). Warm
-    * path: the committed centroid-stage marker already records exactly
-    * this value for the CURRENT snapshot (the stage writes one centroid
-    * row per seed) — an O(1) marker read, no Spark job (round-4 VERDICT
-    * #2: the old unconditional count ran on every query, even
-    * warm-index, through a non-pushable typed filter). Build path (or
-    * unvalidatable marker): count the pruned projection — the Column
-    * predicate pushes to the parquet scan, so the job reads the vec_id
-    * column of the few row groups holding the seeds, not the corpus.
-    * Returns (seedN, fromMarker) so the spec can assert the warm path
-    * launches no job.
-    */
-  private[graft] def ivfSeedCount(s: SparkSession,
-      centStage: String, snap: String, dir: String, k: Int): (Long, Boolean) = {
-    implicit val sp = s
-    annIndex.committedRowsFor(s, centStage, snap) match {
-      case Some(rows) if rows > 0 => (rows, true)
-      case _ =>
-        (embs(dir).filter(col("vec_id") < k).select("vec_id").count(), false)
-    }
-  }
-
-  /** Spec hook: does s07's seed count currently short-circuit to the
-    * committed centroid marker for `dir` (O(1) read, no count job)?
-    * Recomputes the same stage name / snapshot the query derives.
-    */
-  private[graft] def ivfSeedCountFromMarker(s: SparkSession, dir: String): Boolean = {
-    implicit val sp = s
-    val (centStage, snap) = ivfCentIdentity(dir, IvfK)
-    ivfSeedCount(s, centStage, snap, dir, IvfK)._2
-  }
-
-  /** The centroid stage's (stage name, snapshot id) — ONE construction
-    * shared by [[annIvf]] and the [[ivfSeedCountFromMarker]] spec hook.
-    * The two strings must stay byte-identical: a format edit reaching
-    * only one site would make the warm-path spec probe a nonexistent
-    * (or stale same-format) marker.
-    */
-  private def ivfCentIdentity(dir: String, k: Int)(implicit s: SparkSession): (String, String) = {
-    val (_, snapBase) = embSnapshot(dir)
-    (s"ivf${k}_cent_${dirTag(dir)}", s"$snapBase-k${k}i2")
-  }
-
-  /** Embeddings-snapshot fingerprint shared by the persisted ANN
-    * indexes (s04 LSH, s07 IVF, s09 SQ8): full count + id-set hash
-    * (vec_id column only — tiny) PLUS a content hash over the first 256
-    * embeddings (the filter pushes to the scan, so this reads a few
-    * row groups, not the corpus) PLUS a whole-table file-status
-    * fingerprint (name, length, mtime of every parquet part — a pure
-    * metadata LISTING, zero data read). The file signal closes the
-    * round-3 gap where a regenerated table with identical count, ids,
-    * and first 256 vectors but different later rows silently reused a
-    * stale index: any rewrite touches part files, so the snapshot id
-    * moves even when the sampled content doesn't. An exact full-content
-    * hash would re-scan all embeddings per query — the very cost a
-    * persisted index exists to amortize.
-    */
-  private def embSnapshot(dir: String)(implicit s: SparkSession): (Long, String) =
-    tableSnapshot(dir, "embeddings.parquet", embs(dir), "vec_id", "embedding")
-
-  /** Documents-table twin of [[embSnapshot]], keying s01's persisted
-    * pair table: count + doc_id-set hash + a content hash over the
-    * first 256 docs' texts (pushdown-pruned sample) + the recursive
-    * file-status fingerprint. The file signal alone catches any actual
-    * rewrite; the count/id/content terms make the snapshot string
-    * meaningful across roots and survive filesystems with coarse mtime.
-    */
-  private def docsSnapshot(dir: String)(implicit s: SparkSession): (Long, String) =
-    tableSnapshot(dir, "documents.parquet", docs(dir), "doc_id", "text")
-
-  /** ONE whole-table fingerprint recipe behind [[embSnapshot]] and
-    * [[docsSnapshot]] (they were hand-maintained twins — a recipe tweak
-    * reaching one copy would silently diverge staleness detection
-    * between the s01 pair table and the ANN indexes): count + id-set
-    * hash + content hash over ids < 256 (pushdown-pruned sample) +
-    * `-f` file-status fold. Memoized on (table-tagged dir, file fp):
-    * several index-backed queries in one Verify/Bench pass would
-    * otherwise each re-run the fingerprint aggregation jobs over an
-    * unchanged table; the metadata-only listing ALWAYS runs and gates
-    * reuse — any rewrite of the table changes the file fp and forces
-    * fresh aggregation jobs.
-    */
-  private def tableSnapshot(dir: String, table: String, df: DataFrame,
-      idCol: String, contentCol: String)(implicit s: SparkSession): (Long, String) = {
-    val fileFp = fileStatusFp(dir, table)
-    snapshotCache.getOrElseUpdate((s"$dir#$table", fileFp), {
-      // coalesce: a present-but-empty table fingerprints as empty
-      // instead of NPE-ing on a NULL sum
-      val fpRow = df.agg(
-        count(lit(1)).as("n"),
-        coalesce(sum(hash(col(idCol))), lit(0L)).as("idsum")).head()
-      val n = fpRow.getLong(0)
-      val contentFp = df.filter(col(idCol) < 256)
-        .agg(coalesce(sum(hash(col(contentCol))), lit(0L))).head().getLong(0)
-      (n, s"$n-${fpRow.getLong(1)}-c$contentFp-f$fileFp")
-    })
-  }
-
-  // keyed (table-tagged dir, file fingerprint): embeddings and documents
-  // snapshots share the cache without colliding on the same dir
-  private val snapshotCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), (Long, String)]
-
-  /** Metadata-only table fingerprint: fold (path, len, modtime) of every
-    * data FILE under the table path (file or directory) — resolved
-    * through the Hadoop FS API so it works on hdfs:// roots too. The
-    * listing is RECURSIVE (listFiles(_, true)): a partitioned/nested
-    * layout's immediate children are subdirectories (length 0, directory
-    * mtime), so a flat listStatus would let an in-place rewrite that
-    * preserves entry names within mtime granularity keep a stale
-    * snapshot id (round-4 ADVICE #4); walking to the part files also
-    * future-proofs the staleness gate for partitioned source tables.
-    */
-  private[graft] def fileStatusFp(dir: String, table: String)(implicit s: SparkSession): Long =
-    foldStatuses(fileStatusList(dir, table))
-
-  /** ONE fold recipe over (path, len, mtime) listings — shared by the
-    * whole-table fingerprint and the old-slice subset fold so the two
-    * cannot drift on the hash recipe.
-    */
-  private def foldStatuses(files: Seq[(String, Long, Long)]): Long =
-    files.foldLeft(17L) { case (acc, (path, len, mtime)) =>
-      31L * (31L * (31L * acc + path.hashCode) + len) + mtime
-    }
-
-  /** The sorted (path, length, mtime) listing [[fileStatusFp]] folds —
-    * exposed separately so [[docsSliceSnapshot]] can fold the subset of
-    * files that carry old-slice rows.
-    */
-  private def fileStatusList(dir: String, table: String)(
-      implicit s: SparkSession): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    if (fs.getFileStatus(p).isDirectory) {
-      val base = p.toUri.getPath
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        // hidden check on every RELATIVE path component, not just the
-        // leaf: listFiles(_, true) recurses into _temporary/... left by
-        // a dead or concurrent writer, and part files under it have
-        // ordinary names — fingerprinting them would churn the snapshot
-        // id (rebuild on residue, rebuild again on cleanup) and could
-        // capture a mid-write table state the flat listing never saw
-        val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-        val hidden = rel.split('/')
-          .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-        if (!hidden)
-          files += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-    } else {
-      val st = fs.getFileStatus(p)
-      files += ((st.getPath.toString, st.getLen, st.getModificationTime))
-    }
-    files.sortBy(_._1).toSeq
-  }
-
-  /** Human-readable tag + a hash of the RAW dir string: the readable
-    * part alone is lossy (runs of non-alphanumerics collapse to "_",
-    * so /data/sf0.1 and /data/sf0_1 would share a stage name on the
-    * shared index root and permanently thrash each other's snapshots —
-    * correct but rebuild-per-run); the hex suffix makes the stage
-    * identity collision-free.
-    */
-  private def dirTag(dir: String): String =
-    dir.replaceAll("[^A-Za-z0-9]+", "_").stripPrefix("_") +
-      "_" + (dir.hashCode & 0x7fffffff).toHexString
+      s"${System.getProperty("java.io.tmpdir")}/graft_ann_index"))
 
   /** The 1-bit multiprobe mask set (identity + each single-bit flip) —
     * the ONE definition both the driver-side probe expansion (s04) and
@@ -1221,8 +927,8 @@ object SimilarityQueries {
     implicit val sp = s
     import sp.implicits._
     val tables = 8
-    val (n, snapBase) = embSnapshot(dir)
-    val bits = lshBits(n)
+    val emb = IndexStore.embeddings(s, dir)
+    val bits = lshBits(emb.rows)
     val planes = lshPlanes(1100, tables, bits, dim = 64)
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
     // round 4: the blocking table PERSISTS like s04/s07/s09's indexes —
@@ -1231,9 +937,9 @@ object SimilarityQueries {
     // 8-projection pass over every embedding per execution, twice (the
     // multiprobe side repeated it with flips). One committed table now
     // carries the exact buckets, marker-validated like the others...
-    val exact = annIndex.stage(s, s"nd8_${dirTag(dir)}", s"$snapBase-nd-b$bits-p2",
-        expectedRows = Some(n * tables)) {
-      spreadBuild(e.flatMap { case (id, v) =>
+    val exact = indexes.stage(s, IndexStore.embNeardupBuckets(dir, emb, bits),
+        expectedRows = Some(emb.rows * tables)) {
+      IndexStore.spread(e.flatMap { case (id, v) =>
         (0 until tables).map(t => (id, t, lshBucket(v, planes(t))))
       }.toDF("vec_id", "tbl", "bucket"))
     }
@@ -1349,9 +1055,14 @@ object SimilarityQueries {
     implicit val sp = s
     import sp.implicits._
     val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
-    val (n, _) = embSnapshot(dir)
-    val (centStage, snap) = ivfCentIdentity(dir, k)
-    val (seedN, _) = ivfSeedCount(s, centStage, snap, dir, k)
+    val emb = IndexStore.embeddings(s, dir)
+    val cent = IndexStore.ivfCentroids(dir, emb, k)
+    // the quantizer seed count is #(vec_id < k), not min(n, k): nothing
+    // guarantees dense ids from 0. Warm, the centroid marker records it
+    // (one centroid row per seed), so no count job runs; cold, the
+    // Column predicate pushes to the scan and reads the seeds' row groups
+    val seedN = indexes.committedRows(s, cent).filter(_ > 0)
+      .getOrElse(embs(dir).filter(col("vec_id") < k).select("vec_id").count())
     require(seedN > 0,
       s"s07 IVF: no quantizer seed vectors (expected rows with vec_id < $k)")
     def buildCent(): DataFrame = {
@@ -1367,14 +1078,14 @@ object SimilarityQueries {
     // so that compare is circular — the require below checks the marker
     // against the centroid rows the query collects anyway: a genuine
     // data-vs-marker check with zero extra jobs.
-    val centroidRows = annIndex.stage(s, centStage, snap, expectedRows = Some(seedN))(buildCent())
+    val centroidRows = indexes.stage(s, cent, expectedRows = Some(seedN))(buildCent())
       .collect()
     require(centroidRows.length == seedN.toInt,
       s"s07 centroid stage: ${centroidRows.length} rows vs expected $seedN")
     val centroids: Array[Array[Double]] = centroidRows
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1).map(_._2)
-    val assigned = annIndex.stage(s, s"ivf${k}_assign_${dirTag(dir)}", snap,
-        partitionByCols = Seq("cid"), expectedRows = Some(n)) {
+    val assigned = indexes.stage(s, IndexStore.ivfAssignments(dir, emb, k),
+        partitionByCols = Seq("cid"), expectedRows = Some(emb.rows)) {
       e.map { case (id, v) => (id, v, nearestCids(v, centroids, 1).head) }
         .toDF("vec_id", "embedding", "cid")
     }
@@ -1402,17 +1113,10 @@ object SimilarityQueries {
     // over the partition column and prunes the parquet scan to those
     // cid= directories
     val probedCids = probeRows.map(_._3).distinct.toSeq
-    val pe = col("probe").cast("array<double>")
-    val ee = col("embedding").cast("array<double>")
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cos_raw").desc, col("vec_id"))
-    assigned.filter(col("cid").isin(probedCids: _*))
-      .join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos_raw", cosineSim(pe, ee))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("probe_id"), col("vec_id"), round(col("cos_raw"), 6).as("cosine"), col("rank"))
-      .orderBy("probe_id", "rank")
+    cosineTop5(assigned.filter(col("cid").isin(probedCids: _*))
+        .join(broadcast(probes), Seq("cid"))
+        .filter(col("vec_id") =!= col("probe_id")),
+      col("probe").cast("array<double>"), col("embedding").cast("array<double>"))
   }
 
   /** SQ8 ANN (the memory-bounded scale path): per-vector symmetric int8
@@ -1440,10 +1144,9 @@ object SimilarityQueries {
     // the int8 table is the third persisted ANN index (with s04's LSH
     // buckets and s07's inverted lists): quantization commits once per
     // embeddings snapshot; every query scans the 4x-smaller table
-    val (n, snapBase) = embSnapshot(dir)
-    val quant = annIndex.stage(s, s"sq8_${dirTag(dir)}", s"$snapBase-sq8-p2",
-        expectedRows = Some(n)) {
-        spreadBuild(e.map { case (id, v) =>
+    val emb = IndexStore.embeddings(s, dir)
+    val quant = indexes.stage(s, IndexStore.sq8(dir, emb), expectedRows = Some(emb.rows)) {
+        IndexStore.spread(e.map { case (id, v) =>
           val maxAbs = math.max(v.iterator.map(x => math.abs(x.toDouble)).max, 1e-30)
           val scale = 127.0 / maxAbs
           (id, v.map(x => math.round(x * scale).toByte).toArray, scale,
@@ -1473,15 +1176,9 @@ object SimilarityQueries {
     val ef = embs(dir).withColumn("emb", col("embedding").cast("array<double>"))
     val pf = ef.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("emb").as("probe"))
-    val w = Window.partitionBy(col("probe_id")).orderBy(col("cos_raw").desc, col("vec_id"))
-    candidates
-      .join(ef.select(col("vec_id"), col("emb")), Seq("vec_id"))
-      .join(broadcast(pf), Seq("probe_id"))
-      .withColumn("cos_raw", cosineSim(col("probe"), col("emb")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("probe_id"), col("vec_id"), round(col("cos_raw"), 6).as("cosine"), col("rank"))
-      .orderBy("probe_id", "rank")
+    cosineTop5(candidates.join(ef.select(col("vec_id"), col("emb")), Seq("vec_id"))
+        .join(broadcast(pf), Seq("probe_id")),
+      col("probe"), col("emb"))
   }
 
   /** 16x16 box average-pool thumbnail of a decoded grayscale image,

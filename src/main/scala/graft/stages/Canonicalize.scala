@@ -40,21 +40,23 @@ object Canonicalize {
     * cannot shrink — it was taking 19-22 s on the dedup probes' mid-size
     * 132k-edge pair graph at BOTH local[8] and local[32] before round 5
     * raised this constant from 100k. The ceiling on raising it further
-    * is driver ALLOCATION, not wall: the collect + HashMap + result
-    * materialization peak at gigabytes well before the union-find loses
-    * on time (table above), so the default stops at 500k (~2.4 GB
-    * transient worst-case — sized for a normal driver; pass smallCutoff
-    * explicitly for a beefier or tighter one). Above it, label-prop +
+    * is driver memory: the collect, the vertex map and the result rows
+    * sit on the driver together. Above the default, label-prop +
     * pointer jumping is the only shape that works at 100 TB pair
     * graphs; both paths are value-equal (spec-asserted, and kg15 pins
     * the distributed path under the driver oracle via smallCutoff = 0).
     *
-    * DRIVER-HEAP REQUIREMENT (round-6 ADVICE): the default assumes a
-    * driver sized like the bench JVM (8 GB -Xmx) — the union-find path
-    * can transiently allocate ~2.4 GB at the full 500k-edge worst case
-    * (measured, above). A caller on a small driver (1-2 GB test JVMs)
-    * whose graphs can exceed ~100k edges should pass smallCutoff
-    * explicitly rather than inherit this default.
+    * DRIVER-HEAP REQUIREMENT: the default fits a 512 MB driver. At the
+    * union-find's worst case, 500k chain edges over 501k all-distinct
+    * string vertices, a child JVM at -Xmx512m (local[2], 4-vCPU shared
+    * host) finds the 1,000 components in 9.35 s (400k edges: 7.15 s).
+    * LinkingSpec runs that 500k case in a -Xmx512m child JVM (17.9 s
+    * there, with a vertex count and a component count on top). Spark
+    * itself refuses heaps below ~450 MB, so any driver it starts on can
+    * run the default. The gigabyte peaks in the table above are what
+    * the same work allocates on a roomy heap, where garbage is collected
+    * late, not what it needs. Pass smallCutoff explicitly to move the
+    * crossover on a larger driver.
     */
   val DefaultSmallCutoff = 500000L
 

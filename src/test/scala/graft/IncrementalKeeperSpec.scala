@@ -1,5 +1,6 @@
 package graft
 
+import graft.exec.IndexStore
 import graft.queries.SimilarityQueries
 
 /** s13 incremental dedup keeper: per-batch keeper assignments from the
@@ -59,7 +60,7 @@ class IncrementalKeeperSpec extends SparkSpec {
         .map(i => i -> filler(1000 + i.toInt)))
     rows.toDF("doc_id", "text").coalesce(2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val cutoff = SimilarityQueries.incrementalCutoff(spark, dir)
+    val cutoff = IndexStore.incrementalCutoff(spark, dir)
     assert(cutoff == 72, s"cutoff=$cutoff")
 
     // preconditions: the chain's planted hops actually verified
@@ -122,12 +123,12 @@ class IncrementalKeeperSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
     val first = rowsAt() // builds bands + old-keeper stages
     assert(first.contains((6L, 5L, true)) && first.contains((5L, 5L, false)))
-    assert(SimilarityQueries.nd13KeepersAreWarm(spark, dir, cutoff))
+    assert(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldKeepers(spark, dir, cutoff)))
     // the ingest batch lands as a parquet append; 37 duplicates the pair
     (Seq((37L, dup)) ++ Seq(35L, 36L, 38L, 39L).map(i => (i, uniq(i, "b"))))
       .toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(s"$dir/documents.parquet")
-    assert(SimilarityQueries.nd13KeepersAreWarm(spark, dir, cutoff),
+    assert(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldKeepers(spark, dir, cutoff)),
       "tail append invalidated the old-keeper table")
     val got = rowsAt()
     val expected = ((0L until 40L).map { id =>

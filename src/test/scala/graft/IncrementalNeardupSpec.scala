@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.exec.IndexStore
 import graft.queries.SimilarityQueries
 
 /** s12 incremental near-dup: the delta batch (id tail) deduped against
@@ -22,7 +23,7 @@ class IncrementalNeardupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("s12 equals s01 restricted to delta-touching pairs on the sf corpus") {
-    val cutoff = SimilarityQueries.incrementalCutoff(spark, sf)
+    val cutoff = IndexStore.incrementalCutoff(spark, sf)
     val expected = s01Pairs(sf).filter(_._2 >= cutoff)
     val got = s12Pairs(sf)
     assert(got == expected,
@@ -60,7 +61,7 @@ class IncrementalNeardupSpec extends SparkSpec {
     all.toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
-    val cutoff = SimilarityQueries.incrementalCutoff(spark, dir)
+    val cutoff = IndexStore.incrementalCutoff(spark, dir)
     assert(cutoff == 27, s"cutoff=$cutoff")
 
     // exact brute-force truth over ALL pairs, restricted to b >= cutoff
@@ -103,7 +104,7 @@ class IncrementalNeardupSpec extends SparkSpec {
       (600 until 666).map(i => (i.toLong, filler(10000 + i)))
     rows.toDF("doc_id", "text").coalesce(2)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val cutoff = SimilarityQueries.incrementalCutoff(spark, dir)
+    val cutoff = IndexStore.incrementalCutoff(spark, dir)
     assert(cutoff == 594, s"cutoff=$cutoff")
 
     val got = s12Pairs(dir)
@@ -144,7 +145,7 @@ class IncrementalNeardupSpec extends SparkSpec {
       (3891 until 4000).map(i => (i.toLong, filler(20000 + i)))
     rows.toDF("doc_id", "text").coalesce(4)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val cutoff = SimilarityQueries.incrementalCutoff(spark, dir)
+    val cutoff = IndexStore.incrementalCutoff(spark, dir)
     assert(cutoff == 3591, s"cutoff=$cutoff")
 
     val got = s12Pairs(dir)
@@ -195,14 +196,14 @@ class IncrementalNeardupSpec extends SparkSpec {
       SimilarityQueries.incrementalNeardupAt(spark, dir, cutoff)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairsAt().isEmpty) // builds the old-bands index
-    assert(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff))
+    assert(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)))
     // APPEND an ingest batch (ids 35..39; 37 duplicates old doc 5): the
     // round-5 review scenario — the index keyed on the whole-table
     // snapshot made this exact sequence rebuild O(N) every batch
     (Seq((37L, dup)) ++ Seq(35L, 36L, 38L, 39L).map(i => (i, uniq(i, "b"))))
       .toDF("doc_id", "text").coalesce(1)
       .write.mode("append").parquet(s"$dir/documents.parquet")
-    assert(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    assert(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)),
       "tail append invalidated the old-bands index — warm O(delta) path unreachable")
     assert(pairsAt() == Set((5L, 37L)),
       "appended batch not deduped against the warm old-bands index")
@@ -211,7 +212,7 @@ class IncrementalNeardupSpec extends SparkSpec {
       (i, if (i == 37L) dup else if (i >= 35L) uniq(i, "b") else uniq(i, "a"))))
       .toDF("doc_id", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    assert(!SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    assert(!SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)),
       "old-slice rewrite left a stale index marked warm")
     assert(pairsAt().isEmpty) // doc 5's twin text is gone
   }
@@ -237,11 +238,11 @@ class IncrementalNeardupSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     writeAll(uniq(280L, "v1"))
     assert(pairsAt().isEmpty) // builds the index; nothing matches yet
-    assert(SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff))
+    assert(SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)))
     // rewrite doc 280 to duplicate delta doc 305's text — count and id
     // set unchanged, content changed outside any sampled prefix
     writeAll(uniq(305L, "a"))
-    assert(!SimilarityQueries.nd12IndexIsWarm(spark, dir, cutoff),
+    assert(!SimilarityQueries.indexes.isWarm(spark, IndexStore.oldBands(spark, dir, cutoff)),
       "old-doc rewrite past the sample window left a stale index marked warm")
     assert(pairsAt() == Set((280L, 305L)),
       "rewritten old doc's new near-dup went undetected (stale band rows)")

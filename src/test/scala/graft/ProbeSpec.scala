@@ -34,6 +34,16 @@ class ProbeSpec extends SparkSpec {
       l.contains("vertices=4000 agree=true")), lines)
   }
 
+  test("dedup's giant-cluster gate follows s01's bucket cap") {
+    // n = 2000: 100 identical pages sit under the cap, so s01 enumerates
+    // all C(100, 2) = 4,950 pairs
+    assert(Probe.giantClusterEdgesOk(100, 4950))
+    assert(!Probe.giantClusterEdgesOk(100, 197))
+    // n = 6000: 300 pages are over the cap and chain
+    assert(Probe.giantClusterEdgesOk(300, 597))
+    assert(!Probe.giantClusterEdgesOk(300, 44850))
+  }
+
   test("dedup: s01/s10 keepers and the t15, t17, t19 planted gates hold at small n") {
     val dir = java.nio.file.Files.createTempDirectory("graft-probe-dedup").toString
     // n = 6000 puts 300 identical boilerplate pages in one band bucket,

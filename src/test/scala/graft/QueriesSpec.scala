@@ -251,8 +251,7 @@ class QueriesSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
     Seq((0L, "a"), (1L, "b")).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    implicit val s = spark
-    val fp0 = graft.queries.SimilarityQueries.fileStatusFp(dir, "documents.parquet")
+    val fp0 = graft.exec.IndexStore.fileStatusFp(spark, dir, "documents.parquet")
     // _temporary residue from a dead/concurrent writer must NOT move the
     // fingerprint: listFiles(_, true) recurses into it and its part
     // files have ordinary names, so a leaf-only hidden check would churn
@@ -260,13 +259,13 @@ class QueriesSpec extends SparkSpec {
     val tmp = java.nio.file.Paths.get(dir, "documents.parquet", "_temporary", "0")
     java.nio.file.Files.createDirectories(tmp)
     java.nio.file.Files.write(tmp.resolve("part-00000"), Array[Byte](1, 2, 3))
-    assert(graft.queries.SimilarityQueries.fileStatusFp(dir, "documents.parquet") == fp0,
+    assert(graft.exec.IndexStore.fileStatusFp(spark, dir, "documents.parquet") == fp0,
       "_temporary residue moved the fingerprint")
     // a REAL new part file must move it
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "documents.parquet", "part-extra.parquet"),
       Array[Byte](1, 2, 3))
-    assert(graft.queries.SimilarityQueries.fileStatusFp(dir, "documents.parquet") != fp0,
+    assert(graft.exec.IndexStore.fileStatusFp(spark, dir, "documents.parquet") != fp0,
       "new data file did not move the fingerprint")
   }
 
@@ -323,7 +322,10 @@ class QueriesSpec extends SparkSpec {
   test("s07 warm-index seed count comes from the marker, not a count job") {
     // first run commits the centroid stage (if not already committed)
     SparkEntry.queries("s07_ann_ivf_topk")(spark, sf).count()
-    assert(graft.queries.SimilarityQueries.ivfSeedCountFromMarker(spark, sf),
+    import graft.exec.IndexStore
+    import graft.queries.SimilarityQueries.{indexes, IvfK}
+    assert(indexes.committedRows(spark,
+        IndexStore.ivfCentroids(sf, IndexStore.embeddings(spark, sf), IvfK)).exists(_ > 0),
       "warm-index s07 still runs the seed count job (round-4 VERDICT #2)")
   }
 

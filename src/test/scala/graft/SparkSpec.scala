@@ -38,4 +38,26 @@ abstract class SparkSpec extends AnyFunSuite {
       (r, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Runs `main`'s object in a child JVM on `root`; (exit code, log
+    * lines). The child runs at -Xmx512m with the module opens Spark
+    * needs, not this JVM's heap settings.
+    */
+  def runChild(main: AnyRef, root: String): (Int, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val log = new java.io.File(root, "child.log")
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(javaBin, "-Xmx512m") ++ opens ++ Seq("-cp", System.getProperty("java.class.path"),
+      main.getClass.getName.stripSuffix("$"), root)
+    val child = new ProcessBuilder(cmd: _*).directory(new java.io.File(root))
+      .redirectErrorStream(true).redirectOutput(log).start()
+    def lines = scala.io.Source.fromFile(log).getLines().toSeq
+    if (!child.waitFor(5, java.util.concurrent.TimeUnit.MINUTES)) {
+      child.destroyForcibly()
+      fail(s"child JVM did not finish:\n${lines.takeRight(30).mkString("\n")}")
+    }
+    (child.exitValue, lines)
+  }
 }

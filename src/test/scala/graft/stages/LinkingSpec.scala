@@ -124,6 +124,19 @@ class LinkingSpec extends SparkSpec {
     assert(lpJobs > 1 && pinnedJobs > 1, s"label propagation ran $lpJobs / $pinnedJobs jobs")
   }
 
+  test("CC at the default cutoff fits a 512 MB driver on worst-case chain edges") {
+    // DefaultSmallCutoff edges over all-distinct string vertices take the
+    // driver union-find, whose collect, vertex map and result rows are
+    // the largest driver allocation in the engine
+    val root = java.nio.file.Files.createTempDirectory("graft-cc-heap").toString
+    val (exit, log) = runChild(CcHeapChild, root)
+    val line = log.find(_.startsWith("CC ")).getOrElse(
+      fail(s"child (exit $exit) printed no CC line:\n${log.takeRight(30).mkString("\n")}"))
+    assert(exit == 0, log.takeRight(30).mkString("\n"))
+    val n = Canonicalize.DefaultSmallCutoff
+    assert(line.startsWith(s"CC edges=$n path=union-find vertices=${n + 1000} components=1000 "), line)
+  }
+
   test("dictionary linking folds Westlake variants via canonical alias") {
     import spark.implicits._
     val mentions = Seq(
