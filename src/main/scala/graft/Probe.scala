@@ -1,6 +1,6 @@
 package graft
 
-import graft.exec.IndexStore
+import graft.exec.{BandJoin, IndexStore}
 import graft.fixtures.FixtureCorpus
 import graft.queries.SimilarityQueries
 import graft.stages.{Canonicalize, EntityLink, MentionDetect}
@@ -314,12 +314,12 @@ object Probe {
   // ---- dedup ----------------------------------------------------------
 
   /** Does s01's edge count over `members` identical pages match the
-    * bucket cap? At or below [[IndexStore.GiantBucketCap]] their bucket is
+    * bucket cap? At or below [[BandJoin.GiantBucketCap]] their bucket is
     * enumerated in full, C(members, 2) pairs; above it the spanning double
     * chain emits fewer than 3 edges per member.
     */
   private[graft] def giantClusterEdgesOk(members: Long, edges: Long): Boolean =
-    if (members <= IndexStore.GiantBucketCap) edges == members * (members - 1) / 2
+    if (members <= BandJoin.GiantBucketCap) edges == members * (members - 1) / 2
     else edges < 3 * members
 
   /** Member j of a cluster replaces j base words at deterministic
@@ -421,7 +421,7 @@ object Probe {
     println(s"PROBE giant cluster: $navChain chain edges for $navN identical pages " +
       s"(all-pairs would be ${navN * (navN - 1) / 2})")
     require(giantClusterEdgesOk(navN, navChain),
-      s"s01 emitted $navChain edges for $navN identical pages (bucket cap ${IndexStore.GiantBucketCap})")
+      s"s01 emitted $navChain edges for $navN identical pages (bucket cap ${BandJoin.GiantBucketCap})")
 
     // s10 over the warm pair table: CC + keeper attach across all N docs
     val (s10df, wS10) = timed {

@@ -37,14 +37,6 @@ final class IndexStore(root: String) {
 
 object IndexStore {
 
-  /** Bucket-size cap of the banded near-dup engine: a (band, bkey) bucket
-    * with more members is a giant bucket, chained by s01 and represented
-    * by [[GiantBucketReps]] members in the s12 index. Both numbers decide
-    * what the s12 index stores, so its snapshot carries them.
-    */
-  val GiantBucketCap = 256
-  val GiantBucketReps = 8
-
   // ---- index identities: `<kind>_<dirTag>` stages, one per index ----
 
   /** s01's verified pair table. */
@@ -70,11 +62,12 @@ object IndexStore {
     IndexId(stageName("sq8", dir), s"${emb.id}-sq8-p2")
 
   /** s12's old-bands index, keyed on the doc_id < cutoff slice
-    * ([[docsSlice]]): a tail append leaves it valid.
+    * ([[docsSlice]]): a tail append leaves it valid. The bucket cap and
+    * representative count decide what it stores, so it carries them.
     */
   def oldBands(s: SparkSession, dir: String, cutoff: Long): IndexId =
     IndexId(stageName("nd12_bands", dir),
-      s"${docsSlice(s, dir, cutoff)}-cut$cutoff-cap${GiantBucketCap}r${GiantBucketReps}v1")
+      s"${docsSlice(s, dir, cutoff)}-cut$cutoff-cap${BandJoin.GiantBucketCap}r${BandJoin.GiantBucketReps}v1")
 
   /** s13's old-keeper table, built from the s12 index it extends. */
   def oldKeepers(s: SparkSession, dir: String, cutoff: Long): IndexId =

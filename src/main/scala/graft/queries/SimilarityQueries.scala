@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.exec.IndexStore
-import graft.exec.IndexStore.{GiantBucketCap, GiantBucketReps}
+import graft.exec.{BandJoin, IndexStore}
+import graft.exec.BandJoin.GiantBucketCap
 import graft.functions.CosineSimilarity.cosineSim
 import graft.stages.EntityLink
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -67,65 +67,23 @@ object SimilarityQueries {
     * public so the flagship entry pipeline can dedup its page corpus
     * with the same banded-join machinery the s01/s10 oracle checks.
     *
-    * Hostile-input guard (boilerplate skew): a web corpus holds runs of
-    * near-identical template pages (nav/boilerplate) whose shingle sets
-    * — and therefore whole MinHash signatures — coincide, putting tens
-    * of thousands of docs into ONE (band, bkey) bucket in EVERY band.
-    * An unconditional all-pairs self-join is O(c^2) candidates per such
-    * bucket (50k identical pages -> 1.25e9 pairs x 8 bands) — the
-    * banded join's entire purpose defeated by exactly the corpus shape
-    * dedup exists for. Buckets over `maxFullBucket` therefore emit a
-    * SPANNING DOUBLE CHAIN instead: members sorted, each paired with
-    * its next two neighbors — O(2c) edges that keep the cluster
-    * connected for the s10 components/keeper stage (one verified-edge
-    * failure cannot split it), at the documented cost of not
-    * enumerating every within-cluster pair (for dedup the pair table
-    * is an intermediate: C(c,2) pairs carry no more keeper information
-    * than a chain). EntityLink purges its hot buckets outright —
-    * correct for entity linking where a hot shingle is
-    * non-discriminative noise — but here a hot bucket is SIGNAL (a
-    * genuine giant dup cluster) and must be kept, so the guard degrades
-    * the edge set, never drops it. Unlike the purge, never silent in
-    * shape: chain edges still pass the exact-Jaccard verification
-    * below. sf-scale buckets sit far below the cap, so the driver
-    * oracle pins are byte-identical with or without the guard.
-    *
-    * Chain ORDER matters: a giant bucket is not always one pure dup
-    * cluster — a single band's key can also collide for docs that are
-    * NOT near-dups (a boilerplate block that happens to supply all of
-    * one band's minhash rows), interleaving several true clusters plus
-    * noise in one bucket. A doc_id-ordered chain links similarity-
-    * UNCORRELATED neighbors there: edges between dissimilar neighbors
-    * fail the Jaccard verification and a true sub-cluster whose members
-    * sit > 2 apart in id order fragments (silent recall loss). Chains
-    * therefore order by a compact per-band signature key
-    * ([[sigOrderKey]]: the first minhash row of every band) — docs of
-    * one true cluster have identical or near-identical signatures, so
-    * they sort contiguous and their chain
-    * edges survive verification regardless of how the bucket interleaves
-    * them. Residual (documented) loss: a true pair whose ONLY
-    * co-colliding band is a giant bucket AND whose signatures sort
-    * non-adjacently inside it; for J >= 0.8 the other Bands-1 bands
-    * catch the pair with p = 1-(1-J^RowsPerBand)^(Bands-1) (~0.94 at
-    * the 0.8 threshold, higher above it). The signature recompute for
-    * chain ordering is confined to giant-bucket members (the
-    * pathological minority), so the normal path's shuffle width is
-    * unchanged.
+    * The banded self-join and its giant-bucket guard are
+    * [[graft.exec.BandJoin]]'s: a bucket over the cap (boilerplate
+    * template pages, whose whole signatures coincide) is a genuine dup
+    * cluster and is chained in [[BandJoin.sigOrderKey]] order, never
+    * dropped; chain edges pass the same exact-Jaccard verification. sf-scale
+    * buckets sit far below the cap, so the driver oracle pins are
+    * byte-identical with or without the guard.
     */
-  def neardupPairsOf(docsDf: DataFrame, maxFullBucket: Int = GiantBucketCap): DataFrame = {
+  def neardupPairsOf(docsDf: DataFrame): DataFrame = {
     val sp = docsDf.sparkSession
     import sp.implicits._
     val d = docsDf.select("doc_id", "text").as[(Long, String)]
-
-    // ONE shuffle on (band, bkey) serves the size window, and the
-    // small-bucket self-join below re-keys on the same columns (AQE
-    // exchange reuse). The chain's lead window runs only over the
-    // giant-bucket slice (with its signature sort key joined in), so
-    // normal buckets never pay for it.
-    val w = Window.partitionBy("band", "bkey")
-    val sized = bandedOf(d).withColumn("__bsz", count(lit(1)).over(w))
-    pairsFromSized(sized, d, maxFullBucket)
+    pairsFromSized(bandedOf(d).withColumn(BandJoin.Size, BandJoin.bucketSize(NdKeys)), d)
   }
+
+  /** Bucket keys of the document band rows. */
+  private val NdKeys = Seq("band", "bkey")
 
   /** The pair engine downstream of the banding pass: takes the
     * size-annotated band rows (doc_id, band, bkey, __bsz) plus the
@@ -133,42 +91,9 @@ object SimilarityQueries {
     * (s12's delta, which also feeds the broadcast probe side) does not
     * shingle the corpus a second time.
     */
-  private[graft] def pairsFromSized(sized: DataFrame, d: Dataset[(Long, String)],
-      maxFullBucket: Int): DataFrame = {
-    val sp = d.sparkSession
-    import sp.implicits._
-
-    val small = sized.filter(col("__bsz") <= maxFullBucket)
-      .select("doc_id", "band", "bkey")
-    // hint("merge") (round 6, the s02 lesson): at small inputs the
-    // planner otherwise broadcasts one side, and the broadcast build
-    // replays the banded lineage instead of reusing the size window's
-    // exchange; SMJ is free here — the window already hash-partitioned
-    // and sorted both sides by (band, bkey) — and is the only shape
-    // possible at production N.
-    val fullPairs = small.as("l").join(small.as("r").hint("merge"),
-        $"l.band" === $"r.band" && $"l.bkey" === $"r.bkey" && $"l.doc_id" < $"r.doc_id")
-      .select($"l.doc_id".as("a"), $"r.doc_id".as("b"))
-
-    // giant-bucket members re-derive their full signature once (linear
-    // in the pathological minority, not the corpus) as the chain's
-    // similarity-preserving sort key — see the ordering note above
-    val big = sized.filter(col("__bsz") > maxFullBucket)
-      .select("doc_id", "band", "bkey")
-    // NOTE: both joins below are deliberate plain equi joins. The id
-    // and key sides hang off the banded exchange — broadcasting either
-    // forces an eager broadcast-BUILD job that recomputes that whole
-    // lineage (exchange reuse does not cross into a broadcast build
-    // executed before the main job), i.e. a second full corpus
-    // re-shingle: measured 98 s -> 153 s (c8/c32 mixed) with the
-    // broadcasts vs ~71/33 s without. The text shuffle this equi join
-    // pays is shared with the verification join's text exchanges.
-    val giantSigs = sigKeysOf(d, big.select("doc_id"))
-    val chainPairs = giantBucketChains(big.join(giantSigs, "doc_id"))
-
-    val pairs = fullPairs.unionByName(chainPairs).distinct()
-    verifyPairs(pairs, d)
-  }
+  private[graft] def pairsFromSized(sized: DataFrame, d: Dataset[(Long, String)]): DataFrame =
+    verifyPairs(BandJoin.pairs(sized, NdKeys, "doc_id",
+      giant => giant.join(sigKeysOf(d, giant.select("doc_id")), "doc_id")).distinct(), d)
 
   /** The banded-signature projection shared by the full s01 engine and
     * the s12 incremental path: one (doc_id, band, bkey) row per band,
@@ -186,10 +111,15 @@ object SimilarityQueries {
     }.toDF("doc_id", "band", "bkey")
   }
 
-  /** (doc_id, __sig) chain-order keys for the ids in `ids` — the
-    * signature recompute is confined to that (pathological-minority)
-    * id set via a plain equi join; see the broadcast note in
-    * [[neardupPairsOf]] for why it must NOT be a broadcast join.
+  /** (doc_id, __ord) chain-order keys ([[BandJoin.sigOrderKey]]) for
+    * the ids in `ids`: the signature recompute is confined to that
+    * (pathological-minority) id set. A deliberate plain equi join: the id
+    * side hangs off the banded exchange, and broadcasting it forces an
+    * eager broadcast-BUILD job that recomputes that whole lineage
+    * (exchange reuse does not cross into a broadcast build), i.e. a
+    * second full corpus re-shingle: measured 98 s -> 153 s (c8/c32 mixed)
+    * against ~71/33 s without. The text shuffle it pays is shared with the
+    * verification join's text exchanges.
     */
   private def sigKeysOf(d: Dataset[(Long, String)], ids: DataFrame): DataFrame = {
     val sp = d.sparkSession
@@ -197,8 +127,8 @@ object SimilarityQueries {
     d.toDF("doc_id", "text")
       .join(ids.select("doc_id").distinct(), "doc_id")
       .as[(Long, String)]
-      .map { case (id, t) => (id, sigOrderKey(EntityLink.signature(wordShingles(t)))) }
-      .toDF("doc_id", "__sig")
+      .map { case (id, t) => (id, BandJoin.sigOrderKey(EntityLink.signature(wordShingles(t)))) }
+      .toDF("doc_id", "__ord")
   }
 
   /** Exact-Jaccard verification of candidate pairs (a, b) against the
@@ -233,67 +163,6 @@ object SimilarityQueries {
       .filter($"jaccard" >= 0.8)
   }
 
-  /** Spanning double chain over giant-bucket members: per (band, bkey),
-    * members sort by (__sig, doc_id) and each pairs with its next two
-    * neighbors. Split from [[neardupPairsOf]] so the ordering property
-    * is directly testable with injected sort keys (a real false-positive
-    * giant bucket can't be constructed deterministically from text).
-    * Pairs normalize via least/greatest — signature order is NOT id
-    * order, so (doc_id, next) can arrive in either orientation.
-    */
-  private[graft] def giantBucketChains(keyed: DataFrame): DataFrame = {
-    val ws = Window.partitionBy("band", "bkey").orderBy(col("__sig"), col("doc_id"))
-    val led = keyed
-      .withColumn("__nxt1", lead(col("doc_id"), 1).over(ws))
-      .withColumn("__nxt2", lead(col("doc_id"), 2).over(ws))
-    led.filter(col("__nxt1").isNotNull)
-      .select(least(col("doc_id"), col("__nxt1")).as("a"),
-        greatest(col("doc_id"), col("__nxt1")).as("b"))
-      .unionByName(led.filter(col("__nxt2").isNotNull)
-        .select(least(col("doc_id"), col("__nxt2")).as("a"),
-          greatest(col("doc_id"), col("__nxt2")).as("b")))
-  }
-
-  /** Compact similarity-preserving chain order key: the FIRST minhash
-    * row of EVERY band (Bands = 16 longs, 128 B packed) instead of the
-    * full NumHashes = 64-long signature (512 B). Grouping behavior is what the
-    * chain needs — identical docs get identical keys and stay
-    * contiguous; near-dups agree on the leading key rows with
-    * probability J each and group by prefix depth; unrelated docs in a
-    * false-positive bucket differ in the first rows of the OTHER bands
-    * whp (one row per band means no single band collision can blind the
-    * whole key). The width matters operationally: a giant bucket of
-    * identical docs makes every sort comparison walk the ENTIRE key
-    * before the doc_id tiebreak, and the full-signature key measured
-    * 218 s vs 71 s (c8, 1M docs, 50k-identical cluster) for the s01
-    * cold build — the 4x narrower key removes that pathological term
-    * while ordering near-identically (BASELINE.md round-5 close-out).
-    */
-  private[graft] def sigOrderKey(sig: Array[Long]): Array[Byte] = {
-    val strided = new Array[Long](EntityLink.Bands)
-    var b = 0
-    while (b < EntityLink.Bands) { strided(b) = sig(b * EntityLink.RowsPerBand); b += 1 }
-    packSig(strided)
-  }
-
-  /** Long array packed to a byte key whose unsigned lexicographic order
-    * (Spark's BinaryType ordering) equals the signed elementwise order
-    * of the array: big-endian longs with the sign bit flipped. Used on
-    * [[sigOrderKey]]'s strided selection and directly by the
-    * injected-key chain-ordering spec.
-    */
-  private[graft] def packSig(sig: Array[Long]): Array[Byte] = {
-    val out = new Array[Byte](sig.length * 8)
-    var i = 0
-    while (i < sig.length) {
-      val v = sig(i) ^ Long.MinValue
-      var j = 0
-      while (j < 8) { out(i * 8 + j) = (v >>> (56 - 8 * j)).toByte; j += 1 }
-      i += 1
-    }
-    out
-  }
-
   /** s01's verified near-dup pair table (a, b, jaccard >= 0.8),
     * PERSISTED once per DOCUMENTS snapshot (round-4 "What's missing"
     * #2): the banded signatures — and therefore the verified pairs —
@@ -322,9 +191,9 @@ object SimilarityQueries {
     * a cutoff move, rebuilds). `n_old` is the bucket's old-side
     * population (precomputed at build so a delta run never windows over
     * the full corpus); buckets over [[GiantBucketCap]] additionally mark
-    * [[GiantBucketReps]] REPRESENTATIVES evenly spaced in [[sigOrderKey]]
-    * order (small-bucket rows are all is_rep). A giant bucket is a
-    * genuine dup cluster (or a band-level false-positive mix of a few) —
+    * [[BandJoin.GiantBucketReps]] REPRESENTATIVES evenly spaced in
+    * [[BandJoin.sigOrderKey]] order ([[BandJoin.isRep]]; small-bucket
+    * rows are all is_rep). A giant bucket is a genuine dup cluster (or a band-level false-positive mix of a few) —
     * a delta member only needs SOME verified edge into it for the s10
     * components stage to connect it, and sig-spaced representatives put
     * one rep inside each sizeable sub-cluster, so the full delta x old
@@ -339,18 +208,14 @@ object SimilarityQueries {
     indexes.stage(s, IndexStore.oldBands(s, dir, cutoff)) {
       val old = docs(dir).filter(col("doc_id") < cutoff)
         .select("doc_id", "text").as[(Long, String)]
-      val sized = bandedOf(old).withColumn("n_old",
-        count(lit(1)).over(Window.partitionBy("band", "bkey")))
+      val sized = bandedOf(old).withColumn("n_old", BandJoin.bucketSize(NdKeys))
       val small = sized.filter(col("n_old") <= GiantBucketCap)
         .withColumn("is_rep", lit(true))
         .select("doc_id", "band", "bkey", "n_old", "is_rep")
       val giant = sized.filter(col("n_old") > GiantBucketCap)
       val giantKeyed = giant
         .join(sigKeysOf(old, giant.select("doc_id")), "doc_id")
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("band", "bkey").orderBy(col("__sig"), col("doc_id"))))
-        .withColumn("is_rep", pmod(col("__rk") - 1,
-          greatest(ceil(col("n_old") / lit(GiantBucketReps.toDouble)), lit(1L))) === 0)
+        .withColumn("is_rep", BandJoin.isRep(NdKeys, col("n_old"), col("__ord"), col("doc_id")))
         .select("doc_id", "band", "bkey", "n_old", "is_rep")
       small.unionByName(giantKeyed)
     }
@@ -367,8 +232,9 @@ object SimilarityQueries {
     * O(delta) banding lineage per broadcast build). Guards are
     * symmetric: old giant buckets expose sig-spaced representatives
     * (index build, above); delta buckets over the cap probe with
-    * [[GiantBucketReps]] id-spaced members of their own, the rest of the
-    * delta cluster connecting through the delta self-run's chain edges.
+    * [[BandJoin.GiantBucketReps]] id-spaced members of their own, the
+    * rest of the delta cluster connecting through the delta self-run's
+    * chain edges.
     * Candidates verify with the shared exact-Jaccard [[verifyPairs]];
     * new-new pairs come from the UNCHANGED full engine run on the delta
     * alone. Output = s01's schema (a, b, jaccard) restricted to pairs
@@ -425,8 +291,7 @@ object SimilarityQueries {
     // materialization each would re-run the whole O(delta)
     // shingle+window lineage. Blocks live on executors, so this stays
     // distributed; eager = one banding job total per batch.
-    val dSized = bandedOf(delta).withColumn("__bsz",
-      count(lit(1)).over(Window.partitionBy("band", "bkey")))
+    val dSized = bandedOf(delta).withColumn(BandJoin.Size, BandJoin.bucketSize(NdKeys))
       .localCheckpoint(true)
     // delta size for the broadcast decision comes from the banded frame
     // just materialized (exactly Bands rows per doc, counted off the
@@ -436,11 +301,8 @@ object SimilarityQueries {
     val deltaN = dSized.count() / EntityLink.Bands
     val probe = dSized.filter(col("__bsz") <= GiantBucketCap)
       .unionByName(dSized.filter(col("__bsz") > GiantBucketCap)
-        .withColumn("__rk", row_number().over(
-          Window.partitionBy("band", "bkey").orderBy("doc_id")))
-        .filter(pmod(col("__rk") - 1,
-          greatest(ceil(col("__bsz") / lit(GiantBucketReps.toDouble)), lit(1L))) === 0)
-        .drop("__rk"))
+        .withColumn("__rep", BandJoin.isRep(NdKeys, col("__bsz"), col("doc_id")))
+        .filter(col("__rep")).drop("__rep"))
       .select(col("doc_id").as("b"), col("band"), col("bkey"))
     val probeSide = if (deltaN <= Nd12BroadcastMaxDelta) broadcast(probe) else probe
     val cand = bands.filter(col("n_old") <= GiantBucketCap || col("is_rep"))
@@ -454,7 +316,7 @@ object SimilarityQueries {
         .select("doc_id", "text").as[(Long, String)],
       delta)
     // delta self-run consumes the SAME materialized banded frame
-    val newnew = pairsFromSized(dSized, delta, GiantBucketCap)
+    val newnew = pairsFromSized(dSized, delta)
     cross.unionByName(newnew)
   }
 
@@ -478,7 +340,7 @@ object SimilarityQueries {
         .select("doc_id", "text").as[(Long, String)]
       val sized = nd12Bands(s, dir, cutoff)
         .select(col("doc_id"), col("band"), col("bkey"), col("n_old").as("__bsz"))
-      pairedKeepers(pairsFromSized(sized, old, GiantBucketCap))
+      pairedKeepers(pairsFromSized(sized, old))
     }
   }
 
@@ -586,26 +448,18 @@ object SimilarityQueries {
     *    shuffle fewer bytes): dedup now sees only pairs that already
     *    passed `hamming <= 6` instead of every bucket collision. Same
     *    result set — hamming is a function of the (a, b) pair.
-    *  - Giant-bucket guard (round-5 VERDICT "What's wrong" #4: the one
-    *    flagged scale-killer): the fixed 16-bit block-pair keyspace
-    *    means bucket occupancy grows linearly with N, and a boilerplate
-    *    run of near-identical fingerprints lands its whole cluster in
-    *    ONE bucket of EVERY table — C(c,2) candidates x 28 tables.
-    *    Buckets over `maxFullBucket` now emit the s01-style spanning
-    *    double chain instead: members sort by the FINGERPRINT itself
-    *    (simhash is the similarity-preserving order — identical/near
-    *    docs sort adjacent) and pair with their next two neighbors,
-    *    O(2c) edges that keep the cluster connected for downstream
-    *    components; every chain edge still passes the authoritative
+    *  - Giant-bucket guard (round-5 VERDICT "What's wrong" #4): the
+    *    fixed 16-bit block-pair keyspace means bucket occupancy grows
+    *    linearly with N, and a boilerplate run of near-identical
+    *    fingerprints lands its whole cluster in ONE bucket of EVERY
+    *    table. [[BandJoin.pairs]] chains such a bucket in FINGERPRINT
+    *    order (simhash is similarity-preserving: identical/near docs sort
+    *    adjacent); every chain edge still passes the authoritative
     *    full-Hamming check. sf buckets sit far below the cap, so the
-    *    driver oracle output is byte-identical (verified) — the
-    *    planted-cluster spec in QueriesSpec pins the guard's edge
-    *    bounds.
+    *    driver oracle output is byte-identical — the planted-cluster spec
+    *    in QueriesSpec pins the guard's edge bounds.
     */
-  private[graft] def simhashPairsOf(docsDf: DataFrame,
-      maxFullBucket: Int = 256): DataFrame = {
-    val sp = docsDf.sparkSession
-    import sp.implicits._
+  private[graft] def simhashPairsOf(docsDf: DataFrame): DataFrame = {
     val fp = docsDf.select(col("doc_id"),
       graft.functions.SimHash64.simhash64(col("text")).as("fp"))
     def block(i: Int): Column =
@@ -616,37 +470,13 @@ object SimilarityQueries {
           struct(lit(t).as("tbl"), (block(i) * 256 + block(j)).as("bkey"))
         }: _*)).as("bk"))
       .select(col("doc_id"), col("fp"), col("bk.tbl").as("tbl"), col("bk.bkey").as("bkey"))
-    val sized = banded.withColumn("__bsz",
-      count(lit(1)).over(Window.partitionBy("tbl", "bkey")))
-    val small = sized.filter(col("__bsz") <= maxFullBucket)
-    // hint("merge"): without it the planner broadcasts one side (the
-    // frame is tiny at sf), and a broadcast build replays the whole
-    // scan+simhash+explode lineage instead of reusing the window's
-    // exchange (measured: the map stage ran twice). SMJ here is FREE of
-    // extra work — the window already hash-partitioned AND sorted both
-    // sides by (tbl, bkey) — and it is the only join shape possible at
-    // production N anyway (n x 28 band rows never broadcast).
-    val fullPairs = small.as("l").join(small.as("r").hint("merge"),
-        $"l.tbl" === $"r.tbl" && $"l.bkey" === $"r.bkey" && $"l.doc_id" < $"r.doc_id")
-      .select($"l.doc_id".as("a"), $"r.doc_id".as("b"),
-        bit_count($"l.fp".bitwiseXOR($"r.fp")).as("hamming"))
-    val ws = Window.partitionBy("tbl", "bkey").orderBy(col("fp"), col("doc_id"))
-    val led = sized.filter(col("__bsz") > maxFullBucket)
-      .withColumn("__nid1", lead(col("doc_id"), 1).over(ws))
-      .withColumn("__nfp1", lead(col("fp"), 1).over(ws))
-      .withColumn("__nid2", lead(col("doc_id"), 2).over(ws))
-      .withColumn("__nfp2", lead(col("fp"), 2).over(ws))
-    def chainEdges(nid: String, nfp: String): DataFrame =
-      led.filter(col(nid).isNotNull)
-        .select(least(col("doc_id"), col(nid)).as("a"),
-          greatest(col("doc_id"), col(nid)).as("b"),
-          bit_count(col("fp").bitwiseXOR(col(nfp))).as("hamming"))
-    fullPairs.unionByName(chainEdges("__nid1", "__nfp1"))
-      .unionByName(chainEdges("__nid2", "__nfp2"))
-      .filter($"hamming" <= 6)
+    val keys = Seq("tbl", "bkey")
+    BandJoin.pairs(banded.withColumn(BandJoin.Size, BandJoin.bucketSize(keys)), keys, "doc_id",
+        _.withColumn("__ord", col("fp")),
+        (l, r) => Seq(bit_count(l("fp").bitwiseXOR(r("fp"))).as("hamming")))
+      .filter(col("hamming") <= 6)
       .distinct()
   }
-
 
   /** Brute-force cosine top-k: 10 probes x full corpus, exact answer.
     * Probe set is broadcast; the corpus scans once, no shuffle of

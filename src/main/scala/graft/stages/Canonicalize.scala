@@ -167,10 +167,10 @@ object Canonicalize {
       iter += 1
     }
     if (!converged)
-      // same logged-never-silent policy as the LSH bucket purge: labels
-      // returned below are partially propagated — one true component may
-      // carry several canonicalIds. Raise maxIter (rounds needed grow
-      // O(log diameter) with pointer jumping).
+      // logged, never silent: labels returned below are partially
+      // propagated — one true component may carry several canonicalIds.
+      // Raise maxIter (rounds needed grow O(log diameter) with pointer
+      // jumping).
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"connected components did NOT converge in $maxIter rounds — labels are partial")
     sym.unpersist()

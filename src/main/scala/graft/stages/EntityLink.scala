@@ -1,5 +1,6 @@
 package graft.stages
 
+import graft.exec.BandJoin
 import graft.model.Mention
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,25 +84,22 @@ object EntityLink {
   /** Distinct (kind, name) -> verified same-entity edges
     * (kind, src, dst, jaccard).
     *
-    * Two scale guards from the blocking literature keep the self-join
-    * linear on hostile inputs:
+    * Two scale guards keep the self-join linear on hostile inputs:
     *  - **identical-key folding**: names with the same normalized shingle
     *    key (case/punctuation/spacing variants — jaccard exactly 1) link
     *    as a star to the group minimum: g-1 edges instead of g(g-1)/2
     *    LSH candidates, and only one representative per key enters LSH;
-    *  - **block purging**: an LSH bucket larger than `maxBucket` is
-    *    non-discriminative boilerplate (shared-prefix corpora collapse
-    *    whole corpora into one bucket) and is dropped — true near-dups
-    *    also collide in rarer buckets of the other bands. Purged buckets
-    *    are logged with their count, never silent; the count is tallied
-    *    by the job that materializes the pruned band table, not by a job
-    *    of its own.
+    *  - **the giant-bucket chain** of [[graft.exec.BandJoin]]: an LSH
+    *    bucket over its cap (shared-prefix name lists collapse into one
+    *    bucket) pairs each name with its next two in [[BandJoin.sigOrderKey]]
+    *    order of the name's signature, computed for those names only.
     *
-    * Jobs: the pruned band table is one eager localCheckpoint (its
-    * shuffle stages for the keyed dedup + min-window and the bucket
-    * window, then its result stage); the returned frame is lazy.
+    * Plan: `keyed` is one (kind, skey) exchange, reused by the star
+    * edges; the band rows are built once, under the bucket-size window's
+    * exchange, which the self-join and the chain both sit on. No eager
+    * job: the returned frame is lazy.
     */
-  def fuzzyEdges(names: DataFrame, tau: Double, maxBucket: Int = 1000): DataFrame = {
+  def fuzzyEdges(names: DataFrame, tau: Double): DataFrame = {
     val spark = names.sparkSession
     import spark.implicits._
 
@@ -112,13 +110,6 @@ object EntityLink {
     // co-locates every copy of a (kind, name) row, and the distinct on
     // (kind, name, skey) and the window over (kind, skey) both run inside
     // that partitioning.
-    // NOT localCheckpointed (round 6): keyed's two consumers are the
-    // star-edge projection (in the final plan) and the band build
-    // (materialized below) — recomputing the cheap shingle key +
-    // min-window from the caller's checkpointed name set costs one small
-    // exchange, where an eager checkpoint costs a job barrier on every
-    // call. The EXPENSIVE per-name work (the 64-hash minhash signature in
-    // bandKeys) stays computed exactly once, inside pruned's checkpoint.
     val keyed = names.select("kind", "name").as[(String, String)]
       .map { case (k, n) => (k, n, shingleKey(n)) }
       .toDF("kind", "name", "skey")
@@ -131,50 +122,17 @@ object EntityLink {
       .select(col("kind"), col("rep").as("src"), col("name").as("dst"),
         lit(1.0).as("jaccard"))
 
-    val banded = keyed.filter(col("name") === col("rep"))
+    val keys = Seq("kind", "band", "bkey")
+    val sized = keyed.filter(col("name") === col("rep"))
       .select("kind", "name").as[(String, String)]
       .flatMap { case (kind, name) =>
         bandKeys(name).map { case (b, k) => (kind, name, b, k) }
       }.toDF("kind", "name", "band", "bkey")
-
-    // Bucket sizes as a count-over-window on the SAME keys the self-join
-    // below partitions by (round 6: the groupBy + join-back formulation
-    // paid an aggregation exchange plus a join exchange for the same
-    // pruning). The purge runs inside the eager localCheckpoint that
-    // materializes the pruned band table, so the expensive per-name work
-    // (the 64-hash minhash signature in bandKeys) runs exactly once, and
-    // the purge is tallied by the job that runs anyway: that job's
-    // result stage applies each task's accumulator update exactly once,
-    // and every band row passes the filter. A purged bucket is counted
-    // at its minimum name (names are distinct inside a bucket), so the
-    // tally is a bucket count; it is logged, never silent.
-    val bucket = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("kind"), col("band"), col("bkey"))
-    val purged = spark.sparkContext.longAccumulator
-    val keep = udf { (size: Long, bucketMin: Boolean) =>
-      if (size > maxBucket && bucketMin) purged.add(1)
-      size <= maxBucket
-    }.asNondeterministic()
-    val pruned = banded
-      .withColumn("__bsz", count(lit(1)).over(bucket))
-      .withColumn("__bmin", min(col("name")).over(bucket))
-      .filter(keep(col("__bsz"), col("name") === col("__bmin")))
-      .drop("__bsz", "__bmin")
-      .localCheckpoint(true)
-    if (purged.value > 0) org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      s"fuzzyEdges: purged ${purged.value} LSH buckets larger than $maxBucket names")
-
-    val l = pruned.as("l")
-    // hint("merge") (round 6, the s02 lesson): without it the planner
-    // broadcasts one side at small name counts, and the broadcast build
-    // is a job of its own that collects the band table on the driver.
-    // The sort-merge join hash-partitions the checkpointed table once by
-    // the join keys and reuses that exchange for the other side.
-    val r = pruned.as("r").hint("merge")
-    val candidates = l.join(r,
-        $"l.kind" === $"r.kind" && $"l.band" === $"r.band" &&
-          $"l.bkey" === $"r.bkey" && $"l.name" < $"r.name")
-      .select($"l.kind".as("kind"), $"l.name".as("src"), $"r.name".as("dst"))
+      .withColumn(BandJoin.Size, BandJoin.bucketSize(keys))
+    val orderKey = udf((n: String) => BandJoin.sigOrderKey(signature(shingles(n))))
+    val candidates = BandJoin.pairs(sized, keys, "name",
+        _.withColumn("__ord", orderKey(col("name"))), (l, _) => Seq(l("kind").as("kind")))
+      .select(col("kind"), col("a").as("src"), col("b").as("dst"))
       .distinct()
 
     val fuzzy = candidates.as[(String, String, String)]

@@ -228,9 +228,9 @@ class QueriesSpec extends SparkSpec {
     // two same-cluster members.
     def key(cluster: Int) = Array.fill(8)(cluster.toLong)
     val rows = (0L until 39L).map(id =>
-      (id, 0, 7L, graft.queries.SimilarityQueries.packSig(key((id % 3).toInt))))
-    val edges = graft.queries.SimilarityQueries.giantBucketChains(
-        rows.toDF("doc_id", "band", "bkey", "__sig"))
+      (id, 0, 7L, graft.exec.BandJoin.packSig(key((id % 3).toInt))))
+    val edges = graft.exec.BandJoin.chain(
+        rows.toDF("doc_id", "band", "bkey", "__ord"), Seq("band", "bkey"), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(edges.forall { case (a, b) => a < b }, "pairs must be normalized a < b")
     // verification would drop cross-cluster edges: the SAME-cluster

@@ -55,24 +55,78 @@ class LinkingSpec extends SparkSpec {
     assert(ccDist == cc)
   }
 
-  test("identical-key groups fold linearly; oversized buckets are purged") {
-    import spark.implicits._
-    // 1500 punctuation variants of one name: identical shingle keys.
-    // Pairwise LSH would be ~1.1M candidates; the star fold emits 1499
-    // edges and only ONE representative enters LSH.
-    val variants = (0 until 1500).map(i => ("author", "John Smith" + ("." * (i + 1))))
-    // plus 1200 same-prefix boilerplate names that all share the same
-    // dominant minhash slots -> one mega bucket, purged by maxBucket
-    val boiler = (0 until 1200).map(i => ("author", s"the common prefix entry $i"))
-    val names = (variants ++ boiler).toDF("kind", "name")
-    // the purge is logged with its bucket count, tallied by the jobs that
-    // build the edges: no job of its own (an eager purge-count job made
-    // building and collecting these edges 11 jobs)
-    val ((edges, jobs), logged) = graft.LogCapture("graft.stages") {
-      countJobs(EntityLink.fuzzyEdges(names, tau = 0.55, maxBucket = 500).collect())
+  /** Driver-side fuzzyEdges over distinct (kind, name) rows, for inputs
+    * whose LSH buckets all sit under the cap: star edges to each
+    * shingle-key minimum, plus every pair of those minima that shares a
+    * `bandKeys` entry and verifies at J >= tau.
+    */
+  private def referenceEdges(names: Seq[(String, String)], tau: Double): Seq[(String, String, String)] = {
+    val groups = keyGroups(names)
+    val star = groups.flatMap { g =>
+      val (k, rep) = g.min
+      g.filter(_._2 != rep).map(n => (k, rep, n._2))
     }
-    val purges = logged.filter(_.startsWith("fuzzyEdges: purged"))
-    assert(purges == Seq("fuzzyEdges: purged 12 LSH buckets larger than 500 names"), logged)
+    val buckets = repBuckets(groups.map(_.min))
+    assert(buckets.forall(_.size <= graft.exec.BandJoin.GiantBucketCap), "input has a giant bucket")
+    val fuzzy = buckets.flatMap(b => for ((k, x) <- b; (_, y) <- b if x < y) yield (k, x, y)).distinct
+      .filter { case (_, x, y) => EntityLink.jaccard(EntityLink.shingles(x), EntityLink.shingles(y)) >= tau }
+    (star ++ fuzzy).sorted
+  }
+
+  /** Distinct (kind, name) rows grouped by (kind, shingle key). */
+  private def keyGroups(names: Seq[(String, String)]): Seq[Seq[(String, String)]] =
+    names.distinct.groupBy { case (k, n) => (k, EntityLink.shingleKey(n)) }.values.toSeq
+
+  /** LSH buckets of (kind, representative name) rows: one member list
+    * per (kind, band, bandKey).
+    */
+  private def repBuckets(reps: Seq[(String, String)]): Seq[Seq[(String, String)]] =
+    reps.flatMap { case (k, n) => EntityLink.bandKeys(n).map(bk => ((k, bk), (k, n))) }
+      .groupBy(_._1).values.map(_.map(_._2)).toSeq
+
+  test("fuzzyEdges equals a driver-side reference where no LSH bucket is over the cap") {
+    import spark.implicits._
+    val fixture = Seq(
+      ("author", "Nicholas O'Dea"), ("author", "Nicholas ODea"),
+      ("inst", "Center for Quantum Science and Engineering"),
+      ("inst", "Centre for Quantum Science and Engineering"),
+      ("inst", "Stanford University"), ("inst", "Seoul National University"),
+      ("author", "Zheng Yan"))
+    // typo and punctuation variants of 150 generated author names, plus
+    // the 1,500 punctuation variants of the guard case below (one shingle
+    // key, so one representative)
+    val rnd = new scala.util.Random(7)
+    def word(n: Int) = (0 until n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString.capitalize
+    val typos = (0 until 150).flatMap { _ =>
+      val name = s"${word(5)} ${word(8)}"
+      val i = 1 + rnd.nextInt(name.length - 1)
+      Seq(name, name.updated(i, ('a' + rnd.nextInt(26)).toChar), name.toUpperCase.replace(" ", ". "))
+    }.map(("author", _))
+    val variants = (0 until 1500).map(i => ("author", "John Smith" + ("." * (i + 1))))
+    for (names <- Seq(fixture, fixture ++ typos ++ variants)) {
+      val got = EntityLink.fuzzyEdges(names.toDF("kind", "name"), 0.55)
+        .as[(String, String, String, Double)].collect().toSeq
+      val expected = referenceEdges(names, 0.55)
+      assert(got.map(e => (e._1, e._2, e._3)).sorted == expected)
+      assert(got.forall(e => e._4 == EntityLink.jaccard(EntityLink.shingles(e._2), EntityLink.shingles(e._3))))
+    }
+  }
+
+  /** 1,500 punctuation variants of one name (identical shingle keys) and
+    * 1,200 same-prefix boilerplate names that share their dominant minhash
+    * slots: LSH buckets far over the cap.
+    */
+  private val hostile = (0 until 1500).map(i => ("author", "John Smith" + ("." * (i + 1)))) ++
+    (0 until 1200).map(i => ("author", s"the common prefix entry $i"))
+  private def hostileNames = {
+    import spark.implicits._
+    hostile.toDF("kind", "name")
+  }
+
+  test("identical-key groups fold linearly; giant LSH buckets are chained") {
+    // Pairwise LSH over the variants would be ~1.1M candidates; the star
+    // fold emits 1499 edges and only ONE representative enters LSH
+    val (edges, jobs) = countJobs(EntityLink.fuzzyEdges(hostileNames, tau = 0.55).collect())
     assert(jobs <= 7, s"$jobs jobs to build and collect the fuzzy edges")
     // every variant links to the group minimum ("John Smith." — shortest
     // sorts first), so CC resolves the whole group through 1499 edges
@@ -80,12 +134,61 @@ class LinkingSpec extends SparkSpec {
       r.getString(1) == "John Smith." && r.getString(2).startsWith("John Smith."))
     assert(star.length == 1499, s"star edges: ${star.length}")
     // the boilerplate names are genuinely mutually similar (long shared
-    // prefix), so above-tau pairs among them are CORRECT output — the
-    // guards bound candidate generation (the purge warning above), not
-    // the verified-edge count; fewer than all-pairs shows the
-    // purge cut candidates while the star fold covered its group exactly
+    // prefix), so above-tau pairs among them are CORRECT output; the
+    // guards bound candidate generation, so far fewer than all pairs
     val allPairsBound = 1499 + 1200 * 1199 / 2
     assert(edges.length < allPairsBound, s"edges: ${edges.length}")
+    // every edge verifies at J >= tau, with its reported jaccard
+    edges.foreach { r =>
+      val j = EntityLink.jaccard(EntityLink.shingles(r.getString(1)), EntityLink.shingles(r.getString(2)))
+      assert(j >= 0.55 && j == r.getDouble(3), r)
+    }
+    // giant buckets contribute at most 2 edges per member per band: the
+    // fuzzy edges no bucket under the cap explains are chain edges
+    val (giant, small) = repBuckets(keyGroups(hostile).map(_.min))
+      .partition(_.size > graft.exec.BandJoin.GiantBucketCap)
+    assert(giant.nonEmpty, "no bucket over the cap: the guard is not exercised")
+    val smallPairs = small.flatMap(b => for ((_, x) <- b; (_, y) <- b if x < y) yield (x, y)).toSet
+    val viaChain = edges.filter(_.getDouble(3) < 1.0).map(r => (r.getString(1), r.getString(2)))
+      .filterNot(smallPairs)
+    assert(viaChain.nonEmpty, "no chain edge in the output")
+    assert(viaChain.length <= giant.map(2 * _.size).sum,
+      s"${viaChain.length} chain edges over ${giant.size} giant buckets of ${giant.map(_.size).sum} members")
+  }
+
+  test("fuzzyEdges builds its band rows and its keyed exchange once") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    val df = EntityLink.fuzzyEdges(hostileNames, tau = 0.55)
+    df.collect()
+    // every node of the final adaptive plan; a reused exchange's subtree
+    // is not walked, since it does not run again
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => Seq(r)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val plan = nodes(df.queryExecution.executedPlan)
+    def keysOf(e: SparkPlan) = e.outputPartitioning match {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute].name)
+      case _ => Nil
+    }
+    val exchanges = plan.collect { case e: ShuffleExchangeExec => keysOf(e) }
+    val reused = plan.collect { case r: ReusedExchangeExec => keysOf(r.child) }
+    val shown = s"exchanges $exchanges, reused $reused, final plan:\n" +
+      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    // the bandKeys flatMap (the one MapPartitions) runs once
+    assert(plan.count(_.nodeName == "MapPartitions") == 1, shown)
+    // the (kind, skey) exchange runs once and the star edges reuse it;
+    // the band rows shuffle once, for the bucket-size window, and the
+    // self-join and the chain reuse that exchange
+    assert(exchanges.count(_ == Seq("kind", "skey")) == 1, shown)
+    assert(reused.contains(Seq("kind", "skey")), shown)
+    assert(exchanges.count(_ == Seq("kind", "band", "bkey")) == 1, shown)
+    assert(exchanges.length == 3, shown)
   }
 
   test("distributed CC converges on a high-diameter chain within maxIter") {
