@@ -17,15 +17,15 @@ import org.apache.spark.sql.functions._
   *   cc [edgeCounts]                        CC union-find vs label-prop crossover
   *   dedup [n] [dir]                        s01/s10 dedup recall + keepers, t15/t17/t19 gates
   *   incremental [n] [dir]                  s12/s13 warm incremental batch after a real append
-  *   plans <sfDir> [tag] [queries]          `explain("formatted")` of each declared query
+  *   plans <sfDir> <outDir> [queries]       formatted plans of each query and its index builds
   * }}}
   *
   * Defaults: `ann` n = 1000000, dir /tmp/graft_ann_scale, queries
   * s04_ann_lsh_topk,s07_ann_ivf_topk,s09_ann_sq8_rerank, k and nprobe
   * the pinned s07 configuration; `cc` 132000,500000,1000000,2000000;
   * `dedup` n = 1000000, dir /tmp/graft_dedup_scale; `incremental`
-  * n = 1000000, dir /tmp/graft_inc_scale; `plans` tag "before", all
-  * queries. SPARK_GRAFT_CPUS (default 4) sizes the session.
+  * n = 1000000, dir /tmp/graft_inc_scale; `plans` all queries.
+  * SPARK_GRAFT_CPUS (default 4) sizes the session.
   *
   * Every Spark tool runs on [[MainUtil.session]], the session Bench and
   * Verify run on, so its evidence is gathered under the same extensions
@@ -65,8 +65,9 @@ object Probe {
       case "dedup" => dedup(spark, arg(0, "1000000").toLong, arg(1, "/tmp/graft_dedup_scale"))
       case "incremental" =>
         incremental(spark, arg(0, "1000000").toLong, arg(1, "/tmp/graft_inc_scale"))
-      case "plans" => plans(spark, arg(0, throw new IllegalArgumentException(
-        "plans needs <sfDir>")), arg(1, "before"), args.lift(2).map(list(_).toSet))
+      case "plans" =>
+        def usage = throw new IllegalArgumentException("plans needs <sfDir> <outDir>")
+        plans(spark, arg(0, usage), arg(1, usage), args.lift(2).map(list(_).toSet))
     }
   }
 
@@ -770,34 +771,48 @@ object Probe {
 
   // ---- plans ----------------------------------------------------------
 
-  /** Plan dump: `.explain("formatted")` for every declared query over
-    * `sfDir` to `plans/r06/<name>_<tag>.txt`, restricted to `only` when
-    * given. The queries' results are not computed, but Spark jobs do
-    * run while each DataFrame is constructed: an index-backed query
-    * (s01, s04, s06, s07, s09-s13) fingerprints its input and builds and
-    * commits any index that is not warm, and eager steps (s07's
-    * centroid collect, s12's `localCheckpoint`, the CC path probe) run
-    * too. Plans of two builds compare after `#<exprId>` suffixes and
-    * file paths are normalized.
+  /** Plan dump into `outDir` for every declared query over `sfDir`
+    * (only those in `only`, when given): `<name>.txt` is the query's
+    * `.explain("formatted")`, and `<name>.build.<stage>.txt` the executed
+    * plan of each index data write the query ran while its DataFrame was
+    * constructed (an index-backed query's own plan only reads the index
+    * back). Building a DataFrame runs jobs: input fingerprints, the
+    * builds of indexes that are not warm, and eager steps such as s07's
+    * centroid collect and s12's `localCheckpoint`.
     */
-  def plans(spark: SparkSession, sfDir: String, tag: String,
+  def plans(spark: SparkSession, sfDir: String, outDir: String,
       only: Option[Set[String]]): Unit = {
-    val outDir = java.nio.file.Paths.get("plans/r06")
-    java.nio.file.Files.createDirectories(outDir)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
-    names.foreach { name =>
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        java.nio.file.Files.write(outDir.resolve(s"${name}_$tag.txt"),
-          plan.getBytes("UTF-8"))
-        println(s"[plandump] $name -> plans/r06/${name}_$tag.txt")
-      } catch {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val out = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    def explain(qe: QueryExecution): String =
+      qe.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    def write(file: String, plan: String): Unit = {
+      java.nio.file.Files.write(out.resolve(file), plan.getBytes("UTF-8"))
+      println(s"[plandump] ${out.resolve(file)}")
+    }
+    // (stage, plan) per index build: Checkpoint writes a stage's rows to
+    // <root>/<stage>/data
+    val builds = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case w: InsertIntoHadoopFsRelationCommand if w.outputPath.getName == "data" =>
+            builds.add((w.outputPath.getParent.getName, explain(qe)))
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_.contains(n))).foreach { name =>
+      try write(s"$name.txt", explain(SparkEntry.queries(name)(spark, sfDir).queryExecution))
+      catch {
         case e: Throwable =>
           System.err.println(s"[plandump] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-    }
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      Iterator.continually(builds.poll()).takeWhile(_ != null)
+        .foreach { case (stage, plan) => write(s"$name.build.$stage.txt", plan) }
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Complements AQE skew-join splitting (enabled in the session config):
   * AQE fixes skewed *partitions* after a shuffle; salting fixes a single
   * hot *key* that AQE cannot split inside one hash bucket of a
-  * non-sort-merge plan. Use for groupBy-heavy keys too via [[saltedKey]].
+  * non-sort-merge plan.
   */
 object SkewSafeJoin {
 
@@ -41,15 +41,5 @@ object SkewSafeJoin {
     val replicated = small.withColumn("__salt",
       explode(sequence(lit(0), lit(saltBuckets - 1))))
     salted.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
-  /** Two-level aggregation for a skewed groupBy key: partial-aggregate on
-    * (key, salt) first, then merge per key — bounds any single reducer's
-    * input to rows/saltBuckets for the hot key.
-    */
-  def saltedCount(df: DataFrame, key: String, saltBuckets: Int = 16): DataFrame = {
-    df.withColumn("__salt", salt(saltBuckets))
-      .groupBy(col(key), col("__salt")).agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key)).agg(sum("__partial").as("cnt"))
   }
 }

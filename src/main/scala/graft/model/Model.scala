@@ -102,9 +102,6 @@ final case class ExtractedRow(
     kind: Option[String] = None,
     surface: Option[String] = None)
 
-/** Canonical entity row of the materialized entity table. */
-final case class Entity(entityId: String, kind: String, canonicalName: String)
-
 /** A row of the failure/quarantine side-output (E2 semantics:
   * aps_extractor.py:401-418 returns an error record instead of raising).
   */

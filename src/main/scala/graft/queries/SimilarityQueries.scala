@@ -23,8 +23,10 @@ object SimilarityQueries {
   private def embs(dir: String)(implicit s: SparkSession): DataFrame =
     s.read.parquet(s"$dir/embeddings.parquet")
 
-  /** Embeddings rows with vec_id < bound as the typed (id, vector) view.
-    * The predicate is a COLUMN filter applied BEFORE the typed
+  /** Rows of the embeddings read `e` with vec_id < bound as the typed
+    * (id, vector) view. Each query reads the table once (a read is a
+    * schema-inference job of its own) and takes every view from it. The
+    * predicate is a COLUMN filter applied BEFORE the typed
     * conversion, so it pushes into the parquet scan (PushedFilters:
     * LessThan(vec_id,bound) — min/max row-group stats prune the read to
     * the few groups holding the probe ids). A typed-lambda filter on the
@@ -34,11 +36,9 @@ object SimilarityQueries {
     * scan of the corpus — linear per-query work on exactly the paths the
     * persisted indexes exist to make sublinear (round-4 VERDICT #1).
     */
-  private def embsBelow(dir: String, bound: Long)(implicit s: SparkSession)
-      : org.apache.spark.sql.Dataset[(Long, Seq[Float])] = {
-    import s.implicits._
-    embs(dir).filter(col("vec_id") < bound)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])]
+  private def embsBelow(e: DataFrame, bound: Long): Dataset[(Long, Seq[Float])] = {
+    import e.sparkSession.implicits._
+    e.filter(col("vec_id") < bound).select("vec_id", "embedding").as[(Long, Seq[Float])]
   }
 
   type Q = (SparkSession, String) => DataFrame
@@ -76,9 +76,7 @@ object SimilarityQueries {
     * byte-identical with or without the guard.
     */
   def neardupPairsOf(docsDf: DataFrame): DataFrame = {
-    val sp = docsDf.sparkSession
-    import sp.implicits._
-    val d = docsDf.select("doc_id", "text").as[(Long, String)]
+    val d = docTexts(docsDf)
     pairsFromSized(bandedOf(d).withColumn(BandJoin.Size, BandJoin.bucketSize(NdKeys)), d)
   }
 
@@ -87,13 +85,13 @@ object SimilarityQueries {
 
   /** The pair engine downstream of the banding pass: takes the
     * size-annotated band rows (doc_id, band, bkey, __bsz) plus the
-    * texts, so a caller that already materialized the banded frame
-    * (s12's delta, which also feeds the broadcast probe side) does not
-    * shingle the corpus a second time.
+    * texts, so a caller that already holds the band rows (s13's old
+    * keeper build, which reads them back from the committed s12 index)
+    * does not shingle the corpus a second time.
     */
   private[graft] def pairsFromSized(sized: DataFrame, d: Dataset[(Long, String)]): DataFrame =
     verifyPairs(BandJoin.pairs(sized, NdKeys, "doc_id",
-      giant => giant.join(sigKeysOf(d, giant.select("doc_id")), "doc_id")).distinct(), d)
+      giant => giant.join(sigKeysOf(d, giant.select("doc_id")), "doc_id")).distinct(), d, d)
 
   /** The banded-signature projection shared by the full s01 engine and
     * the s12 incremental path: one (doc_id, band, bkey) row per band,
@@ -132,19 +130,12 @@ object SimilarityQueries {
   }
 
   /** Exact-Jaccard verification of candidate pairs (a, b) against the
-    * texts in `d`: moves only the CANDIDATE pairs' texts, emits
-    * (a, b, jaccard) for jaccard >= 0.8. Shared by the full engine and
-    * the incremental path so the two can never diverge on the
-    * verification contract.
-    */
-  private[graft] def verifyPairs(pairs: DataFrame, d: Dataset[(Long, String)]): DataFrame =
-    verifyPairs(pairs, d, d)
-
-  /** Split-source variant: the a-side and b-side texts may come from
-    * different (pruned) frames — s12 fetches a-side texts from the old
-    * id range and b-side texts from the delta range, so each text scan
-    * carries a pushable id-range predicate instead of reading the whole
-    * table twice.
+    * a-side texts in `dA` and the b-side texts in `dB`: moves only the
+    * CANDIDATE pairs' texts, emits (a, b, jaccard) for jaccard >= 0.8.
+    * Shared by the full engine and the incremental path so the two can
+    * never diverge on the verification contract. s12's `dB` is the delta
+    * slice (every s12 b is a delta id), so that text scan carries the
+    * pushable cutoff predicate.
     */
   private[graft] def verifyPairs(pairs: DataFrame, dA: Dataset[(Long, String)],
       dB: Dataset[(Long, String)]): DataFrame = {
@@ -200,14 +191,13 @@ object SimilarityQueries {
     * join (cap-defeating, O(|bucket|) per delta doc) is never planned.
     * Built once per snapshot — the build shingles the old corpus exactly
     * once (the same work s01's cold build does); thereafter incremental
-    * runs read it back marker-validated.
+    * runs read it back marker-validated. `d` is the calling query's one
+    * documents read; the build slices the old corpus from it.
     */
-  private def nd12Bands(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
-    implicit val sp = s
-    import sp.implicits._
+  private def nd12Bands(s: SparkSession, dir: String, cutoff: Long,
+      d: Dataset[(Long, String)]): DataFrame =
     indexes.stage(s, IndexStore.oldBands(s, dir, cutoff)) {
-      val old = docs(dir).filter(col("doc_id") < cutoff)
-        .select("doc_id", "text").as[(Long, String)]
+      val old = d.filter(col("doc_id") < cutoff)
       val sized = bandedOf(old).withColumn("n_old", BandJoin.bucketSize(NdKeys))
       val small = sized.filter(col("n_old") <= GiantBucketCap)
         .withColumn("is_rep", lit(true))
@@ -219,39 +209,7 @@ object SimilarityQueries {
         .select("doc_id", "band", "bkey", "n_old", "is_rep")
       small.unionByName(giantKeyed)
     }
-  }
 
-  /** s12: INCREMENTAL near-dup dedup — the production shape of a
-    * continuously-ingesting training pipeline, where re-running the full
-    * s01 build over old + new is O(corpus) per batch. The delta (ids >=
-    * the cutoff) is shingled/banded FRESH — O(delta) — and
-    * its band rows BROADCAST-join the persisted old-bands index, so the
-    * old corpus is neither re-shingled nor re-shuffled (an un-hinted
-    * join would plan SMJ and shuffle all O(N) old band rows every
-    * batch; broadcasting the delta side instead re-executes only the
-    * O(delta) banding lineage per broadcast build). Guards are
-    * symmetric: old giant buckets expose sig-spaced representatives
-    * (index build, above); delta buckets over the cap probe with
-    * [[BandJoin.GiantBucketReps]] id-spaced members of their own, the
-    * rest of the delta cluster connecting through the delta self-run's
-    * chain edges.
-    * Candidates verify with the shared exact-Jaccard [[verifyPairs]];
-    * new-new pairs come from the UNCHANGED full engine run on the delta
-    * alone. Output = s01's schema (a, b, jaccard) restricted to pairs
-    * touching the delta (a < b and delta is the id tail, so exactly
-    * b >= cutoff); where no bucket exceeds the cap — every sf corpus —
-    * the result is value-identical to s01 filtered to b >= cutoff (the
-    * equality the spec asserts; near the cap the two may legitimately
-    * diverge, because s01 sizes buckets over old+new COMBINED while the
-    * incremental path sizes the two sides it sees separately).
-    *
-    * What a delta run still pays at full scale: one columnar text scan
-    * of the documents table for verification (old candidate texts are
-    * scattered point lookups — with an id-sorted/bucketed documents
-    * layout that scan row-group-prunes; the delta side's contiguous id
-    * range already prunes via the pushed cutoff filter) — but never the
-    * O(N) shingle/minhash compute, which dominates the cold build.
-    */
   /** Above this many delta docs the probe-side broadcast is no longer
     * "small" (bands are 24 B/doc/band; 5M docs ~ 2 GB serialized) and
     * the query falls back to a plain equi join — at that delta size the
@@ -271,53 +229,69 @@ object SimilarityQueries {
 
   private[graft] def incrementalNeardupAt(s: SparkSession, dir: String,
       cutoff: Long): DataFrame =
-    incrementalPairsAt(s, dir, cutoff).orderBy("a", "b")
+    incrementalPairsAt(s, dir, cutoff, docTexts(docs(dir)(s))).orderBy("a", "b")
 
-  /** The unsorted s12 pair engine — s13 consumes this directly so the
-    * s12 query surface's orderBy does not ride into the keeper's CC
-    * lineage as a dead global sort (round 6; see dedupKeeper's note).
+  /** (doc_id, text) of a documents read. */
+  private def docTexts(docsDf: DataFrame): Dataset[(Long, String)] = {
+    import docsDf.sparkSession.implicits._
+    docsDf.select("doc_id", "text").as[(Long, String)]
+  }
+
+  /** s12: INCREMENTAL near-dup dedup of a continuously-ingesting corpus,
+    * where re-running s01 over old + new is O(corpus) per batch. Unsorted:
+    * s13 consumes it, and a sort would ride into its CC lineage.
+    *
+    * One probe into one index, as in a streaming set-similarity join
+    * (every new record probes an index that also holds the batch's
+    * earlier records). The delta (ids >= cutoff, sliced from the
+    * caller's one documents read `d`) is banded fresh, O(delta). The
+    * INDEXED side is the old band rows the old-side guard keeps (see
+    * [[nd12Bands]]) unioned with the delta's own band rows, streamed
+    * through the join in place: the old corpus is neither re-shingled
+    * nor re-shuffled. The PROBE side broadcasts: every delta row of a
+    * bucket of at most [[GiantBucketCap]] rows, and
+    * [[BandJoin.GiantBucketReps]] id-spaced members of each larger one.
+    * Each match is (least, greatest) with self-matches dropped, so
+    * old-new and new-new pairs come from one join and verify once.
+    *
+    * Output = s01's (a, b, jaccard) restricted to pairs touching the
+    * delta (b >= cutoff). Where no bucket exceeds the cap (every sf
+    * corpus) it equals s01 filtered to b >= cutoff, as the spec asserts.
+    * Near the cap they may differ: s01 sizes buckets over old + new, this
+    * path each side apart, and a giant delta bucket links as a star
+    * around its reps (about GiantBucketReps edges per member) where s01
+    * chains it, with the same connectivity. A warm run never pays the
+    * O(N) shingling; it pays one columnar text scan for verification.
     */
-  private def incrementalPairsAt(s: SparkSession, dir: String,
-      cutoff: Long): DataFrame = {
-    implicit val sp = s
-    import sp.implicits._
-    val bands = nd12Bands(s, dir, cutoff)
-    val delta = docs(dir).filter(col("doc_id") >= cutoff)
-      .select("doc_id", "text").as[(Long, String)]
-    // localCheckpoint: the size-annotated delta bands feed THREE
-    // consumers — the broadcast probe build (which executes as its own
-    // job; exchange reuse never crosses into a broadcast build), the
-    // rep selection, and the delta self-run below. Without
-    // materialization each would re-run the whole O(delta)
-    // shingle+window lineage. Blocks live on executors, so this stays
-    // distributed; eager = one banding job total per batch.
+  private def incrementalPairsAt(s: SparkSession, dir: String, cutoff: Long,
+      d: Dataset[(Long, String)]): DataFrame = {
+    val delta = d.filter(col("doc_id") >= cutoff)
+    // localCheckpoint: the size-annotated delta bands feed the broadcast
+    // probe build (its own job; exchange reuse never crosses into a
+    // broadcast build), the rep selection and the indexed side. Without
+    // materialization each would re-run the O(delta) shingle + window
+    // lineage. Blocks live on executors, so this stays distributed.
     val dSized = bandedOf(delta).withColumn(BandJoin.Size, BandJoin.bucketSize(NdKeys))
       .localCheckpoint(true)
-    // delta size for the broadcast decision comes from the banded frame
-    // just materialized (exactly Bands rows per doc, counted off the
-    // localCheckpoint blocks) — a dedicated count over the documents
-    // table would add a full doc_id scan to the warm path whose point
-    // is minimizing O(N) residuals
+    // delta size for the broadcast decision, counted off the
+    // localCheckpoint blocks (exactly Bands rows per doc): a count over
+    // the documents table would add a doc_id scan to the warm path
     val deltaN = dSized.count() / EntityLink.Bands
-    val probe = dSized.filter(col("__bsz") <= GiantBucketCap)
-      .unionByName(dSized.filter(col("__bsz") > GiantBucketCap)
-        .withColumn("__rep", BandJoin.isRep(NdKeys, col("__bsz"), col("doc_id")))
+    val probe = dSized.filter(col(BandJoin.Size) <= GiantBucketCap)
+      .unionByName(dSized.filter(col(BandJoin.Size) > GiantBucketCap)
+        .withColumn("__rep", BandJoin.isRep(NdKeys, col(BandJoin.Size), col("doc_id")))
         .filter(col("__rep")).drop("__rep"))
       .select(col("doc_id").as("b"), col("band"), col("bkey"))
     val probeSide = if (deltaN <= Nd12BroadcastMaxDelta) broadcast(probe) else probe
-    val cand = bands.filter(col("n_old") <= GiantBucketCap || col("is_rep"))
-      .join(probeSide, Seq("band", "bkey"))
-      .select(col("doc_id").as("a"), col("b"))
+    val indexed = nd12Bands(s, dir, cutoff, d)
+      .filter(col("n_old") <= GiantBucketCap || col("is_rep"))
+      .select("doc_id", "band", "bkey")
+      .unionByName(dSized.select("doc_id", "band", "bkey"))
+    val cand = indexed.join(probeSide, Seq("band", "bkey"))
+      .filter(col("doc_id") =!= col("b"))
+      .select(least(col("doc_id"), col("b")).as("a"), greatest(col("doc_id"), col("b")).as("b"))
       .distinct()
-    // split text sources: a-side ids are all < cutoff, b-side >= cutoff
-    // — both scans carry a pushable id-range predicate
-    val cross = verifyPairs(cand,
-      docs(dir).filter(col("doc_id") < cutoff)
-        .select("doc_id", "text").as[(Long, String)],
-      delta)
-    // delta self-run consumes the SAME materialized banded frame
-    val newnew = pairsFromSized(dSized, delta)
-    cross.unionByName(newnew)
+    verifyPairs(cand, d, delta)
   }
 
   // ---- s13: incremental dedup keeper (the last mile, per batch) ----
@@ -332,17 +306,13 @@ object SimilarityQueries {
     * recompute (confined to giant-bucket members) and the candidate
     * verification text fetch. Same s01 semantics on the slice.
     */
-  private def nd13OldKeepers(s: SparkSession, dir: String, cutoff: Long): DataFrame = {
-    implicit val sp = s
-    import sp.implicits._
+  private def nd13OldKeepers(s: SparkSession, dir: String, cutoff: Long,
+      d: Dataset[(Long, String)]): DataFrame =
     indexes.stage(s, IndexStore.oldKeepers(s, dir, cutoff)) {
-      val old = docs(dir).filter(col("doc_id") < cutoff)
-        .select("doc_id", "text").as[(Long, String)]
-      val sized = nd12Bands(s, dir, cutoff)
+      val sized = nd12Bands(s, dir, cutoff, d)
         .select(col("doc_id"), col("band"), col("bkey"), col("n_old").as("__bsz"))
-      pairedKeepers(pairsFromSized(sized, old))
+      pairedKeepers(pairsFromSized(sized, d.filter(col("doc_id") < cutoff)))
     }
-  }
 
   /** s13: INCREMENTAL dedup keeper — per-batch keeper assignments
     * WITHOUT re-running connected components over the full corpus's
@@ -360,19 +330,21 @@ object SimilarityQueries {
     * full s10 holds wherever s12 equals filtered s01 (same giant-bucket
     * caveat, spec-asserted at sf scale).
     *
-    * What a warm batch pays: the s12 delta run (its own O(delta)
-    * contract), one read of the two persisted metadata-sized tables,
-    * CC on the batch-sized quotient graph, and one O(N) columnar
-    * doc_id scan to emit the full assignment table — no shingling, no
+    * What a warm batch pays: one documents read, shared by the s12
+    * delta run (its own O(delta) contract) and one O(N) columnar doc_id
+    * scan that emits the full assignment table, one read of the two
+    * persisted metadata-sized tables and CC on the batch-sized quotient
+    * graph — no shingling, no
     * full-graph CC, no corpus shuffle (the relabel map broadcasts).
     */
   private[graft] def incrementalKeeperAt(s: SparkSession, dir: String,
       cutoff: Long): DataFrame = {
-    implicit val sp = s
-    val oldKeep = nd13OldKeepers(s, dir, cutoff)
+    val docsDf = docs(dir)(s)
+    val d = docTexts(docsDf)
+    val oldKeep = nd13OldKeepers(s, dir, cutoff, d)
     // pairs touch the delta by contract (a < b, delta = id tail, so
     // b >= cutoff always; only a can be an old doc needing contraction)
-    val mapped = incrementalPairsAt(s, dir, cutoff)
+    val mapped = incrementalPairsAt(s, dir, cutoff, d)
       .select("a", "b")
       .join(oldKeep.select(col("doc_id").as("a"), col("keeper_doc_id").as("__ka")),
         Seq("a"), "left")
@@ -389,7 +361,7 @@ object SimilarityQueries {
     // unpaired), a delta doc itself — and nodeKeeper joins on __base
     // cover both cases because delta nodes enter the quotient graph
     // under their own id while old components enter under their keeper.
-    docs(dir).select("doc_id")
+    docsDf.select("doc_id")
       .join(oldKeep.withColumnRenamed("keeper_doc_id", "__k0"), Seq("doc_id"), "left")
       .withColumn("__base", when(col("doc_id") < cutoff,
         coalesce(col("__k0"), col("doc_id"))).otherwise(col("doc_id")))
@@ -564,7 +536,8 @@ object SimilarityQueries {
     implicit val sp = s
     import sp.implicits._
     val tables = 8
-    val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
+    val raw = embs(dir)
+    val e = raw.select("vec_id", "embedding").as[(Long, Seq[Float])]
     val emb = IndexStore.embeddings(s, dir)
     val bits = lshBits(emb.rows)
     val planes = lshPlanes(7000, tables, bits, dim = 64)
@@ -584,7 +557,7 @@ object SimilarityQueries {
     // The probe source is the pushdown-pruned embsBelow view, NOT a
     // typed filter on `e` — that shape full-scanned the corpus per query
     val masks = multiprobeMasks(bits)
-    val probes = embsBelow(dir, 10).flatMap { case (id, v) =>
+    val probes = embsBelow(raw, 10).flatMap { case (id, v) =>
       (0 until tables).flatMap { t =>
         val k = lshBucket(v, planes(t))
         masks.map(m => (id, t, k ^ m))
@@ -594,7 +567,7 @@ object SimilarityQueries {
       .filter(col("vec_id") =!= col("probe_id"))
       .select("probe_id", "vec_id")
       .dropDuplicates("probe_id", "vec_id") // union of L tables x multiprobe
-    val ef = embs(dir).select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
+    val ef = raw.select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
     val pf = ef.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("emb").as("probe"))
     // candidate set is small (O(log N) per probe) -> broadcast it; the
@@ -760,7 +733,8 @@ object SimilarityQueries {
     val emb = IndexStore.embeddings(s, dir)
     val bits = lshBits(emb.rows)
     val planes = lshPlanes(1100, tables, bits, dim = 64)
-    val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
+    val raw = embs(dir)
+    val e = raw.select("vec_id", "embedding").as[(Long, Seq[Float])]
     // round 4: the blocking table PERSISTS like s04/s07/s09's indexes —
     // corpus-wide dedup is naturally once-per-snapshot, but the bench
     // (and any re-run over an unchanged corpus) was paying the full
@@ -791,7 +765,7 @@ object SimilarityQueries {
     // Spark broadcasts the side that fits (500 rows here) and falls back
     // to a shuffle hash join at scale; either way content moves once per
     // side, not once per table
-    val ev = embs(dir).select(col("vec_id"), col("embedding"))
+    val ev = raw.select(col("vec_id"), col("embedding"))
     val pe = col("ea").cast("array<double>")
     val qe = col("eb").cast("array<double>")
     pairs
@@ -872,7 +846,8 @@ object SimilarityQueries {
     * broadcasts the 10x2-row probe side. s03 brute force is the
     * exact-answer reference (recall asserted in QueriesSpec).
     */
-  /** Build-or-read the persisted IVF quantizer for `dir`: the validated
+  /** Build-or-read the persisted IVF quantizer for `dir`, whose
+    * embeddings the caller read once as `raw`: the validated
     * (vec_id, embedding, cid) assignment table (cid-partitioned) and the
     * collected centroids — shared by [[annIvf]] (probe path) and
     * [[clusterStats]] (s11: the quantizer read as an analytics table).
@@ -880,11 +855,10 @@ object SimilarityQueries {
     * snapshots carry k so probe runs never collide with the pinned-index
     * stages.
     */
-  private[graft] def ivfIndex(s: SparkSession, dir: String,
+  private[graft] def ivfIndex(s: SparkSession, dir: String, raw: DataFrame,
       k: Int = IvfK): (DataFrame, Array[Array[Double]]) = {
-    implicit val sp = s
-    import sp.implicits._
-    val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
+    import s.implicits._
+    val e = raw.select("vec_id", "embedding").as[(Long, Seq[Float])]
     val emb = IndexStore.embeddings(s, dir)
     val cent = IndexStore.ivfCentroids(dir, emb, k)
     // the quantizer seed count is #(vec_id < k), not min(n, k): nothing
@@ -892,12 +866,12 @@ object SimilarityQueries {
     // (one centroid row per seed), so no count job runs; cold, the
     // Column predicate pushes to the scan and reads the seeds' row groups
     val seedN = indexes.committedRows(s, cent).filter(_ > 0)
-      .getOrElse(embs(dir).filter(col("vec_id") < k).select("vec_id").count())
+      .getOrElse(raw.filter(col("vec_id") < k).select("vec_id").count())
     require(seedN > 0,
       s"s07 IVF: no quantizer seed vectors (expected rows with vec_id < $k)")
     def buildCent(): DataFrame = {
       val seed: Array[Array[Double]] =
-        embsBelow(dir, k).collect().sortBy(_._1).map(_._2.map(_.toDouble).toArray)
+        embsBelow(raw, k).collect().sortBy(_._1).map(_._2.map(_.toDouble).toArray)
       lloyd(e, seed, iters = 2).zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cid", "centroid")
     }
@@ -935,8 +909,9 @@ object SimilarityQueries {
       nProbe: Int): DataFrame = {
     implicit val sp = s
     import sp.implicits._
-    val (assigned, centroids) = ivfIndex(s, dir, k)
-    val probeRows = embsBelow(dir, 10).collect()
+    val raw = embs(dir)
+    val (assigned, centroids) = ivfIndex(s, dir, raw, k)
+    val probeRows = embsBelow(raw, 10).collect()
       .flatMap { case (id, v) => nearestCids(v, centroids, nProbe).map(c => (id, v, c)) }
     val probes = probeRows.toSeq.toDF("probe_id", "probe", "cid")
     // the probed list ids, known up front -> the filter is a literal IN
@@ -970,7 +945,8 @@ object SimilarityQueries {
     implicit val sp = s
     import sp.implicits._
     val rerankWindow = 100
-    val e = embs(dir).select("vec_id", "embedding").as[(Long, Seq[Float])]
+    val raw = embs(dir)
+    val e = raw.select("vec_id", "embedding").as[(Long, Seq[Float])]
     // the int8 table is the third persisted ANN index (with s04's LSH
     // buckets and s07's inverted lists): quantization commits once per
     // embeddings snapshot; every query scans the 4x-smaller table
@@ -983,7 +959,7 @@ object SimilarityQueries {
             math.sqrt(v.iterator.map(x => x.toDouble * x).sum))
         }.toDF("vec_id", "q", "scale", "norm"))
       }
-    val probes = embsBelow(dir, 10)
+    val probes = embsBelow(raw, 10)
       .map { case (id, v) =>
         (id, v.map(_.toDouble).toArray,
           math.sqrt(v.iterator.map(x => x.toDouble * x).sum))
@@ -1003,7 +979,7 @@ object SimilarityQueries {
     val candidates = approx.withColumn("r", row_number().over(wA))
       .filter(col("r") <= rerankWindow).select("probe_id", "vec_id")
     // exact float rerank on the (10 probes x rerankWindow) candidates only
-    val ef = embs(dir).withColumn("emb", col("embedding").cast("array<double>"))
+    val ef = raw.withColumn("emb", col("embedding").cast("array<double>"))
     val pf = ef.filter(col("vec_id") < 10)
       .select(col("vec_id").as("probe_id"), col("emb").as("probe"))
     cosineTop5(candidates.join(ef.select(col("vec_id"), col("emb")), Seq("vec_id"))
@@ -1190,7 +1166,7 @@ object SimilarityQueries {
   private val clusterStats: Q = (s, dir) => {
     implicit val sp = s
     import sp.implicits._
-    val (assigned, centroids) = ivfIndex(s, dir)
+    val (assigned, centroids) = ivfIndex(s, dir, embs(dir))
     val centDf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toSeq.toDF("cid", "centroid")
     assigned

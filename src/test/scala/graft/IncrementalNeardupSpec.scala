@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.exec.IndexStore
+import graft.exec.{BandJoin, IndexStore}
 import graft.queries.SimilarityQueries
 
 /** s12 incremental near-dup: the delta batch (id tail) deduped against
@@ -49,7 +49,8 @@ class IncrementalNeardupSpec extends SparkSpec {
     docs += ((8L, mutate(base(0), 2, "oo")))
     (9 until 28).foreach(i => docs += ((i.toLong, words(60, 5000 + i).mkString(" "))))
     // delta docs 28..39: near-dup copies of old bases 1..4 (cross pairs),
-    // two mutual near-dups of base 5 (new-new via delta self-run), filler
+    // two mutual near-dups of base 5 (new-new: each finds the other's
+    // delta band rows in the index), filler
     docs += ((28L, mutate(base(1), 1, "d")))
     docs += ((29L, mutate(base(2), 2, "d")))
     docs += ((30L, mutate(base(3), 3, "d")))
@@ -128,6 +129,8 @@ class IncrementalNeardupSpec extends SparkSpec {
   }
 
   test("s12 giant DELTA bucket: id-spaced delta reps probe; self-run chains connect the rest") {
+    // (the name is kept so the test's history stays traceable: the reps'
+    // probe, not a chain, now links the rest of the bucket)
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_s12_dgiant").toString
     val template = (1 to 40).map(i => s"promo$i click buy now").mkString(" ")
@@ -153,10 +156,19 @@ class IncrementalNeardupSpec extends SparkSpec {
     assert(got.exists(p => p._1 == 0L && p._2 >= cutoff),
       "no delta representative linked to the old twin")
     // the whole delta cluster + old twin is ONE component over s12 pairs
-    // alone (cross rep links + delta self-run chain edges)
+    // alone: each delta rep probes the index, which holds the old twin
+    // and every delta band row, so the cluster links as a star around
+    // the reps
     val find = MainUtil.unionFindRoots(got.map(p => (p._1, p._2)))
-    val roots = (Seq(0L) ++ (3591L until 3891L)).map(find).toSet
+    val cluster = (Seq(0L) ++ (3591L until 3891L)).toSet
+    val roots = cluster.map(find)
     assert(roots.size == 1, s"delta template cluster fragmented: ${roots.size} components")
+    // only the reps probe the over-cap bucket: each of the 301 cluster
+    // docs pairs with at most GiantBucketReps reps (all pairs would be
+    // C(301, 2) = 45,150)
+    val touching = got.count(p => cluster(p._1) || cluster(p._2))
+    assert(touching <= BandJoin.GiantBucketReps * 301,
+      s"$touching pairs touch the template cluster: the delta bucket was joined in full")
   }
 
   test("s12 stays correct when a delta doc is rewritten (delta is always fresh)") {
@@ -279,5 +291,21 @@ class IncrementalNeardupSpec extends SparkSpec {
       }
       assert(bad.isEmpty, s"old bands re-shuffled before the join:\n${bad.headOption}")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("warm s12 and s13 on sf0.01 launch at most 13 and 19 Spark jobs") {
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+    def jobs(q: String): Int = countJobs(SparkEntry.queries(q)(spark, sf01).collect())._2
+    // one warm-up call each builds any cold index and fills the
+    // fingerprint memo
+    jobs("s12_incremental_neardup")
+    jobs("s13_incremental_keeper")
+    val s12 = jobs("s12_incremental_neardup")
+    val s13 = jobs("s13_incremental_keeper")
+    info(s"warm Spark jobs: s12 $s12, s13 $s13")
+    // 18 and 25 with a second candidate engine over the delta, a second
+    // verification and two or three documents reads per execution
+    assert(s12 <= 13, s"warm s12 ran $s12 Spark jobs")
+    assert(s13 <= 19, s"warm s13 ran $s13 Spark jobs")
   }
 }

@@ -8,8 +8,8 @@ package graft
   * page and no gate to check), `ann` (builds the s04, s07 and s09
   * indexes over a fresh corpus; QueriesSpec checks those queries and
   * their recall), `incremental` (its fixed corpus layout needs
-  * n > ~100k) and `plans` (writes explain output into the working tree
-  * and gates nothing).
+  * n > ~100k) and `plans` (writes explain output files and gates
+  * nothing).
   */
 class ProbeSpec extends SparkSpec {
 

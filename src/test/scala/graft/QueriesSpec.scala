@@ -177,9 +177,9 @@ class QueriesSpec extends SparkSpec {
     // dot-product cosine (not the CosineSimilarity expression), own
     // fixed-point aggregation — only the persisted centroids are shared
     // (they ARE the quantizer under test, already spec'd via s07)
-    val (_, centroids) = graft.queries.SimilarityQueries.ivfIndex(spark, sf)
-    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select("vec_id", "embedding").collect()
+    val e = spark.read.parquet(s"$sf/embeddings.parquet")
+    val (_, centroids) = graft.queries.SimilarityQueries.ivfIndex(spark, sf, e)
+    val vecs = e.select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     def l2(v: Array[Float], c: Array[Double]): Double = {
       var acc = 0.0; var i = 0

@@ -30,11 +30,11 @@ abstract class SparkSpec extends AnyFunSuite {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = body
-      org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       (r, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
