@@ -1,7 +1,7 @@
 package graft
 
 import graft.fixtures.FixtureCorpus
-import graft.queries.{KgQueries, RelationalQueries, SimilarityQueries, TextQueries}
+import graft.queries.{KgQueries, PinnedOracles, RelationalQueries, SimilarityQueries, TextQueries}
 import graft.stages.Pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -96,9 +96,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.all ++ TextQueries.all ++ SimilarityQueries.all ++ KgQueries.all
 
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracle ++ TextQueries.oracle ++ SimilarityQueries.oracle ++
-      KgQueries.oracle ++ graft.queries.PinnedOracles.all
+  def oracleSql: Map[String, String] = oracleSqlFor(PinnedOracles.dataDependentSf)
 
   /** sfDir-aware oracle set (what Verify ships): identical to
     * [[oracleSql]] at the pin-capture sf (sf0.01 — the driver's Verify
@@ -108,5 +106,5 @@ object SparkEntry {
     */
   def oracleSqlFor(sfDir: String): Map[String, String] =
     RelationalQueries.oracle ++ TextQueries.oracle ++ SimilarityQueries.oracle ++
-      KgQueries.oracle ++ graft.queries.PinnedOracles.forSfDir(sfDir)
+      KgQueries.oracle ++ PinnedOracles.forSfDir(sfDir)
 }

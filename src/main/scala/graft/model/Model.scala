@@ -20,10 +20,8 @@ final case class SourceFile(
     lang: String,
     content: String)
 
-/** An author row, ordered by position within the paper.
-  * Role enum values are load-bearing for triple P/R — exact strings from
-  * nature_extractor.py:220-228: "First Author" | "Other Author" |
-  * "Corresponding Author" | "First/Corresponding Author".
+/** An author row, ordered by position within the paper; `role` is
+  * [[Author.roleOf]] of its position and corresponding flag.
   */
 final case class Author(
     name: String,
@@ -34,6 +32,20 @@ final case class Author(
     marks: Seq[String],
     creditRoles: Seq[String],
     email: Option[String])
+
+object Author {
+
+  /** W1 role assignment, shared by every journal rule map. The strings
+    * are load-bearing for triple P/R — exact values from
+    * nature_extractor.py:220-228. The reference emits no role for
+    * Science; the engine applies the same rule there.
+    */
+  def roleOf(position: Int, isCorresponding: Boolean): String =
+    if (position == 0 && isCorresponding) "First/Corresponding Author"
+    else if (position == 0) "First Author"
+    else if (isCorresponding) "Corresponding Author"
+    else "Other Author"
+}
 
 final case class PubDate(isoDate: Option[String], formattedDate: Option[String])
 

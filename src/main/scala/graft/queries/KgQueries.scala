@@ -19,28 +19,28 @@ object KgQueries {
 
   private val CorpusN = 100
 
-  private def records(s: SparkSession): DataFrame =
-    MentionDetect.records(FixtureCorpus.corpus(s, CorpusN, 8)).toDF()
+  private def corpus(s: SparkSession) = FixtureCorpus.corpus(s, CorpusN, 8)
 
-  /** Full extraction: corpus -> sliced/parsed records -> triples. */
-  private val kgTriples: Q = (s, _) => {
-    import s.implicits._
-    MentionDetect.triples(records(s).as[PaperRecord]).toDF()
-      .orderBy("docId", "subj", "pred", "obj")
-  }
+  /** The parsed records, for the record-shaped queries; the triple and
+    * mention queries read the fused passes, which never encode a record.
+    */
+  private def records(s: SparkSession): DataFrame = MentionDetect.records(corpus(s)).toDF()
+
+  private def triples(s: SparkSession): DataFrame = MentionDetect.triplesDirect(corpus(s)).toDF()
+
+  /** Full extraction: corpus -> sliced/parsed pages -> triples. */
+  private val kgTriples: Q = (s, _) =>
+    triples(s).orderBy("docId", "subj", "pred", "obj")
 
   /** Ingest invariant surface: per-path sha256 (spot-checkable). */
   private val kgIngest: Q = (s, _) => {
-    Ingest.withSha(FixtureCorpus.corpus(s, CorpusN, 8))
+    Ingest.withSha(corpus(s))
       .select("repo", "path", "lang", "sha256").orderBy("path")
   }
 
   /** Entity table after linking + canonicalization. */
-  private val kgEntities: Q = (s, _) => {
-    import s.implicits._
-    Pipeline.entities(s, Pipeline.mentionsOf(records(s).as[PaperRecord]))
-      .orderBy("kind", "name")
-  }
+  private val kgEntities: Q = (s, _) =>
+    Pipeline.entities(s, MentionDetect.mentionsDirect(corpus(s))).orderBy("kind", "name")
 
   /** The wide one-row-per-paper report (A3-A5, Chinese column schema of
     * create_nature_table, nature_extractor.py:249-290) rendered for all
@@ -95,11 +95,8 @@ object KgQueries {
   /** Canonicalization visibility: name -> canonical entity id for the
     * fixture alias clusters (O'Dea/ODea, Westlake variants, venues).
     */
-  private val kgCanonicalMap: Q = (s, _) => {
-    import s.implicits._
-    Pipeline.canonicalMap(s, Pipeline.mentionsOf(records(s).as[PaperRecord]))
-      .orderBy("kind", "name")
-  }
+  private val kgCanonicalMap: Q = (s, _) =>
+    Pipeline.canonicalMap(s, MentionDetect.mentionsDirect(corpus(s))).orderBy("kind", "name")
 
   /** S11/S9: the JSON-string record form (the reference returns Science
     * records as json.dumps strings, science_extractor.py:194) — records
@@ -153,8 +150,7 @@ object KgQueries {
     * per-key blowup.
     */
   private val kgCoauthors: Q = (s, _) => {
-    import s.implicits._
-    val authors = MentionDetect.triples(records(s).as[PaperRecord]).toDF()
+    val authors = triples(s)
       .filter(col("pred") === "hasAuthor")
       .select(col("docId"), col("obj").as("author"))
       .distinct()
@@ -182,7 +178,7 @@ object KgQueries {
       }.toDF("docId", "subj", "pred", "obj").withColumn("in_g", lit(1))
     // replicas of the same page share a docId -> distinct collapses the
     // 100-row corpus back to the 7 fixture docs' triple sets
-    val extracted = MentionDetect.triples(records(s).as[PaperRecord]).toDF()
+    val extracted = triples(s)
       .select("docId", "subj", "pred", "obj").distinct()
       .withColumn("in_e", lit(1))
     golden.join(extracted, Seq("docId", "subj", "pred", "obj"), "full_outer")
@@ -224,8 +220,7 @@ object KgQueries {
     * included) flip a hard red in the driver's hash compare.
     */
   private val kgTriplesDigest: Q = (s, _) => {
-    import s.implicits._
-    MentionDetect.triples(records(s).as[PaperRecord]).toDF()
+    triples(s)
       .groupBy("pred")
       .agg(count(lit(1)).as("n_rows"),
         countDistinct(col("docId")).as("n_docs"),

@@ -43,10 +43,11 @@ object SimilarityQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  def wordShingles(text: String, n: Int = 5): Set[String] =
+  /** Word 5-gram shingles, lowercased. */
+  def wordShingles(text: String): Set[String] =
     // splitWs = one compiled \s+ pattern; a literal split("\\s+") would
     // re-compile per DOCUMENT in the s01 shingle pass (1M+ times at scale)
-    graft.rules.Text.splitWs(text.toLowerCase).filter(_.nonEmpty).sliding(n)
+    graft.rules.Text.splitWs(text.toLowerCase).filter(_.nonEmpty).sliding(5)
       .map(_.mkString(" ")).toSet
 
   /** MinHash-LSH near-dup pairs over word 5-gram shingles: banded

@@ -2,6 +2,7 @@ package graft.rules
 
 import java.util.regex.Pattern
 import graft.model.{Author, PaperRecord, PubDate}
+import graft.rules.Text.{allGroups, firstGroup, tagStrip}
 import scala.collection.mutable
 
 /** APS rule map for article HTML — the DOM path of the reference
@@ -24,20 +25,6 @@ import scala.collection.mutable
   */
 object ApsHtmlRules {
 
-  private def tagStrip(html: String): String =
-    Text.tagStrip(html)
-
-  private def firstGroup(p: Pattern, html: String): Option[String] = {
-    val m = p.matcher(html)
-    if (m.find()) Some(m.group(1)) else None
-  }
-  private def allGroups(p: Pattern, html: String): Seq[String] = {
-    val m = p.matcher(html)
-    val out = mutable.ArrayBuffer.empty[String]
-    while (m.find()) out += m.group(1)
-    out.toSeq
-  }
-
   // --- P3 title: 5 selectors + meta fallback ---
   private val titlePats = Seq(
     """<h1[^>]*class="[^"]*\btitle\b[^"]*"[^>]*>(.*?)</h1>""",
@@ -49,12 +36,7 @@ object ApsHtmlRules {
     """<meta[^>]*name="citation_title"[^>]*content="([^"]*)"""")
 
   // --- P6 journal ---
-  private val journalClassPats = Seq("journal-title", "journal-name", "header-journal-title")
-    .map(c => Pattern.compile(s"""<[^>]*class="[^"]*$c[^"]*"[^>]*>(.*?)</""", Pattern.DOTALL))
-  private val metaJournalPat = Pattern.compile(
-    """<meta[^>]*name="citation_journal_title"[^>]*content="([^"]*)"""")
-  private val metaSitePat = Pattern.compile(
-    """<meta[^>]*property="og:site_name"[^>]*content="([^"]*)"""")
+  private val journalClassPats = Text.classPats("journal-title", "journal-name", "header-journal-title")
 
   // --- P9 date ---
   private val pubInfoPat = Pattern.compile(
@@ -117,18 +99,15 @@ object ApsHtmlRules {
     val wm = wrapperPat.matcher(html)
     if (!wm.find()) return Seq.empty
     val wrapper = Option(wm.group(1)).getOrElse(wm.group(2))
-    val affilDict = firstGroup(noBulletLiPat, wrapper).map { ul =>
+    // footnote dict of the list `ulPat` matches: <li><sup>mark</sup>text
+    def supDict(ulPat: Pattern): Map[String, String] = firstGroup(ulPat, wrapper).map { ul =>
       val m = liSupPat.matcher(ul)
       val d = mutable.LinkedHashMap.empty[String, String]
       while (m.find()) d(tagStrip(m.group(1))) = tagStrip(m.group(2))
       d.toMap
     }.getOrElse(Map.empty)
-    val roleDict = firstGroup(contribNotesPat, wrapper).map { ul =>
-      val m = liSupPat.matcher(ul)
-      val d = mutable.LinkedHashMap.empty[String, String]
-      while (m.find()) d(tagStrip(m.group(1))) = tagStrip(m.group(2))
-      d.toMap
-    }.getOrElse(Map.empty)
+    val affilDict = supDict(noBulletLiPat)
+    val roleDict = supDict(contribNotesPat)
 
     val m = authorAnchorPat.matcher(wrapper)
     val out = mutable.ArrayBuffer.empty[(String, Seq[String], Seq[String])]
@@ -177,8 +156,8 @@ object ApsHtmlRules {
 
     val journal = journalClassPats.iterator.flatMap(p => firstGroup(p, html)).map(tagStrip)
       .find(_.nonEmpty)
-      .orElse(firstGroup(metaJournalPat, html).map(metaText).filter(_.nonEmpty))
-      .orElse(firstGroup(metaSitePat, html).map(metaText).filter(_.nonEmpty))
+      .orElse(firstGroup(Text.metaJournalPat, html).map(metaText).filter(_.nonEmpty))
+      .orElse(firstGroup(Text.metaSitePat, html).map(metaText).filter(_.nonEmpty))
       .getOrElse("Physical Review (APS)")
 
     val dateStr = firstGroup(pubInfoPat, html).map(tagStrip)
@@ -187,8 +166,7 @@ object ApsHtmlRules {
       .orElse(firstGroup(metaDatePat, html).map(_.trim).filter(_.nonEmpty))
 
     val abstractText = firstGroup(abstractPat, html).map(tagStrip).filter(_.nonEmpty)
-      .orElse(firstGroup(metaAbstractPat, html).map(v => Text.cleanWs(Text.decodeEntities(v)))
-        .filter(_.nonEmpty))
+      .orElse(firstGroup(metaAbstractPat, html).map(metaText).filter(_.nonEmpty))
 
     val doi = firstGroup(metaDoiPat, html).map(_.trim).filter(_.nonEmpty)
 
@@ -202,16 +180,8 @@ object ApsHtmlRules {
 
     val authors = raw.zipWithIndex.map { case ((name, affs, roles), idx) =>
       val isCorr = roles.exists(_.toLowerCase.contains("contact"))
-      val role =
-        if (idx == 0 && isCorr) "First/Corresponding Author"
-        else if (idx == 0) "First Author"
-        else if (isCorr) "Corresponding Author"
-        else "Other Author"
-      Author(name, idx, role, affs, isCorr, Seq.empty, roles, None)
+      Author(name, idx, Author.roleOf(idx, isCorr), affs, isCorr, Seq.empty, roles, None)
     }
-
-    val countries = authors.flatMap(_.affiliations)
-      .map(AffiliationNormalizer.country).filter(_.nonEmpty).distinct.sorted
 
     PaperRecord(
       docId = doi.getOrElse(sourcePath),
@@ -224,7 +194,7 @@ object ApsHtmlRules {
       abstractText = abstractText,
       contributions = None,
       equalContributions = Seq.empty,
-      countries = countries,
+      countries = AffiliationNormalizer.countries(authors.flatMap(_.affiliations)),
       authors = authors,
       notes = Map.empty)
   }

@@ -122,9 +122,6 @@ object ApsRules {
       if (absIdx < 0) None
       else lines.drop(absIdx + 1).map(_.strip()).find(_.length > 100).map(Text.cleanWs)
 
-    val countries = authors.flatMap(_.affiliations)
-      .map(AffiliationNormalizer.country).filter(_.nonEmpty).distinct.sorted
-
     PaperRecord(
       docId = doi.getOrElse(sourcePath),
       journalTag = "aps-md",
@@ -136,7 +133,7 @@ object ApsRules {
       abstractText = abstractText,
       contributions = None,
       equalContributions = Seq.empty,
-      countries = countries,
+      countries = AffiliationNormalizer.countries(authors.flatMap(_.affiliations)),
       authors = authors,
       notes = Map.empty)
   }
@@ -167,12 +164,7 @@ object ApsRules {
       val symbolMarks = marks.filterNot(_.forall(_.isDigit))
       val email = symbolMarks.flatMap(emailByMark.get).headOption
       val isCorr = symbolMarks.exists(emailByMark.contains)
-      val role =
-        if (idx == 0 && isCorr) "First/Corresponding Author"
-        else if (idx == 0) "First Author"
-        else if (isCorr) "Corresponding Author"
-        else "Other Author"
-      Author(name, idx, role, affs, isCorr, marks, Seq.empty, email)
+      Author(name, idx, Author.roleOf(idx, isCorr), affs, isCorr, marks, Seq.empty, email)
     }
   }
 }

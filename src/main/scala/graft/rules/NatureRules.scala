@@ -2,6 +2,7 @@ package graft.rules
 
 import java.util.regex.Pattern
 import graft.model.{Author, PaperRecord, PubDate}
+import graft.rules.Text.{allGroups, firstGroup, tagStrip}
 import scala.collection.mutable
 
 /** Nature rule map: article HTML -> PaperRecord.
@@ -23,24 +24,20 @@ import scala.collection.mutable
   *        address and an author list (split on ",  " / " & ",
   *        nature_extractor.py:195); inverted into affiliations-per-author
   *  - J2  corresponding set: #corresponding-author-list anchor texts
-  *  - W1  role assignment (nature_extractor.py:220-228), exact strings
-  *  - A1  countries: set of normalized affiliation countries (we emit
+  *  - W1  role assignment: [[graft.model.Author.roleOf]]
+  *  - A1  countries: set of normalized affiliation countries over every
+  *        affiliation item, including items that list no author (we emit
   *        sorted — SURVEY.md §5.4 determinism rule)
   */
 object NatureRules {
 
-  private def tagStrip(html: String): String = Text.tagStrip(html)
-
   private val titlePat = Pattern.compile(
     """<h1[^>]*class="[^"]*c-article-title[^"]*"[^>]*>(.*?)</h1>""", Pattern.DOTALL)
 
-  private val metaJournalPat = Pattern.compile(
-    """<meta[^>]*name="citation_journal_title"[^>]*content="([^"]*)"""")
-  private val metaSitePat = Pattern.compile(
-    """<meta[^>]*property="og:site_name"[^>]*content="([^"]*)"""")
-  private val journalClassPats = Seq(
+  private val journalClassPats = Text.classPats(
     "c-journal-title", "journal-title", "c-header__title", "c-header__nav-link--home")
-    .map(c => Pattern.compile(s"""<[^>]*class="[^"]*$c[^"]*"[^>]*>(.*?)</""", Pattern.DOTALL))
+  // F3: site-wide names (case-sensitive) say nothing about the journal
+  private val genericJournal = Set("Nature", "nature.com")
 
   private val timePat = Pattern.compile(
     """<li[^>]*class="[^"]*c-article-identifiers__item[^"]*"[^>]*>.*?<time[^>]*datetime="([^"]*)"[^>]*>(.*?)</time>""",
@@ -71,42 +68,8 @@ object NatureRules {
   // author-list split: re.split(r',\s*|\s*&\s*') (nature_extractor.py:195)
   private val authorSplit = Pattern.compile(""",\s*|\s*&\s*""")
 
-  private val ogUrlPat = Pattern.compile(
-    """<meta[^>]*property="og:url"[^>]*content="([^"]*)"""")
-
-  private def firstGroup(p: Pattern, html: String): Option[String] = {
-    val m = p.matcher(html)
-    if (m.find()) Some(m.group(1)) else None
-  }
-
-  /** Canonical page url (og:url) — the page identity the reference keys
-    * its record on (nature_extractor.py:241 uses the request url).
-    */
-  def canonicalUrl(html: String): Option[String] =
-    firstGroup(ogUrlPat, html).map(_.trim).filter(_.nonEmpty)
-
-  private def allMatches(p: Pattern, html: String): Seq[Array[String]] = {
-    val m = p.matcher(html)
-    val out = mutable.ArrayBuffer.empty[Array[String]]
-    while (m.find()) out += (1 to m.groupCount()).map(m.group).toArray
-    out.toSeq
-  }
-
-  def journalName(html: String): String = {
-    val generic = Set("Nature", "nature.com")
-    // meta content is entity-encoded like all HTML (decode '&amp;' etc.)
-    firstGroup(metaJournalPat, html).map(v => Text.decodeEntities(v).trim)
-      .filter(v => v.nonEmpty && !generic(v))
-      .orElse(firstGroup(metaSitePat, html).map(v => Text.decodeEntities(v).trim)
-        .filter(v => v.nonEmpty && !generic(v)))
-      .orElse(journalClassPats.iterator
-        .flatMap(p => firstGroup(p, html)).map(tagStrip)
-        .find(v => v.nonEmpty && !generic(v)))
-      .getOrElse("Nature")
-  }
-
   def parse(html: String, sourcePath: String): PaperRecord = {
-    val docUrl = canonicalUrl(html).getOrElse(sourcePath)
+    val docUrl = Text.canonicalUrl(html).getOrElse(sourcePath)
     val title = firstGroup(titlePat, html).map(tagStrip).filter(_.nonEmpty)
 
     val pubDate = {
@@ -120,44 +83,38 @@ object NatureRules {
       .filter(_.nonEmpty)
 
     val contributions = firstGroup(contributionsPat, html).map(tagStrip).filter(_.nonEmpty)
-    val equalContribs = allMatches(equalContribPat, html).map(g => tagStrip(g(0)))
-      .filter(_.nonEmpty)
+    val equalContribs = allGroups(equalContribPat, html).map(tagStrip).filter(_.nonEmpty)
 
     // J1 build side: affiliation item -> (address, authors-in-affiliation)
     val authorAff = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[String]]
     val countries = mutable.SortedSet.empty[String]
-    allMatches(affItemPat, html).foreach { g =>
-      val address = tagStrip(g(1))
+    val am = affItemPat.matcher(html)
+    while (am.find()) {
+      val address = tagStrip(am.group(2))
       val c = AffiliationNormalizer.country(address)
       if (c.nonEmpty) countries += c
-      authorSplit.split(tagStrip(g(2))).map(_.trim).filter(_.nonEmpty).foreach { name =>
+      authorSplit.split(tagStrip(am.group(3))).map(_.trim).filter(_.nonEmpty).foreach { name =>
         authorAff.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += address
       }
     }
 
     // J2 build side: corresponding-author name set
     val corresponding: Set[String] = firstGroup(corrListPat, html)
-      .map(seg => allMatches(anchorPat, seg).map(g => tagStrip(g(0))).toSet)
+      .map(seg => allGroups(anchorPat, seg).map(tagStrip).toSet)
       .getOrElse(Set.empty)
 
-    val authors = allMatches(authorNamePat, html).map(g => tagStrip(g(0)))
+    val authors = allGroups(authorNamePat, html).map(tagStrip)
       .zipWithIndex.map { case (name, idx) =>
         val isCorr = corresponding.contains(name)
-        // W1 exact role strings (nature_extractor.py:220-228)
-        val role =
-          if (idx == 0 && isCorr) "First/Corresponding Author"
-          else if (isCorr) "Corresponding Author"
-          else if (idx == 0) "First Author"
-          else "Other Author"
-        Author(name, idx, role, authorAff.get(name).map(_.toSeq).getOrElse(Seq.empty),
-          isCorr, Seq.empty, Seq.empty, None)
+        Author(name, idx, Author.roleOf(idx, isCorr),
+          authorAff.get(name).map(_.toSeq).getOrElse(Seq.empty), isCorr, Seq.empty, Seq.empty, None)
       }
 
     PaperRecord(
       docId = docUrl,
       journalTag = "nature-html",
       title = title,
-      journalName = Some(journalName(html)),
+      journalName = Some(Text.journalName(html, journalClassPats, genericJournal, "Nature")),
       url = Some(docUrl),
       doi = None,
       publicationDate = pubDate,

@@ -2,6 +2,7 @@ package graft.rules
 
 import java.util.regex.Pattern
 import graft.model.{Author, PaperRecord, PubDate}
+import graft.rules.Text.{allGroups, firstGroup, tagStrip}
 import scala.collection.mutable
 
 /** Science rule map: article HTML (RDFa property attributes) ->
@@ -24,12 +25,9 @@ import scala.collection.mutable
   *
   * The reference emits no role enum for Science; the engine unifies with
   * the Nature conventions: corresponding iff "*" mark present, W1 role
-  * strings.
+  * ([[graft.model.Author.roleOf]]).
   */
 object ScienceRules {
-
-  private def tagStrip(html: String): String =
-    Text.tagStrip(html)
 
   // One author block = everything from its opening tag up to the next
   // author block or the end of the contributors section. The opening tag
@@ -76,44 +74,13 @@ object ScienceRules {
     """<h1[^>]*class="[^"]*core-title[^"]*"[^>]*>(.*?)</h1>""",
     """<title>(.*?)</title>""").map(Pattern.compile(_, Pattern.DOTALL))
 
-  private val metaJournalPat = Pattern.compile(
-    """<meta[^>]*name="citation_journal_title"[^>]*content="([^"]*)"""")
-  private val metaSitePat = Pattern.compile(
-    """<meta[^>]*property="og:site_name"[^>]*content="([^"]*)"""")
-  private val journalClassPats = Seq(
+  private val journalClassPats = Text.classPats(
     "journal-banner-title", "journal-title", "journal-name", "core-self-citation-journal-name")
-    .map(c => Pattern.compile(s"""<[^>]*class="[^"]*$c[^"]*"[^>]*>(.*?)</""", Pattern.DOTALL))
-
-  private def firstGroup(p: Pattern, html: String): Option[String] = {
-    val m = p.matcher(html)
-    if (m.find()) Some(m.group(1)) else None
-  }
-
-  private def allGroups(p: Pattern, html: String): Seq[String] = {
-    val m = p.matcher(html)
-    val out = mutable.ArrayBuffer.empty[String]
-    while (m.find()) out += m.group(1)
-    out.toSeq
-  }
-
-  def journalName(html: String): String = {
-    val generic = Set("science.org", "science")
-    def ok(v: String) = v.nonEmpty && !generic(v.toLowerCase)
-    // meta content is entity-encoded like all HTML (decode '&amp;' etc.)
-    firstGroup(metaJournalPat, html).map(v => Text.decodeEntities(v).trim).filter(ok)
-      .orElse(firstGroup(metaSitePat, html).map(v => Text.decodeEntities(v).trim).filter(ok))
-      .orElse(journalClassPats.iterator.flatMap(p => firstGroup(p, html)).map(tagStrip).find(ok))
-      .getOrElse("Science")
-  }
-
-  private val ogUrlPat = Pattern.compile(
-    """<meta[^>]*property="og:url"[^>]*content="([^"]*)"""")
-
-  def canonicalUrl(html: String): Option[String] =
-    firstGroup(ogUrlPat, html).map(_.trim).filter(_.nonEmpty)
+  // P5: site-wide names, rejected case-insensitively
+  private val genericJournal = Set("science.org", "science")
 
   def parse(html: String, sourcePath: String): PaperRecord = {
-    val docUrl = canonicalUrl(html).getOrElse(sourcePath)
+    val docUrl = Text.canonicalUrl(html).getOrElse(sourcePath)
     val title = titlePats.iterator.flatMap(p => firstGroup(p, html))
       .map(tagStrip).find(_.nonEmpty)
 
@@ -151,29 +118,22 @@ object ScienceRules {
         .map(_.replace("Roles :", "").replace("Role :", "").trim)
         .filter(_.nonEmpty)
       val isCorr = marks.contains("*")
-      val role =
-        if (idx == 0 && isCorr) "First/Corresponding Author"
-        else if (isCorr) "Corresponding Author"
-        else if (idx == 0) "First Author"
-        else "Other Author"
-      Author(name, idx, role, affs, isCorr, marks, credits.toSeq, None)
+      Author(name, idx, Author.roleOf(idx, isCorr), affs, isCorr, marks, credits.toSeq, None)
     }.filter(_.name.nonEmpty)
-
-    val countries = authors.flatMap(_.affiliations)
-      .map(AffiliationNormalizer.country).filter(_.nonEmpty).distinct.sorted
 
     PaperRecord(
       docId = docUrl,
       journalTag = "science-html",
       title = title,
-      journalName = Some(journalName(html)),
+      journalName = Some(Text.journalName(html, journalClassPats,
+        v => genericJournal(v.toLowerCase), "Science")),
       url = Some(docUrl),
       doi = None,
       publicationDate = pubDate,
       abstractText = abstractText,
       contributions = None,
       equalContributions = Seq.empty,
-      countries = countries,
+      countries = AffiliationNormalizer.countries(authors.flatMap(_.affiliations)),
       authors = authors,
       notes = notes,
       funding = funding)

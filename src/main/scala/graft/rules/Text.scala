@@ -52,6 +52,57 @@ object Text {
     * `split("\\s+")` re-compiles per call).
     */
   def splitWs(s: String): Array[String] = ws.split(s)
+
+  /** Group 1 of the first match of `p` in `s`. */
+  def firstGroup(p: Pattern, s: String): Option[String] = {
+    val m = p.matcher(s)
+    if (m.find()) Some(m.group(1)) else None
+  }
+
+  /** Group 1 of every match of `p` in `s`, in page order. */
+  def allGroups(p: Pattern, s: String): Seq[String] = {
+    val m = p.matcher(s)
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (m.find()) out += m.group(1)
+    out.toSeq
+  }
+
+  /** One pattern per CSS class: the inner HTML of the first element whose
+    * class attribute contains it (the `.c` selectors of the journal
+    * chains, P4-P6).
+    */
+  def classPats(classes: String*): Seq[Pattern] =
+    classes.map(c => Pattern.compile(s"""<[^>]*class="[^"]*$c[^"]*"[^>]*>(.*?)</""", Pattern.DOTALL))
+
+  val metaJournalPat: Pattern = Pattern.compile(
+    """<meta[^>]*name="citation_journal_title"[^>]*content="([^"]*)"""")
+  val metaSitePat: Pattern = Pattern.compile(
+    """<meta[^>]*property="og:site_name"[^>]*content="([^"]*)"""")
+  private val ogUrlPat = Pattern.compile(
+    """<meta[^>]*property="og:url"[^>]*content="([^"]*)"""")
+
+  /** Canonical page url (og:url), trimmed; None when absent or empty —
+    * the page identity the HTML rule maps key their record on
+    * (nature_extractor.py:241 uses the request url).
+    */
+  def canonicalUrl(html: String): Option[String] =
+    firstGroup(ogUrlPat, html).map(_.trim).filter(_.nonEmpty)
+
+  /** Journal-name chain of the Nature and Science maps (P4/P5):
+    * meta citation_journal_title -> meta og:site_name -> the first
+    * `classPats` element, each skipped when empty or `generic` (a
+    * site-wide name such as "Nature" says nothing about the journal,
+    * F3), else `default`. Meta content is entity-encoded like all HTML,
+    * so it is decoded before the test.
+    */
+  def journalName(html: String, classPats: Seq[Pattern], generic: String => Boolean,
+      default: String): String = {
+    def ok(v: String) = v.nonEmpty && !generic(v)
+    firstGroup(metaJournalPat, html).map(v => decodeEntities(v).trim).filter(ok)
+      .orElse(firstGroup(metaSitePat, html).map(v => decodeEntities(v).trim).filter(ok))
+      .orElse(classPats.iterator.flatMap(p => firstGroup(p, html)).map(tagStrip).find(ok))
+      .getOrElse(default)
+  }
 }
 
 /** Institution / country normalizer (A8) — reproduces the semantics of
@@ -115,4 +166,10 @@ object AffiliationNormalizer {
 
   def institution(aff: String): String = normalize(aff)._1
   def country(aff: String): String = normalize(aff)._2
+
+  /** A1: the paper's countries — the distinct non-empty countries of
+    * its authors' affiliations, sorted (SURVEY.md §5.4 determinism rule).
+    */
+  def countries(affiliations: Seq[String]): Seq[String] =
+    affiliations.map(country).filter(_.nonEmpty).distinct.sorted
 }

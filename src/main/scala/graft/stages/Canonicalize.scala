@@ -71,7 +71,7 @@ object Canonicalize {
     * Int.MaxValue (a `limit` bound is an Int) collects every edge, and a
     * negative one always takes label propagation.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
+  def connectedComponents(edges: DataFrame,
       smallCutoff: Long = DefaultSmallCutoff): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -89,7 +89,7 @@ object Canonicalize {
       }
     small match {
       case Some(pairs) => driverUnionFind(spark, pairs)
-      case None => distributedLabelProp(e, maxIter)
+      case None => distributedLabelProp(e)
     }
   }
 
@@ -119,19 +119,21 @@ object Canonicalize {
     spark.createDataset(rows).toDF("id", "canonicalId")
   }
 
+  private val MaxIter = 20
+
   /** Large-graph path: min-label propagation with pointer jumping.
     *
     * Plain neighbor propagation moves the component minimum one hop per
     * round — O(diameter) shuffles, and a high-diameter graph (a long
-    * rename chain) silently fails to converge within maxIter. Each round
-    * here adds a pointer-jump step (label <- label(label), one self-join)
-    * which halves the remaining distance, giving O(log diameter)
-    * convergence: a 10^6-long chain resolves in ~20 rounds instead of
-    * 10^6. Labels only decrease and every label is itself a vertex id,
-    * so the jump lookup always resolves and the fixpoint is the
-    * component min (asserted equal to union-find in LinkingSpec).
+    * rename chain) silently fails to converge within [[MaxIter]] rounds.
+    * Each round here adds a pointer-jump step (label <- label(label), one
+    * self-join) which halves the remaining distance, giving O(log
+    * diameter) convergence: a 10^6-long chain resolves in ~20 rounds
+    * instead of 10^6. Labels only decrease and every label is itself a
+    * vertex id, so the jump lookup always resolves and the fixpoint is
+    * the component min (asserted equal to union-find in LinkingSpec).
     */
-  private def distributedLabelProp(edges: DataFrame, maxIter: Int): DataFrame = {
+  private def distributedLabelProp(edges: DataFrame): DataFrame = {
     val sym = edges
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -144,7 +146,7 @@ object Canonicalize {
 
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < MaxIter && !converged) {
       // neighbor labels: edge (src,dst) proposes label(src) to dst
       val msgs = sym.join(labels, sym("src") === labels("id"))
         .select(col("dst").as("id"), col("label"))
@@ -168,11 +170,10 @@ object Canonicalize {
     }
     if (!converged)
       // logged, never silent: labels returned below are partially
-      // propagated — one true component may carry several canonicalIds.
-      // Raise maxIter (rounds needed grow O(log diameter) with pointer
-      // jumping).
+      // propagated — one true component may carry several canonicalIds
+      // (rounds needed grow O(log diameter) with pointer jumping).
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connected components did NOT converge in $maxIter rounds — labels are partial")
+        s"connected components did NOT converge in $MaxIter rounds — labels are partial")
     sym.unpersist()
     labels.select(col("id"), col("label").as("canonicalId"))
   }

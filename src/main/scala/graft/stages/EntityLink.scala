@@ -26,6 +26,11 @@ object EntityLink {
   val NumHashes = 64
   val Bands = 16
   val RowsPerBand: Int = NumHashes / Bands
+
+  /** Jaccard bar a fuzzy name pair must reach to link (the pipeline's
+    * canonical map; `fuzzyEdges` callers may pass another).
+    */
+  val Tau = 0.55
   private val Prime = 2038074743L // large prime < 2^31 * ~0.95
 
   // Fixed affine coefficients (seeded, deterministic across JVMs).
@@ -39,9 +44,10 @@ object EntityLink {
     */
   def shingleKey(s: String): String = s.toLowerCase.filter(_.isLetterOrDigit)
 
-  def shingles(s: String, k: Int = 3): Set[String] = {
+  /** Character 3-gram shingles of the [[shingleKey]]. */
+  def shingles(s: String): Set[String] = {
     val key = shingleKey(s)
-    if (key.length <= k) Set(key) else key.sliding(k).toSet
+    if (key.length <= 3) Set(key) else key.sliding(3).toSet
   }
 
   def jaccard(a: Set[String], b: Set[String]): Double = {

@@ -53,20 +53,14 @@ object MentionDetect {
     files.mapPartitions(_.map(parseOne).collect { case Left(q) => q })
   }
 
-  def triples(records: Dataset[PaperRecord]): Dataset[Triple] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[Triple]
-    records.flatMap(TripleEmit.emit)
-  }
-
   /** Fused extraction: SourceFile -> Triple in ONE mapPartitions pass.
     *
-    * The staged form (records(...) then triples(...)) pays the
-    * ExpressionEncoder round-trip of the deeply nested PaperRecord
-    * (Seq[Author] / Map / Option fields) per row — measured ~20x the
-    * actual parse cost. The fused form keeps PaperRecord as a plain JVM
-    * object inside the partition and only encodes the flat 4-string
-    * Triple rows. Use this whenever the record itself is not needed
-    * downstream.
+    * Emitting from [[records]] would pay the ExpressionEncoder
+    * round-trip of the deeply nested PaperRecord (Seq[Author] / Map /
+    * Option fields) per row — measured ~20x the actual parse cost. The
+    * fused form keeps PaperRecord as a plain JVM object inside the
+    * partition and only encodes the flat 4-string Triple rows. Use this
+    * whenever the record itself is not needed downstream.
     */
   def triplesDirect(files: Dataset[SourceFile]): Dataset[Triple] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Triple]

@@ -54,16 +54,16 @@ object Pipeline {
     * fuzzy LSH edges -> connected components -> canonical map
     * (name -> canonicalId = lexicographic min of its component).
     */
-  def canonicalMap(spark: SparkSession, mentions: Dataset[Mention], tau: Double = 0.55): DataFrame =
-    canonicalMapFromNames(spark, EntityLink.namesOf(mentions), tau)
+  def canonicalMap(spark: SparkSession, mentions: Dataset[Mention]): DataFrame =
+    canonicalMapFromNames(spark, EntityLink.namesOf(mentions))
 
   /** Same, over an already-distinct (kind, name) frame — callers that
     * also need the name frame persist it once and pass it in, so the
     * mention stream (and the page parse feeding it) evaluates once.
     */
-  def canonicalMapFromNames(spark: SparkSession, names: DataFrame, tau: Double = 0.55): DataFrame = {
+  def canonicalMapFromNames(spark: SparkSession, names: DataFrame): DataFrame = {
     val exact = EntityLink.dictEdges(names, canonicalDict(spark))
-    val fuzzy = EntityLink.fuzzyEdges(names, tau).select("kind", "src", "dst")
+    val fuzzy = EntityLink.fuzzyEdges(names, EntityLink.Tau).select("kind", "src", "dst")
     val edges = exact.union(fuzzy)
       .select(concat_ws("|", col("kind"), col("src")).as("src"),
         concat_ws("|", col("kind"), col("dst")).as("dst"))

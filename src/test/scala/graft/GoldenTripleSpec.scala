@@ -27,7 +27,7 @@ class GoldenTripleSpec extends SparkSpec {
     import spark.implicits._
     val files = spark.createDataset(FixtureCorpus.baseRows)(
       org.apache.spark.sql.Encoders.product[graft.model.SourceFile])
-    val emitted = MentionDetect.triples(MentionDetect.records(files))
+    val emitted = MentionDetect.triplesDirect(files)
       .toDF("docId", "subj", "pred", "obj").distinct().cache()
     val golden = goldenDf.distinct().cache()
 
@@ -52,7 +52,7 @@ class GoldenTripleSpec extends SparkSpec {
     import spark.implicits._
     val files = spark.createDataset(FixtureCorpus.baseRows)(
       org.apache.spark.sql.Encoders.product[graft.model.SourceFile])
-    val emitted = MentionDetect.triples(MentionDetect.records(files))
+    val emitted = MentionDetect.triplesDirect(files)
       .toDF("docId", "subj", "pred", "obj").distinct()
     val golden = goldenDf.distinct()
     val perPred = golden.groupBy("pred").agg(count(lit(1)).as("g"))

@@ -125,6 +125,29 @@ class JournalRulesSpec extends AnyFunSuite {
     assert(r.authors.map(_.name) == Seq("Anna Kowalski", "Ben Okafor", "Chen Wei"))
   }
 
+  test("W1 roleOf truth table, and every rule map assigns roles and countries through it") {
+    import graft.fixtures.FixtureCorpus
+    import graft.model.Author
+    assert(Author.roleOf(0, isCorresponding = true) == "First/Corresponding Author")
+    assert(Author.roleOf(0, isCorresponding = false) == "First Author")
+    assert(Author.roleOf(3, isCorresponding = true) == "Corresponding Author")
+    assert(Author.roleOf(3, isCorresponding = false) == "Other Author")
+
+    val parsed = FixtureCorpus.baseRows.map(f =>
+      f.lang -> graft.stages.MentionDetect.parseOne(f).fold(q => fail(q.error), identity))
+    assert(parsed.map(_._1).toSet == Set("aps-md", "aps-html", "nature-html", "science-html"))
+    val authors = parsed.flatMap(_._2.authors)
+    assert(authors.nonEmpty)
+    authors.foreach(a => assert(a.role == Author.roleOf(a.position, a.isCorresponding), a))
+    // the fixture pages exercise all four roles
+    assert(authors.map(_.role).toSet.size == 4)
+    // A1 through the shared rule; Nature keeps its per-affiliation-item set
+    parsed.filter(_._1 != "nature-html").foreach { case (lang, r) =>
+      assert(r.countries == AffiliationNormalizer.countries(r.authors.flatMap(_.affiliations)),
+        s"$lang ${r.docId}")
+    }
+  }
+
   test("main.py:30 default: first author becomes corresponding when unmarked") {
     import graft.model.PaperRecord
     // the fixture pages all mark a corresponding author -> no-op

@@ -64,6 +64,29 @@ class TextRulesSpec extends AnyFunSuite with PropChecks {
       == "a <b> \"c\" 'd' e")
   }
 
+  test("journalName falls through generic meta values to og:site_name, class patterns, default") {
+    val classPats = Text.classPats("journal-title")
+    val generic = Set("Generic")
+    def meta(attr: String, v: String) = s"""<meta $attr content="$v">"""
+    val journal = meta("name=\"citation_journal_title\"", "Generic")
+    val site = meta("property=\"og:site_name\"", "Spin &amp; Charge")
+    val cls = """<span class="c-journal-title">Class <i>Journal</i></span>"""
+    def name(html: String) = Text.journalName(html, classPats, generic, "Default")
+    assert(name(journal + site + cls) == "Spin & Charge")
+    assert(name(journal + meta("property=\"og:site_name\"", " ") + cls) == "Class Journal")
+    assert(name(journal + """<span class="journal-title">Generic</span>""") == "Default")
+    assert(name("") == "Default")
+    // the first non-generic meta value wins over everything after it
+    assert(name(meta("name=\"citation_journal_title\"", "Real") + site + cls) == "Real")
+  }
+
+  test("canonicalUrl trims og:url and rejects an empty one") {
+    def og(v: String) = s"""<meta property="og:url" content="$v">"""
+    assert(Text.canonicalUrl(og("  https://x.y/z ")).contains("https://x.y/z"))
+    assert(Text.canonicalUrl(og("   ")).isEmpty)
+    assert(Text.canonicalUrl("<html></html>").isEmpty)
+  }
+
   test("LLM response parse matches the worked example shape (P25)") {
     val resp = "新闻风格介绍：一段介绍。\n\n论文信息提取：第一作者/共同作者单位/通讯作者单位：洛桑联邦理工学院*，其他作者单位：洛桑联邦理工学院，所有作者单位所属国家：瑞士，论文url链接：https://x.y/z，论文名：Some Title"
     val m = LlmResponseParser.parse(resp)

@@ -198,7 +198,7 @@ class LinkingSpec extends SparkSpec {
     // pointer-jump step (label <- label(label)) must carry it
     val chain = (0 until 200)
       .map(i => (f"v$i%04d", f"v${i + 1}%04d")).toDF("src", "dst")
-    val cc = Canonicalize.connectedComponents(chain, maxIter = 20, smallCutoff = 0)
+    val cc = Canonicalize.connectedComponents(chain, smallCutoff = 0)
       .as[(String, String)].collect().toMap
     assert(cc.size == 201)
     assert(cc.values.toSet == Set("v0000"), s"labels: ${cc.values.toSet}")
