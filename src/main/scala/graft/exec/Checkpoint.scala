@@ -32,16 +32,20 @@ import scala.jdk.CollectionConverters._
   *      (one (partitionId, rows) entry per task that wrote any);
   *   3. overwrite `lineage/` from those entries, in one small write —
   *      except that a stage whose rows carry `path`/`sha256` columns
-  *      (`ingest`) gathers its per-partition `inputFiles`/`sha256s` by a
-  *      groupBy over the committed data table on executors, and joins
-  *      the tally to it;
+  *      (`ingest`) builds its lineage by a groupBy over the committed
+  *      data table on executors, keyed by write task: it gathers each
+  *      task's `inputFiles`/`sha256s` and counts its committed rows as
+  *      `rowCount`. That count equals the task's tally entry, because
+  *      only a task's first successful attempt commits files;
   *   4. write `_SCHEMA.json`;
   *   5. write the marker, with the tally's sum as `rows=`.
   * The output is not persisted and `compute` runs once, inside the data
   * write: a shuffle-free `compute` commits in two Spark jobs (data
-  * write, lineage write); `ingest` adds its groupBy's two, and a
-  * `compute` built on the driver adds two that count the committed
-  * files (see `commit`). A write that fails, or a process killed at any step before 5,
+  * write, lineage write), and a `compute` that ends in a shuffle (a
+  * rebalance, say) also runs its map stage as a job of its own before
+  * the write. `ingest` adds its groupBy's two jobs, and a `compute`
+  * built on the driver adds two that count the committed files (see
+  * `commit`). A write that fails, or a process killed at any step before 5,
   * leaves no marker, and the next [[stage]] call recomputes. It never
   * serves an old marker over a half-rewritten `data/`.
   *
@@ -52,10 +56,11 @@ import scala.jdk.CollectionConverters._
   * holds exactly N rows. The lineage has exactly one row per write task
   * that wrote rows, under that task's partition id, and its `rowCount`s
   * sum to N: a task attempt that failed, was retried or ran
-  * speculatively is counted once (see [[Checkpoint.RowTally]]). An
-  * `inputFiles` list holds the `path` of each row that task wrote, once
-  * per row. Torn markers and markers written before the rows line read as
-  * not committed and rebuild through the same path.
+  * speculatively is counted once (see [[Checkpoint.RowTally]]; a
+  * provenance stage counts the rows of the files the task committed).
+  * An `inputFiles` list holds the `path` of each row that task wrote,
+  * once per row. Torn markers and markers written before the rows line
+  * read as not committed and rebuild through the same path.
   *
   * Two writers on one root are NOT made safe: one writer can publish
   * its marker while the other is rewriting `data/`. Versioned data
@@ -77,13 +82,20 @@ import scala.jdk.CollectionConverters._
   * partitioned by `cid`, and its probe reads only the inverted lists it
   * probes.
   *
-  * File count: one data file per write task, so a `compute` that ends
-  * in a shuffle writes as many files as AQE leaves partitions in its
-  * final stage. With no persist in front of the write, AQE may coalesce
-  * those partitions: a small shuffled stage can land in fewer files
-  * than `spark.sql.shuffle.partitions` (on the 4-core similarity_suite
-  * benchmark the coalesced index writes took store_amp from 0.405 to
-  * 0.347). Readers address rows by column, never by file.
+  * File count: one data file per write task. A `compute` with no
+  * shuffle writes one file per source read split, however small; one
+  * that ends in a shuffle writes as many files as AQE leaves partitions
+  * in its final stage. With no persist in front of the write, AQE sizes
+  * those partitions from the shuffled bytes: a small shuffled stage can
+  * land in fewer files than `spark.sql.shuffle.partitions` (on the
+  * 4-core similarity_suite benchmark the coalesced index writes took
+  * store_amp from 0.405 to 0.347), and a large one keeps several. Small
+  * files cost bytes, not only opens: each parquet footer carries Spark's
+  * row-schema JSON, and each file repeats the column dictionaries of
+  * the rows it shares with other files. That is why
+  * [[graft.stages.Pipeline.runCheckpointed]] ends `records` in a
+  * rebalance (see there). Readers address rows by column, never by
+  * file.
   *
   * Emulates Iceberg-style snapshot/commit semantics over plain parquet
   * (no Iceberg runtime ships offline — SURVEY.md §7.4 risk 3); the
@@ -217,25 +229,21 @@ final case class Checkpoint(root: String, runId: String,
       if (!tally.ranOutsideTask) tally.acc.value.asScala.toSeq.sortBy(_._1)
       else committed.groupBy(Checkpoint.writeTaskOf(col("_metadata.file_name"))).count()
         .as[(Int, Long)].collect().toSeq.sortBy(_._1)
-    val perPartition = counts.toDF("partitionId", "rowCount")
     // North-rule lineage shape: when the stage data carries provenance
     // columns, record the per-partition input files and content hashes
     // alongside the row count. Those lists grow with the input, so they
     // never pass through the driver: a groupBy over the committed,
     // metadata-only data table gathers them on executors, keyed by the
-    // write task that wrote each file (see [[Checkpoint.writeTaskOf]]).
+    // write task that wrote each file (see [[Checkpoint.writeTaskOf]]),
+    // and counts that task's committed rows in the same pass.
     val provenance = Seq("path" -> "inputFiles", "sha256" -> "sha256s")
       .filter { case (c, _) => df.columns.contains(c) }
-    // (the tally rows are the broadcast side: a broadcast of the
-    // aggregate would collect the lists on the driver)
     val lineage =
-      if (provenance.isEmpty) perPartition.coalesce(1)
+      if (provenance.isEmpty) counts.toDF("partitionId", "rowCount").coalesce(1)
       else committed
         .groupBy(Checkpoint.writeTaskOf(col("_metadata.file_name")).as("partitionId"))
-        .agg(collect_list(col(provenance.head._1)).as(provenance.head._2),
-          provenance.tail.map { case (c, n) => collect_list(col(c)).as(n) }: _*)
-        .join(broadcast(perPartition), Seq("partitionId"))
-        .select("partitionId", "rowCount" +: provenance.map(_._2): _*)
+        .agg(count(lit(1)).as("rowCount"),
+          provenance.map { case (c, n) => collect_list(col(c)).as(n) }: _*)
     lineage
       .withColumn("runId", lit(runId))
       .withColumn("stage", lit(stageName))

@@ -20,22 +20,26 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
-  /** (result, Spark jobs `body` started): the listener bus is drained
-    * before and after, so the count holds every job of `body` and only
-    * those.
+  /** (result, the Spark jobs `body` started): the listener bus is
+    * drained before and after, so the list holds every job of `body` and
+    * only those. A failed job-bound assertion prints the list.
     */
-  def countJobs[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+  def countJobs[T](body: => T): (T, SparkSpec.Jobs) = {
+    import org.apache.spark.scheduler._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val submitted = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.add(e)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        submitted.add(e.stageInfo.stageId)
     }
     org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = body
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      (r, jobs.get())
+      import scala.jdk.CollectionConverters._
+      (r, SparkSpec.Jobs(started.asScala.toSeq.map(SparkSpec.Job(_, submitted.contains))))
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -59,5 +63,44 @@ abstract class SparkSpec extends AnyFunSuite {
       fail(s"child JVM did not finish:\n${lines.takeRight(30).mkString("\n")}")
     }
     (child.exitValue, lines)
+  }
+}
+
+object SparkSpec {
+
+  /** One stage of a job: its task count and the operation scope names of
+    * its RDDs (`Exchange`, `BroadcastExchange`, `WriteFiles`, ...); a
+    * stage another job already ran is skipped.
+    */
+  final case class Stage(id: Int, tasks: Int, scopes: Seq[String], ran: Boolean) {
+    override def toString: String =
+      s"stage $id: $tasks tasks${if (ran) "" else " (skipped)"} [${scopes.mkString(", ")}]"
+  }
+
+  /** One Spark job: its SQL execution id (None outside a SQL execution)
+    * and its stages.
+    */
+  final case class Job(id: Int, executionId: Option[Long], stages: Seq[Stage]) {
+    override def toString: String =
+      s"job $id (execution ${executionId.getOrElse("-")}): ${stages.mkString("; ")}"
+  }
+
+  object Job {
+    def apply(e: org.apache.spark.scheduler.SparkListenerJobStart, ran: Int => Boolean): Job = {
+      val exec = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
+      Job(e.jobId, exec, e.stageInfos.sortBy(_.stageId).map { s =>
+        // "WholeStageCodegen (3)" -> "WholeStageCodegen"
+        val scopes = s.rddInfos.sortBy(_.id)
+          .flatMap(_.scope.map(_.name.replaceAll("\\s*\\(\\d+\\)$", "").trim))
+        Stage(s.stageId, s.numTasks, scopes.distinct, ran(s.stageId))
+      })
+    }
+  }
+
+  /** The jobs one `countJobs` body started, in start order. */
+  final case class Jobs(list: Seq[Job]) {
+    def count: Int = list.size
+    override def toString: String = (s"$count Spark jobs" +: list.map("  " + _)).mkString("\n")
   }
 }

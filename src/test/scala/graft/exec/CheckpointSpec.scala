@@ -2,7 +2,9 @@ package graft.exec
 
 import graft.SparkSpec
 import graft.fixtures.FixtureCorpus
-import graft.stages.Pipeline
+import graft.model.{PaperRecord, SourceFile}
+import graft.stages.{MentionDetect, Pipeline}
+import org.apache.spark.sql.Dataset
 import java.nio.file.Files
 
 /** Resumability (north rule): a re-run with the same input snapshot skips
@@ -196,7 +198,7 @@ class CheckpointSpec extends SparkSpec {
     }
     // the data write, which tallies its own rows, then the one-file
     // lineage write; no pass over the stage output for either
-    assert(jobs <= 2, s"$jobs jobs for one commit")
+    assert(jobs.count <= 2, s"one commit: $jobs")
     assert(ckpt.committedRowsFor(spark, "s", "snap-1").contains(1000L))
     val lineage = ckpt.lineage(spark, "s").select("partitionId", "rowCount")
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sorted.toSeq
@@ -210,13 +212,16 @@ class CheckpointSpec extends SparkSpec {
       Pipeline.runCheckpointed(spark, files, Checkpoint(root, runId = "run-b"),
         Checkpoint.snapshotId("fixture", 20))
     }
-    // four commits (ingest's provenance groupBy adds two jobs), the name
-    // set, the edge probe and their shuffle stages; a lineage groupBy per
-    // commit, an eager purge count and a persist + count before the edge
-    // collect made it 32, a distinct over the already-distinct names in
-    // dictEdges one more, and the eager pruned LSH band table (which
-    // shuffled the name keys and the band rows a second time) three more
-    assert(jobs <= 18, s"$jobs jobs for one checkpointed build")
+    // four commits (ingest's provenance groupBy adds two jobs, records'
+    // rebalance its map stage), the name set, the edge probe and their
+    // shuffle stages; a lineage groupBy per commit, an eager purge count
+    // and a persist + count before the edge collect made it 32, a
+    // distinct over the already-distinct names in dictEdges one more,
+    // the eager pruned LSH band table (which shuffled the name keys and
+    // the band rows a second time) three more, and a broadcast of the
+    // row tally that ingest's lineage joined (before it counted its rows
+    // itself) one more
+    assert(jobs.count <= 18, s"one checkpointed build: $jobs")
   }
 
   test("lineage is exactly once when a write task is retried") {
@@ -246,29 +251,55 @@ class CheckpointSpec extends SparkSpec {
     assert(files.select(explode(col("sha256s"))).distinct().count() == 40)
   }
 
+  private def under(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val s = Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private def dataFiles(root: String, stage: String) = under(s"$root/$stage/data")
+    .filter(p => p.getFileName.toString.startsWith("part-") && p.toString.endsWith(".parquet"))
+
+  /** Rows sorted inside each data file of `stage`, in Spark's (unsigned
+    * UTF-8 byte) order.
+    */
+  private def assertSortedWithin(root: String, stage: String, cols: String*): Unit =
+    dataFiles(root, stage).foreach { f =>
+      val keys = spark.read.parquet(f.toString).select(cols.head, cols.tail: _*).collect()
+        .map(r => cols.indices.map(i => Option(r.getString(i)).getOrElse("").getBytes("UTF-8")))
+      def le(a: Seq[Array[Byte]], b: Seq[Array[Byte]]): Boolean =
+        a.zip(b).map { case (x, y) => java.util.Arrays.compareUnsigned(x, y) }
+          .find(_ != 0).forall(_ < 0)
+      assert(keys.zip(keys.drop(1)).forall { case (a, b) => le(a, b) }, s"$f not sorted by $cols")
+    }
+
+  /** The committed `records` rows equal a fresh parse of `files`, as a
+    * multiset.
+    */
+  private def assertRecordsOf(root: String, files: Dataset[SourceFile]): Unit = {
+    implicit val enc = org.apache.spark.sql.Encoders.product[PaperRecord]
+    def bag(rs: Array[PaperRecord]) = rs.groupBy(identity).view.mapValues(_.length).toMap
+    assert(bag(spark.read.parquet(s"$root/records/data").as[PaperRecord].collect()) ==
+      bag(MentionDetect.records(files).collect()))
+  }
+
   test("KG stages commit flat, sorted, zstd tables that read back in sidecar order") {
     import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("graft-ckpt-layout").toString
     val ckpt = Checkpoint(root, runId = "run-l")
-    val (t, e) = Pipeline.runCheckpointed(spark, FixtureCorpus.corpus(spark, 20, 4), ckpt,
-      Checkpoint.snapshotId("fixture", 20))
+    val files = FixtureCorpus.corpus(spark, 20, 4)
+    val (t, e) = Pipeline.runCheckpointed(spark, files, ckpt, Checkpoint.snapshotId("fixture", 20))
     assert(t.count() > 0 && e.count() > 0)
     // no partition column is appended last on read-back
     assert(t.columns.toSeq == Seq("docId", "subj", "pred", "obj"))
     assert(e.columns.toSeq == Seq("kind", "name", "entityId"))
 
-    def under(dir: String): Seq[java.nio.file.Path] = {
-      val s = Files.walk(java.nio.file.Paths.get(dir))
-      try s.iterator().asScala.toList finally s.close()
-    }
     val dirs = under(root).filter(Files.isDirectory(_)).map(_.getFileName.toString)
     assert(!dirs.exists(d => d.startsWith("pred=") || d.startsWith("kind=")), dirs)
 
     val conf = spark.sparkContext.hadoopConfiguration
-    def dataFiles(stage: String) = under(s"$root/$stage/data")
-      .filter(p => p.getFileName.toString.startsWith("part-") && p.toString.endsWith(".parquet"))
     Seq("ingest", "records", "triples", "entities").foreach { st =>
-      val fs = dataFiles(st)
+      val fs = dataFiles(root, st)
       assert(fs.nonEmpty, st)
       fs.foreach { f =>
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -281,19 +312,41 @@ class CheckpointSpec extends SparkSpec {
       }
     }
     // one file per write task: lineage has one row per task with rows
-    assert(dataFiles("triples").size <= ckpt.lineage(spark, "triples").count())
+    assert(dataFiles(root, "triples").size <= ckpt.lineage(spark, "triples").count())
+    // `records` is rebalanced by docId, so AQE sizes its files from the
+    // shuffled bytes, not from the source's 4 read splits: this small
+    // stage is one file, and `triples`, which reads it back, follows
+    assert(dataFiles(root, "records").size == 1, dataFiles(root, "records"))
+    assert(dataFiles(root, "triples").size == 1, dataFiles(root, "triples"))
+    assertRecordsOf(root, files)
 
-    // rows sorted inside each file, in Spark's (unsigned UTF-8 byte) order
-    def sortedWithin(stage: String, cols: String*): Unit = dataFiles(stage).foreach { f =>
-      val keys = spark.read.parquet(f.toString).select(cols.head, cols.tail: _*).collect()
-        .map(r => cols.indices.map(i => Option(r.getString(i)).getOrElse("").getBytes("UTF-8")))
-      def le(a: Seq[Array[Byte]], b: Seq[Array[Byte]]): Boolean =
-        a.zip(b).map { case (x, y) => java.util.Arrays.compareUnsigned(x, y) }
-          .find(_ != 0).forall(_ < 0)
-      assert(keys.zip(keys.drop(1)).forall { case (a, b) => le(a, b) }, s"$f not sorted by $cols")
+    assertSortedWithin(root, "records", "docId")
+    assertSortedWithin(root, "triples", "pred", "subj", "obj", "docId")
+    assertSortedWithin(root, "entities", "kind", "name")
+  }
+
+  test("a records stage over AQE's advisory partition size commits several files, same rows") {
+    // the rebalance does not pin a large stage to one writer: with this
+    // session's advisory and minimum partition sizes lowered below the
+    // stage's shuffled bytes, AQE keeps (and splits) its partitions
+    val sizes = Seq("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    val saved = sizes.map(k => k -> spark.conf.getOption(k))
+    sizes.foreach(spark.conf.set(_, "1k"))
+    try {
+      val root = Files.createTempDirectory("graft-ckpt-records-split").toString
+      val ckpt = Checkpoint(root, runId = "run-s")
+      val files = FixtureCorpus.corpus(spark, 20, 4)
+      Pipeline.runCheckpointed(spark, files, ckpt, Checkpoint.snapshotId("fixture", 20))
+      val parts = dataFiles(root, "records")
+      assert(parts.size > 1, parts)
+      assert(ckpt.lineage(spark, "records").count() == parts.size)
+      assertRecordsOf(root, files)
+      assertSortedWithin(root, "records", "docId")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    sortedWithin("triples", "pred", "subj", "obj", "docId")
-    sortedWithin("entities", "kind", "name")
   }
 
   test("a failing stage write leaves no cached entry behind") {

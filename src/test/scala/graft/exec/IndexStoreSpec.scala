@@ -20,23 +20,25 @@ class IndexStoreSpec extends SparkSpec {
     val other = spark.newSession()
     val (otherSnap, otherJobs) = countJobs(IndexStore.documents(other, dir))
     val (otherCut, otherCutJobs) = countJobs(IndexStore.incrementalCutoff(other, dir))
-    assert(otherJobs > 0 && otherCutJobs > 0)
+    assert(otherJobs.count > 0 && otherCutJobs.count > 0, s"$otherJobs\n$otherCutJobs")
 
     // this session's first fingerprint still runs its own jobs
     val (snap, jobs) = countJobs(IndexStore.documents(spark, dir))
     val (cut, cutJobs) = countJobs(IndexStore.incrementalCutoff(spark, dir))
-    assert(jobs > 0, "a session was served another session's documents fingerprint")
-    assert(cutJobs > 0, "a session was served another session's cutoff")
+    assert(jobs.count > 0, "a session was served another session's documents fingerprint")
+    assert(cutJobs.count > 0, "a session was served another session's cutoff")
     assert(snap == otherSnap && snap.rows == 40 && cut == otherCut && cut == 27)
 
     // a repeat in the same session runs none
-    assert(countJobs(IndexStore.documents(spark, dir)) == (snap, 0))
-    assert(countJobs(IndexStore.incrementalCutoff(spark, dir)) == (27L, 0))
+    val (snapAgain, repeatJobs) = countJobs(IndexStore.documents(spark, dir))
+    val (cutAgain, repeatCutJobs) = countJobs(IndexStore.incrementalCutoff(spark, dir))
+    assert(snapAgain == snap && repeatJobs.count == 0, repeatJobs)
+    assert(cutAgain == 27L && repeatCutJobs.count == 0, repeatCutJobs)
 
     // a batch lands as one more parquet file: the cutoff rescans
     write(40 until 60, "append")
     val (cut1, appendJobs) = countJobs(IndexStore.incrementalCutoff(spark, dir))
-    assert(appendJobs > 0 && cut1 == 45, s"cutoff $cut1 after the append ($appendJobs jobs)")
+    assert(appendJobs.count > 0 && cut1 == 45, s"cutoff $cut1 after the append ($appendJobs)")
     assert(IndexStore.documents(spark, dir).rows == 60)
   }
 }

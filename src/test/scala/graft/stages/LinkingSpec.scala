@@ -127,7 +127,7 @@ class LinkingSpec extends SparkSpec {
     // Pairwise LSH over the variants would be ~1.1M candidates; the star
     // fold emits 1499 edges and only ONE representative enters LSH
     val (edges, jobs) = countJobs(EntityLink.fuzzyEdges(hostileNames, tau = 0.55).collect())
-    assert(jobs <= 7, s"$jobs jobs to build and collect the fuzzy edges")
+    assert(jobs.count <= 7, s"build and collect the fuzzy edges: $jobs")
     // every variant links to the group minimum ("John Smith." — shortest
     // sorts first), so CC resolves the whole group through 1499 edges
     val star = edges.filter(r =>
@@ -223,8 +223,8 @@ class LinkingSpec extends SparkSpec {
       pinned == expected)
     // the union-find path is ONE bounded collect job over 3 partitions;
     // label propagation runs its shuffle rounds after that probe
-    assert(ufJobs == 1, s"union-find path ran $ufJobs jobs")
-    assert(lpJobs > 1 && pinnedJobs > 1, s"label propagation ran $lpJobs / $pinnedJobs jobs")
+    assert(ufJobs.count == 1, s"union-find path: $ufJobs")
+    assert(lpJobs.count > 1 && pinnedJobs.count > 1, s"label propagation: $lpJobs\n$pinnedJobs")
   }
 
   test("CC at the default cutoff fits a 512 MB driver on worst-case chain edges") {

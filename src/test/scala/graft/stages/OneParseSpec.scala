@@ -1,6 +1,7 @@
 package graft.stages
 
 import graft.SparkSpec
+import graft.exec.Checkpoint
 import graft.fixtures.FixtureCorpus
 import graft.model.SourceFile
 import org.apache.spark.sql.{Dataset, Encoders}
@@ -8,6 +9,8 @@ import org.apache.spark.sql.{Dataset, Encoders}
 /** One parse per page: [[Pipeline.run]] reads every page exactly once,
   * whichever of its outputs (triples, entity table, page bridge) are
   * consumed, and the bridge carries only pages whose full parse succeeded.
+  * [[Pipeline.runCheckpointed]] still reads each page twice (the ingest
+  * hash and the records parse), and a resume reads none.
   */
 class OneParseSpec extends SparkSpec {
 
@@ -31,6 +34,27 @@ class OneParseSpec extends SparkSpec {
     assert(triples.count() > 0 && ents.count() > 0)
     assert(reads.value == pages.size,
       s"${reads.value} page materializations for ${pages.size} pages")
+  }
+
+  test("Pipeline.runCheckpointed materializes each page twice, and a resume none") {
+    val pages = FixtureCorpus.corpusRows(40).toSeq
+    val reads = spark.sparkContext.longAccumulator("page-reads")
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-reads").toString
+    val snap = Checkpoint.snapshotId("counted", pages.size)
+    def build(runId: String) = {
+      val (t, e) = Pipeline.runCheckpointed(spark, counted(pages, reads),
+        Checkpoint(root, runId), snap)
+      (t.count(), e.count())
+    }
+    val built = build("run-1")
+    assert(built._1 > 0 && built._2 > 0)
+    // the ingest hash and the records parse; the records write reads the
+    // rebalance's shuffle output, not the pages a second time
+    assert(reads.value == 2 * pages.size,
+      s"${reads.value} page materializations for ${pages.size} pages")
+    reads.reset()
+    assert(build("run-2") == built)
+    assert(reads.value == 0, s"a resume over the committed root read ${reads.value} pages")
   }
 
   test("the bridge holds each parsed page's docId and no quarantined page") {
